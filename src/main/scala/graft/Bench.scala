@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}.
@@ -10,101 +9,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The AQE SMJ→SHJ local-map threshold (bytes), env-overridable — ONE
-    * definition shared by the Bench session and [[Verify]]'s (r18 ADVICE
-    * #4: the oracle-verification runs must execute the same physical
-    * plans the bench certifies, not rest on join-strategy equivalence).
-    */
-  def shjThresholdBytes: Long =
-    sys.env.get("SPARK_GRAFT_AQE_SHJ_THRESHOLD")
-      // same size-string grammar as the Spark conf itself ("64m", "1g",
-      // bare bytes) — the seam used to pass the value verbatim
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(64L * 1024 * 1024)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER/SPARK_GRAFT_JARS: same cluster-topology seam as
-    // graft.Verify (local-cluster smoke runs) — default is local[cpus]
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the optimizer rule and
-      // planner strategy twice (fresh JVM => the conf path is reliable)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // AQE ON by default — the production configuration, and since the
-      // round-7 artifact/split-table work also the faster one at bench
-      // scale (measured: runtime partition coalescing saves more on the
-      // 0.5–2s tail than per-stage re-planning costs; 212.6s static vs
-      // ~202s adaptive at sf0.1). Env seam kept for experiments;
-      // AqeParitySpec pins result equality between the two modes.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // experiment seam (flat-cost profiling): whole-stage codegen
-      // compiles a Janino class per query — a fixed per-query cost the
-      // 198-entry workload pays 198×. Default ON (the production
-      // configuration; measured faster in total — the compile pays for
-      // itself even at sf0.1).
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "true"))
-      // experiment seam: parallelismFirst=true (Spark default) caps AQE
-      // coalescing at defaultParallelism, so every tiny reduce stage
-      // still schedules up to 32 tasks; false respects the 64MB
-      // advisory size (the Spark docs' own recommendation for
-      // production).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      // AQE SMJ→SHJ rewrite (r18, guide §3.1): convert a sort-merge join
-      // to shuffled-hash at runtime when EVERY post-shuffle partition of
-      // the build side is under this many bytes — a decision made from
-      // OBSERVED stage sizes, not estimates, so the twilight-zone class
-      // (shingle/pair relations whose serialized rows run 15-20× their
-      // stats) cannot mis-trigger it: an actually-big partition simply
-      // stays SMJ. Scale-adaptive by construction — at 100 TB real
-      // partitions exceed 64 MB and plans keep the spill-safe SMJ; at
-      // small per-partition sizes the hash build skips the sort. 64 MB =
-      // the session broadcast threshold (same memory class as an
-      // accepted broadcast build). Spark default is 0 (off). Effect
-      // sized by PLAN DIFF, not totals (the measuring sitting was
-      // storm-labeled): the rewrite fires on q79/t24/t44 (one SMJ →
-      // SHJ each, plans/r18) — guarded verify joins are skipped by
-      // DynamicJoinSelection because they already carry a strategy
-      // hint, which is the intended interaction. Static
-      // preferSortMergeJoin stays at the Spark default TRUE: flipping it
-      // plans SHJ from size ESTIMATES — exactly what the twilight-zone
-      // relations defeat — and measured window-inconsistent (−16 s and
-      // +9 s in two sittings). Env seam for experiments.
-      //
-      // COUPLING (r18 ADVICE #3): Spark only applies the rewrite when
-      // adaptive.advisoryPartitionSizeInBytes <= this threshold
-      // (OptimizeShuffleWithLocalRead/ShuffledHashJoin rewrite guard).
-      // The Spark-default advisory is 64 MB — exactly equal to our
-      // default threshold — so lowering the threshold through the env
-      // seam would silently disable the rewrite if the advisory stayed
-      // put. Pin the advisory to min(threshold, 64 MB) from the SAME
-      // value so the two knobs cannot decouple: at the default this
-      // writes the Spark default back verbatim (no behavior change),
-      // and a lowered seam keeps advisory <= threshold, keeping the
-      // rewrite live. (Raising the advisory is the other way to break
-      // the guard; nothing here raises it.)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjThresholdBytes.toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        math.min(shjThresholdBytes, 64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    // generic experiment seam, same contract as Verify's
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // host-noise sentinel ([[HostSentinel]]), leg 1: before any Spark
     // work — the pre/post pair brackets the measured window
-    val sen0 = HostSentinel.measure(cpus.toInt)
+    val sen0 = HostSentinel.measure(cpus)
     System.err.println(
       f"[bench] host_sentinel pre: st=${sen0.stMs}%.1fms mt=${sen0.mtMs}%.1fms")
     // Untimed warmup: initializes codegen, parquet reader, shuffle and
@@ -175,7 +87,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       if (sentinelEvery > 0 && (qi + 1) % sentinelEvery == 0 &&
           qi + 1 < selected.size) {
-        val s = HostSentinel.measure(cpus.toInt)
+        val s = HostSentinel.measure(cpus)
         sentinelSamples += f"""{"after_idx":${qi + 1},"after":"$name",""" +
           f""""st_ms":${s.stMs}%.1f,"mt_ms":${s.mtMs}%.1f}"""
         System.err.println(f"[bench] host_sentinel @${qi + 1} ($name): " +
@@ -213,10 +125,10 @@ object Bench {
       }.mkString("{", ",", "}")
     // host-noise sentinel, leg 2: after the last query — drift DURING
     // the run is visible from the pair
-    val sen1 = HostSentinel.measure(cpus.toInt)
+    val sen1 = HostSentinel.measure(cpus)
     System.err.println(
       f"[bench] host_sentinel post: st=${sen1.stMs}%.1fms mt=${sen1.mtMs}%.1fms")
-    val sentinelJson = HostSentinel.json(sen0, sen1, cpus.toInt)
+    val sentinelJson = HostSentinel.json(sen0, sen1, cpus)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""build_sec":$buildTotal,"builds":$buildsJson,"iters":$itersJson,""" +
       s""""host_sentinel":$sentinelJson,""" +

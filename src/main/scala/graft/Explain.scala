@@ -1,32 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: print the formatted physical plan of the named
-  * queries (all queries when no args). Usage:
+  * queries (all queries when no args), under the Bench session policy —
+  * with AQE on this is the initial adaptive plan; [[ExplainFinal]]
+  * prints the final one. Usage:
   *   sbt "runMain graft.Explain q03_store_yoy e01_knn_brute"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the Bench/Verify sessions so plans shown here are the
-      // plans that actually run (incl. the TopKPerGroup rewrite)
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the optimizer rule and
-      // planner strategy twice (fresh JVM => the conf path is reliable)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE off by default HERE (unlike Bench, which runs the adaptive
-      // production config): explain is a plan-shape audit, and the
-      // static plan shows operator structure without QueryStage /
-      // AQEShuffleRead wrappers; set SPARK_GRAFT_AQE=true to audit the
-      // adaptive shapes instead
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = args.toSet
     SparkEntry.queries.toSeq.sortBy(_._1)

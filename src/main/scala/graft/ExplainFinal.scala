@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Post-execution plan-audit main: EXECUTE the named queries and print
   * the FINAL adaptive physical plan — what AQE actually ran, not the
@@ -27,21 +26,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainFinal {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production configuration under test: AQE ON, default
-      // broadcast threshold — the guard must hold with zero overrides
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val spark = GraftSession("graft-explain-final")
     spark.sparkContext.setLogLevel("WARN")
     val wanted = args.toSet
     // `_ppjoin_plan`: the t52 join tree DIRECTLY via the lazy

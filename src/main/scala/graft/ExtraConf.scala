@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 /** SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v Spark confs — the
   * generic experiment seam (event logs for the failure-injection run,
   * RocksDB state store for the streaming drills, etc.) so one-off runs
-  * never need a code edit. One parser shared by every main (Bench,
-  * Verify, StreamBench, StreamResume): blank segments from doubled or
-  * trailing semicolons are skipped, and a segment without '=' fails
-  * loudly instead of throwing an opaque MatchError at session build.
+  * never need a code edit. [[GraftSession]] applies it last, so it
+  * reaches every session and can override the policy. Blank segments
+  * from doubled or trailing semicolons are skipped, and a segment
+  * without '=' fails loudly instead of throwing an opaque MatchError at
+  * session build.
   */
 object ExtraConf {
   def apply(builder: SparkSession.Builder,

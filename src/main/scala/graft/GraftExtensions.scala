@@ -11,11 +11,9 @@ import graft.functions.{DotProduct, Md5Prefix60}
   * works next to the Column API, and the whole-operator extension
   * ([[graft.plans.TopKPerGroup]]: optimizer rule + planner strategy +
   * physical heap top-k replacing the row_number window pattern).
-  * Enable with
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // programmatic, or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  * [[GraftSession]] enables it with the conf
+  * `spark.sql.extensions=graft.GraftExtensions`, which any other session
+  * (spark-submit, a notebook) can set the same way.
   *
   * This is the standard extension seam — no Spark fork, works on any
   * cluster that can see the graft jar.

@@ -29,19 +29,10 @@ object StreamResume {
   private val epoch = 1700000000L
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_STATE_STORE=rocksdb: the resume drill must also pass
     // on the disk-backed store — cross-process state reload is exactly
     // where the providers differ (snapshot+changelog vs delta files)
-    ExtraConf.stateStore(builder)
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
+    val spark = GraftSession("graft-stream-resume", ExtraConf.stateStore(_))
     // log the ACTIVE store (final providerClass conf), not the requested
     // label — an EXTRA_CONF providerClass override must not desync them
     System.err.println(s"[resume] state store: " +

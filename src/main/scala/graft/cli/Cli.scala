@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.etl.{Kpi, VerifyOps}
 import graft.sources.{CsvGen, FanOut, HeaderScan}
 
@@ -48,22 +49,6 @@ private[cli] object Args {
   def srcBase(fileName: String): String =
     fileName.replaceAll("(?i)\\.csv$", "")
 
-  /** Local session for CLI runs; under spark-submit the provided master
-    * wins (builder config is a no-op when a session already exists).
-    */
-  def session(app: String): SparkSession = {
-    val b = SparkSession.builder().appName(app)
-      .config("spark.sql.session.timeZone", "UTC")
-      // single registration mechanism (the conf — spark-submit parity);
-      // adding .withExtensions too would inject the rule/strategy twice
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    if (!sys.props.contains("spark.master"))
-      b.master("local[*]").config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-    b.getOrCreate()
-  }
-
   /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
     * aggregate_by_store.py:123 etc.): header row taken as-is,
     * `inferSchema` off so every column is StringType.
@@ -89,7 +74,7 @@ object FanOutMain {
     val enc = a.getOrElse("encoding", "UTF-8")
     val outEnc = a.getOrElse("output-encoding", "UTF-8")
     val key = a.getOrElse("key", HeaderScan.defaultKeyCol)
-    val spark = Args.session("graft-fanout")
+    val spark = GraftSession("graft-fanout")
     val frames = HeaderScan.readDirFrames(spark, in, key, enc)
     val names = frames.map { case (info, _) => Args.srcBase(new Path(info.path).getName) }
     // two inputs collapsing to one src name would silently overwrite
@@ -133,7 +118,7 @@ object VerifyFanoutMain {
       case Some(v) => throw new IllegalArgumentException(
         s"--strict expects true or false, got '$v'")
     }
-    val spark = Args.session("graft-verify-fanout")
+    val spark = GraftSession("graft-verify-fanout")
     import spark.implicits._
 
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -244,7 +229,7 @@ object AggregateMain {
       "input-file", "store-col", "month-col", "target-col", "months"))
     val inDir = a.getOrElse("input-dir", "./input")
     val outDir = a.getOrElse("output-dir", "./output")
-    val spark = Args.session("graft-aggregate")
+    val spark = GraftSession("graft-aggregate")
     // the six dedicated configs read from {input-dir}/aggregate; the
     // generic path reads its --input-file relative to {input-dir} root
     // unless the config says otherwise (aggregate_by_store.py:733)
@@ -298,7 +283,7 @@ object PresenceMain {
     val a = Args.parse(args, Set("store", "input-dir"))
     val store = Args.required(a, "store")
     val aggDir = s"${a.getOrElse("input-dir", "./input")}/aggregate"
-    val spark = Args.session("graft-presence")
+    val spark = GraftSession("graft-presence")
     val datasets = files.flatMap { case (desc, f) =>
       val p = new Path(s"$aggDir/$f")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

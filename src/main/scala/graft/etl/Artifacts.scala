@@ -2,7 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-(dataset, process) parquet artifacts: build once under a JVM
+/** Per-(dataset, process) parquet artifacts under [[graft.WorkDir]]:
+  * build once under a JVM
   * lock, every later consumer reads the table back from storage. This is
   * the checkpoint-the-expensive-stage contract the pipelines use for
   * anything consumed by more than one registry query (LSH pair tables,
@@ -94,15 +95,11 @@ object Artifacts {
     }
   }
 
-  /** Cache key = collision-free digest of the dataset path (an Int
-    * hashCode can collide across paths within one process) + pid
-    * (cross-process isolation) + tag + the optional [[withSalt]] salt.
+  /** Cache key = [[graft.WorkDir]] path of tag + the optional
+    * [[withSalt]] salt over the dataset.
     */
   def shared(s: SparkSession, d: String, tag: String)(
       build: => DataFrame): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
     val salt = Option(saltLocal.get())
       .filter(_.nonEmpty).map("_" + _).getOrElse("")
     // a salted build landing on a thread that did NOT set (or inherit)
@@ -117,8 +114,7 @@ object Artifacts {
           s"${Option(saltThread.get()).map(_.getName).getOrElse("?")} — " +
           "inherited correctly, but pool threads created before the salt " +
           "would not inherit it")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      s"${digest}_${ProcessHandle.current().pid()}$salt"
+    val path = graft.WorkDir.path(tag + salt, d)
     lock.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
         val t0 = System.nanoTime()
@@ -137,14 +133,6 @@ object Artifacts {
         buildStack = buildStack match {
           case h :: t => (h + total) :: t
           case Nil => Nil
-        }
-        // per-process artifact: clean up on JVM exit (same hygiene as
-        // the t34 index — repeated runs must not accumulate in tmpdir)
-        sys.addShutdownHook {
-          def deleteRec(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-          }
-          deleteRec(new java.io.File(path)); ()
         }
       }
     }

@@ -146,6 +146,7 @@ object Bpe {
   def trainLocal(hist: Seq[(String, Long)],
                  rounds: Int): Seq[(Int, String, String, Long)] = {
     require(rounds >= 1, s"BPE training needs at least 1 round, got $rounds")
+    requirePositiveCounts(hist)
     // duplicate words contribute additively, exactly as train's sum
     val cnt: Map[String, Long] = hist.groupMapReduce(_._1)(_._2)(_ + _)
     // INCREMENTAL pair maintenance (r19, the HF-tokenizers/SentencePiece
@@ -277,7 +278,20 @@ object Bpe {
         "distributed instead (Bpe.trainToVocab / Bpe.train keep the " +
         "histogram on the cluster), or pre-cap the vocabulary " +
         "(frequency floor / top-k) before collecting.")
-    rows.map(r => (r.getString(0), r.getLong(1))).toSeq
+    val local = rows.map(r => (r.getString(0), r.getLong(1))).toSeq
+    requirePositiveCounts(local)
+    local
+  }
+
+  /** The incremental pair maintenance in [[trainLocal]] drops a pair
+    * when its count reaches zero, which is only sound while every word
+    * count is positive: a zero or negative count would leave live
+    * adjacencies behind a removed pair and fail a later update.
+    */
+  private def requirePositiveCounts(hist: Seq[(String, Long)]): Unit = {
+    val bad = hist.filter(_._2 <= 0)
+    require(bad.isEmpty, s"BPE histogram counts must be > 0, got " +
+      bad.take(3).map { case (w, c) => s"'$w' -> $c" }.mkString(", "))
   }
 
   /** Unsigned UTF-8 byte comparison — Spark's UTF8String binary order

@@ -58,15 +58,13 @@ object CheckpointPolicy {
     * mains (results must be hash-identical across policies; only the
     * barrier's landing place changes). The checkpoint dir comes from
     * `SPARK_GRAFT_CHECKPOINT_DIR` (the cluster deployment would point
-    * this at HDFS / object storage) or defaults to a per-process
-    * tmpdir that is removed on JVM exit — reliable checkpoints are
+    * this at HDFS / object storage) or defaults to a [[graft.WorkDir]]
+    * path, removed on JVM exit — reliable checkpoints are
     * deliberately NOT reference-tracked-cleaned mid-run (that
     * replayability is their purpose).
     */
   def fromEnv(spark: org.apache.spark.sql.SparkSession): CheckpointPolicy =
     select(sys.env.get("SPARK_GRAFT_CHECKPOINT"), spark)
-
-  private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private[graft] def select(flag: Option[String],
                             spark: org.apache.spark.sql.SparkSession): CheckpointPolicy =
@@ -74,9 +72,7 @@ object CheckpointPolicy {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty) {
         val dir = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        val path = dir.getOrElse(
-          s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_" +
-            s"${ProcessHandle.current().pid()}")
+        val path = dir.getOrElse(graft.WorkDir.path("ckpt", sc.applicationId))
         // The per-process tmpdir default is a LOCAL file: path. On a
         // multi-node master that gives reliable checkpoints no actual
         // replayability (an executor restarting on another node cannot
@@ -93,15 +89,6 @@ object CheckpointPolicy {
               "Reliable checkpoints will not survive executor loss; " +
               "point SPARK_GRAFT_CHECKPOINT_DIR at shared storage.")
         sc.setCheckpointDir(path)
-        // per-process default dir: clean it up on exit (an explicit
-        // SPARK_GRAFT_CHECKPOINT_DIR is the operator's to manage)
-        if (dir.isEmpty && hookInstalled.compareAndSet(false, true))
-          sys.addShutdownHook {
-            def deleteRec(f: java.io.File): Unit = {
-              Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-            }
-            deleteRec(new java.io.File(path)); ()
-          }
       }
       Reliable
     } else Local

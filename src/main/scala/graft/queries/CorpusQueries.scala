@@ -820,18 +820,11 @@ object CorpusQueries {
   private val t42Lock = new Object
 
   def t42StatePath(s: SparkSession, d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_datacard_" +
-      s"${digest}_${ProcessHandle.current().pid()}"
+    val path = graft.WorkDir.path("datacard", d)
     val marker = new java.io.File(path + "_READY")
     t42Lock.synchronized {
       if (!marker.exists()) {
-        def deleteRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-        }
-        deleteRec(new java.io.File(path))
+        graft.WorkDir.delete(path)
         val corpus = datacardDocs(s, d)
           .filter(pmod(col("doc_id"), lit(10)) =!= 0)
         def writeState(ingest: DataFrame, mode: String): Unit = {
@@ -847,12 +840,6 @@ object CorpusQueries {
         writeState(corpus.filter(pmod(col("doc_id"), lit(2)) === 1), "overwrite")
         writeState(corpus.filter(pmod(col("doc_id"), lit(2)) === 0), "append")
         marker.createNewFile()
-        sys.addShutdownHook {
-          def deleteRec(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-          }
-          deleteRec(new java.io.File(path)); marker.delete(); ()
-        }
       }
     }
     path

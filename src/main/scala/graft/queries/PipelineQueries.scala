@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.WorkDir
 import graft.etl.{SchemaResolver, Tables, VerifyOps}
 import graft.sources.{FanOut, HeaderScan}
 
@@ -15,34 +16,10 @@ import graft.sources.{FanOut, HeaderScan}
   * oracles over the original tables (round-trip integrity == parity with
   * the source of truth).
   *
-  * Temp layouts live under java.io.tmpdir and are rebuilt (overwrite) on
-  * each run, so Verify and Bench are self-contained.
+  * Temp layouts live under [[graft.WorkDir]] and are rebuilt (overwrite)
+  * on each run, so Verify and Bench are self-contained.
   */
 object PipelineQueries {
-
-  /** Temp layout path scoped by dataset AND process: a stale `{key}`
-    * dir from a previous run over a different dataset would otherwise
-    * survive into the read glob, and concurrent Bench/Verify processes
-    * would clobber each other's staging dirs. MD5 of the dataset path
-    * (not Int hashCode — collidable) keys the dataset dimension.
-    */
-  private def tmp(name: String, sfDir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
-      s"${digest}_${ProcessHandle.current().pid()}"
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    val f = new java.io.File(path)
-    if (f.exists()) {
-      val stream = java.nio.file.Files.walk(f.toPath)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => p.toFile.delete())
-      finally stream.close()
-    }
-  }
 
   // ---- q15: fan-out write → exact {key}/{src}.csv layout → read back --
 
@@ -59,11 +36,11 @@ object PipelineQueries {
     * shape as the shared LSH pair table).
     */
   private def fanOutEvents(s: SparkSession, d: String): DataFrame = {
-    val out = tmp("fanout_events", d)
+    val out = WorkDir.path("fanout_events", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     fanOutLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"))
         FanOut.write(ev, "event_type", out, "events")
@@ -94,8 +71,8 @@ object PipelineQueries {
     * column (must be warn-skipped).
     */
   private def fabricateMessyCsvs(s: SparkSession, d: String): String = {
-    val dir = tmp("headerscan_in", d)
-    deleteRecursively(dir)
+    val dir = WorkDir.path("headerscan_in", d)
+    WorkDir.delete(dir)
     val rows = Tables.nation(s, d)
       .select(col("n_nationkey").cast("long"), col("n_name"),
         col("n_regionkey").cast("long"))
@@ -208,11 +185,11 @@ object PipelineQueries {
   private val partLock = new Object
 
   private def partitionedOrders(s: SparkSession, d: String): String = {
-    val out = tmp("orders_bypriority", d)
+    val out = WorkDir.path("orders_bypriority", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     partLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         Tables.orders(s, d)
           // one shuffle keyed by the partition column before the dynamic
           // write: each hive dir gets ONE file (the small-files rule —
@@ -266,11 +243,11 @@ object PipelineQueries {
   private val evoLock = new Object
 
   private def evolvedDocs(s: SparkSession, d: String): String = {
-    val out = tmp("docs_evolved", d)
+    val out = WorkDir.path("docs_evolved", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     evoLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         val docs = Tables.documents(s, d)
         // v1 vintage: no lang column yet
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -330,11 +307,11 @@ object PipelineQueries {
   private val compactTarget = 1000L
 
   private def bucketedOrders(s: SparkSession, d: String): String = {
-    val out = tmp("orders_buckets", d)
+    val out = WorkDir.path("orders_buckets", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     partLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         Tables.orders(s, d)
           .withColumn("ingest", pmod(col("o_orderkey"), lit(8)))
           // same small-files rule as q43's layout: shuffle once on the
@@ -397,18 +374,17 @@ object PipelineQueries {
   private val nJoinBuckets = 8
 
   /** Write orders+lineitem as bucketed tables ONCE per (dataset,
-    * process); table names carry the dataset digest + pid so concurrent
-    * Verify/Bench JVMs and different sf dirs never collide in the
-    * session catalog or on disk.
+    * process); table names carry the dataset digest so different sf dirs
+    * never collide in the session catalog.
     */
   private def bucketedFactTables(s: SparkSession, d: String): (String, String) = {
-    val tag = tmp("", d).replaceAll(".*graft__", "") // md5_pid suffix
+    val tag = WorkDir.digest(d)
     val (tOrders, tLine) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
     bktJoinLock.synchronized {
       if (!s.catalog.tableExists(tOrders)) {
-        val pOrders = tmp("bkt_orders", d)
-        val pLine = tmp("bkt_lineitem", d)
-        deleteRecursively(pOrders); deleteRecursively(pLine)
+        val pOrders = WorkDir.path("bkt_orders", d)
+        val pLine = WorkDir.path("bkt_lineitem", d)
+        WorkDir.delete(pOrders); WorkDir.delete(pLine)
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
           .write.format("parquet")
@@ -542,11 +518,11 @@ object PipelineQueries {
   private val jsonlLock = new Object
 
   private def jsonlEvents(s: SparkSession, d: String): DataFrame = {
-    val out = tmp("jsonl_events", d)
+    val out = WorkDir.path("jsonl_events", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     jsonlLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         Tables.events(s, d)
           .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
             col("user_id"), col("event_type"), col("value"), col("props"))
@@ -594,8 +570,7 @@ object PipelineQueries {
   //
   // `bucketBy` metadata lives in the session catalog, so the tables are
   // registered once per (dataset, process) as EXTERNAL parquet tables
-  // (data at a tmp path, dropped with the session / cleaned by pid
-  // scoping). The oracle is the same join over the raw tables — layout
+  // (data under graft.WorkDir, deleted at JVM exit). The oracle is the same join over the raw tables — layout
   // round-trip ≡ source of truth, the q43 rule.
 
   private val bucketLock = new Object
@@ -604,9 +579,7 @@ object PipelineQueries {
     * tables and returns their catalog names.
     */
   private def bucketedPair(s: SparkSession, d: String): (String, String) = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
+    val digest = WorkDir.digest(d)
     val ot = s"graft_b_orders_$digest"
     val ct = s"graft_b_customer_$digest"
     bucketLock.synchronized {
@@ -614,14 +587,14 @@ object PipelineQueries {
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .option("path", tmp("bucket_orders", d))
+          .option("path", WorkDir.path("bucket_orders", d))
           .mode("overwrite").format("parquet").saveAsTable(ot)
       }
       if (!s.catalog.tableExists(ct)) {
         Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"))
           .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .option("path", tmp("bucket_customer", d))
+          .option("path", WorkDir.path("bucket_customer", d))
           .mode("overwrite").format("parquet").saveAsTable(ct)
       }
     }
@@ -852,11 +825,11 @@ object PipelineQueries {
   private val orcLock = new Object
 
   private def orcLineitem(s: SparkSession, d: String): String = {
-    val out = tmp("lineitem_orc", d)
+    val out = WorkDir.path("lineitem_orc", d)
     val marker = new java.io.File(out, "_LAYOUT_DONE")
     orcLock.synchronized {
       if (!marker.exists()) {
-        deleteRecursively(out)
+        WorkDir.delete(out)
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
             col("l_extendedprice"), col("l_shipdate"))
@@ -989,8 +962,8 @@ object PipelineQueries {
 
   /** Date-partitioned nation tree with hidden poison and a decoy. */
   private def fabricateNestedTree(s: SparkSession, d: String): String = {
-    val dir = tmp("nested_in", d)
-    deleteRecursively(dir)
+    val dir = WorkDir.path("nested_in", d)
+    WorkDir.delete(dir)
     val rows = Tables.nation(s, d)
       .select(col("n_nationkey").cast("long"), col("n_name"),
         col("n_regionkey").cast("long"))

@@ -1431,18 +1431,11 @@ object SimilarityQueries {
   private val e19Lock = new Object
 
   def e19IndexPath(s: SparkSession, d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfindex_" +
-      s"${digest}_${ProcessHandle.current().pid()}"
+    val path = graft.WorkDir.path("ivfindex", d)
     val marker = new java.io.File(path + "_READY")
     e19Lock.synchronized {
       if (!marker.exists()) {
-        def deleteRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-        }
-        deleteRec(new java.io.File(path))
+        graft.WorkDir.delete(path)
         val emb = normalizedEmb(s, d)
         val cents = emb.filter(col("vec_id") % 10 =!= 0)
           .filter(col("vec_id") < nCells)
@@ -1464,12 +1457,6 @@ object SimilarityQueries {
         assign(emb.filter(col("vec_id") % 10 === 0))
           .write.mode("append").parquet(path + "/members")
         marker.createNewFile()
-        sys.addShutdownHook {
-          def deleteRec(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-          }
-          deleteRec(new java.io.File(path)); marker.delete(); ()
-        }
       }
     }
     path

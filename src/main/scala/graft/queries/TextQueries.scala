@@ -1491,18 +1491,11 @@ object TextQueries {
     * shared LSH pair table): build + append on first use, reuse after.
     */
   def t34IndexPath(s: SparkSession, d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lshindex_" +
-      s"${digest}_${ProcessHandle.current().pid()}"
+    val path = graft.WorkDir.path("lshindex", d)
     val marker = new java.io.File(path + "_READY")
     t34Lock.synchronized {
       if (!marker.exists()) {
-        def deleteRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-        }
-        deleteRec(new java.io.File(path))
+        graft.WorkDir.delete(path)
         val docs = Tables.spread(Tables.documents(s, d))
           .select(col("doc_id"), col("text"))
         def bandsOf(ingest: DataFrame) = Dedup.bandTable(
@@ -1514,14 +1507,6 @@ object TextQueries {
         bandsOf(docs.filter(pmod(col("doc_id"), lit(2)) === 1))
           .write.mode("append").parquet(path)
         marker.createNewFile()
-        // per-process artifact: clean it up on JVM exit so repeated
-        // bench/verify runs don't accumulate band tables in tmpdir
-        sys.addShutdownHook {
-          def deleteRec(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete()
-          }
-          deleteRec(new java.io.File(path)); marker.delete(); ()
-        }
       }
     }
     path

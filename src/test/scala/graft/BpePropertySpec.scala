@@ -335,4 +335,20 @@ class BpePropertySpec extends SparkSpec {
     assert(e.getMessage.contains("trainToVocab"))
     assert(e.getMessage.contains("NOT driver-sized"))
   }
+
+  test("trainLocal and collectHistogram reject non-positive counts") {
+    import spark.implicits._
+    // a zero count would otherwise reach trainLocal's incremental pair
+    // maintenance, which drops a pair at count 0 while it is still live
+    val zero = Seq(("abab", 3L), ("ab", 0L), ("abb", 2L))
+    val e = intercept[IllegalArgumentException](Bpe.trainLocal(zero, rounds = 3))
+    assert(e.getMessage.contains("'ab' -> 0"))
+    intercept[IllegalArgumentException](
+      Bpe.trainLocal(Seq(("aa", 2L), ("ba", -1L)), rounds = 1))
+    intercept[IllegalArgumentException](
+      Bpe.trainLocalToVocab(zero, vocabSize = 4))
+    val c = intercept[IllegalArgumentException](
+      Bpe.collectHistogram(zero.toDF("w", "cnt")))
+    assert(c.getMessage.contains("must be > 0"))
+  }
 }

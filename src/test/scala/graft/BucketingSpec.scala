@@ -24,8 +24,7 @@ class BucketingSpec extends SparkSpec {
       .mode("overwrite").saveAsTable("bkt_dims")
 
     // disable broadcast so the join would otherwise need a full shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("bkt_facts")
         .join(spark.table("bkt_dims"), Seq("k"))
         .groupBy("k").agg(sum("v").as("sv"), sum("w").as("sw"))
@@ -41,7 +40,6 @@ class BucketingSpec extends SparkSpec {
         8507 + 9007 + 9507))
       assert(r.getLong(2) == 70L * 20)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS bkt_facts")
       spark.sql("DROP TABLE IF EXISTS bkt_dims")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.etl.Skew
@@ -12,44 +11,15 @@ class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("GraftExtensions registers graft_dot / graft_md5_prefix60 in SQL") {
-    // a separate session with the extensions installed (the shared test
-    // session is extension-free). Two traps when a SparkContext already
-    // exists: (1) getOrCreate returns any active/default session AS IS —
-    // so clear both; (2) the `spark.sql.extensions` CONF is read from
-    // the (extension-free) context conf at creation, so the extensions
-    // must also ride the builder's withExtensions hook, which is applied
-    // to the created session regardless. A concurrent suite can still
-    // slip a default session in between the clear and the create (suites
-    // share the JVM and run in parallel), so retry the narrow race.
-    def freshWithExtensions(attempts: Int): SparkSession = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val c = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-ext-test")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .withExtensions(new GraftExtensions().apply(_))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      if (c.catalog.functionExists("graft_dot")) c
-      else if (attempts <= 1)
-        fail("could not obtain a session with GraftExtensions applied")
-      else freshWithExtensions(attempts - 1)
-    }
-    val s = freshWithExtensions(5)
-    try {
-      val r = s.sql(
-        "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-          "graft_md5_prefix60('abc#0') AS h").collect()(0)
-      assert(r.getDouble(0) == 11.0)
-      val expected = Seq("x").toDF("_")
-        .select(graft.functions.Portable.hash60(lit("abc"), 0)).collect()(0).getLong(0)
-      assert(r.getLong(1) == expected)
-    } finally {
-      // keep the shared session for the other suites
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
+    // the shared session is built by GraftSession, which registers the
+    // extensions through spark.sql.extensions
+    val r = spark.sql(
+      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
+        "graft_md5_prefix60('abc#0') AS h").collect()(0)
+    assert(r.getDouble(0) == 11.0)
+    val expected = Seq("x").toDF("_")
+      .select(graft.functions.Portable.hash60(lit("abc"), 0)).collect()(0).getLong(0)
+    assert(r.getLong(1) == expected)
   }
 
   test("saltedJoin is row-identical to the plain join on skewed data") {

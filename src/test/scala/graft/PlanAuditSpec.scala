@@ -157,15 +157,6 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
           .mkString("[", ",", "]")
     }
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // adversarial conf for the broadcast-guard pins: a threshold high
   // enough that EVERY side looks broadcastable to the planner (the
   // twilight zone made maximal), AQE off so the initial physical plan

@@ -16,17 +16,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sys.env.get("SPARK_GRAFT_TESTDATA")
       .orElse(sys.props.get("graft.testdata"))
       .getOrElse("/root/testdata") + "/sf0.001"
+
+  /** Run `body` under session confs `pairs`, then restore each key's
+    * previous value — never `unset`, which would drop a policy value
+    * (e.g. the 64 MB broadcast threshold) for every later suite.
+    */
+  protected def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
   // One session for the whole forked test JVM — Spark startup is ~5s.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // Built by the production policy, so the suite runs the extensions
+  // and join settings the mains run.
+  lazy val session: SparkSession = GraftSession("graft-test", _.config(
+    "spark.sql.warehouse.dir",
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

@@ -188,7 +188,9 @@ class TextDedupSpec extends SparkSpec {
     // BEFORE running the intersection kernel — this pin proves the
     // prefilter never changes the declared output. Sets of varied
     // sizes (3..20 over a 6-value universe) force heavy length
-    // mismatch, so the prefilter actually fires; both element types.
+    // mismatch, so the prefilter actually fires. String elements only
+    // (the hash kernel); the packed-long kernel is covered by the
+    // packChar3 parity test above.
     val rnd = new scala.util.Random(99)
     val rows = (1L to 40L).map { id =>
       val n = 3 + rnd.nextInt(18)

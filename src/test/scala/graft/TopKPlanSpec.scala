@@ -13,33 +13,14 @@ import org.apache.spark.sql.functions._
   */
 class TopKPlanSpec extends SparkSpec {
 
-  /** A session with GraftExtensions applied (the ExtensionsSpec recipe —
-    * the shared suite session is extension-free).
+  /** The reference: the shared session's SQL conf with the rewrite
+    * rule excluded, so the same query plans the plain WindowExec.
     */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    def fresh(attempts: Int): SparkSession = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val c = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-topk-test")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .withExtensions(new GraftExtensions().apply(_))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      if (c.sessionState.planner.strategies.exists(
-          _ == graft.plans.TopKPerGroupStrategy)) c
-      else if (attempts <= 1) fail("no session with GraftExtensions")
-      else fresh(attempts - 1)
-    }
-    val s = fresh(5)
-    try f(s)
-    finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
+  private lazy val windowOnly: SparkSession = {
+    val w = spark.newSession()
+    w.conf.set("spark.sql.optimizer.excludedRules",
+      classOf[graft.plans.RewriteWindowTopK].getName)
+    w
   }
 
   /** Materialized physical plan as text (the extension must work WITH
@@ -71,117 +52,108 @@ class TopKPlanSpec extends SparkSpec {
   }
 
   test("rewritten plan: no WindowExec, partial+final heap, rank preserved") {
-    withExtSession { s =>
-      val q = topk(fixture(s), 5)
-      val plan = finalPlan(q)
-      assert(topkNodes(plan) == 2, s"expected partial+final TopKPerGroupExec:\n$plan")
-      // exactly one final stage (the one that publishes the rank attr)
-      assert("rnk#\\d+: int".r.findAllIn(plan).length == 1, plan)
-      assert(!plan.contains("Window"), s"WindowExec must be gone:\n$plan")
-      // equivalence against the un-rewritten window on the shared session
-      val got = q.collect().map(r => (r.getInt(0), r.getLong(1),
-        r.getString(2), r.getInt(3))).sortBy(identity).toSeq
-      val exp = topk(fixture(spark), 5).collect().map(r => (r.getInt(0),
-        r.getLong(1), r.getString(2), r.getInt(3))).sortBy(identity).toSeq
-      assert(got == exp)
-      assert(got.size == 35 && got.count(_._4 == 1) == 7)
-    }
+    val q = topk(fixture(spark), 5)
+    val plan = finalPlan(q)
+    assert(topkNodes(plan) == 2, s"expected partial+final TopKPerGroupExec:\n$plan")
+    // exactly one final stage (the one that publishes the rank attr)
+    assert("rnk#\\d+: int".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("Window"), s"WindowExec must be gone:\n$plan")
+    // equivalence against the un-rewritten window
+    val got = q.collect().map(r => (r.getInt(0), r.getLong(1),
+      r.getString(2), r.getInt(3))).sortBy(identity).toSeq
+    val ref = topk(fixture(windowOnly), 5)
+    assert(topkNodes(finalPlan(ref)) == 0, "the reference must plan a WindowExec")
+    val exp = ref.collect().map(r => (r.getInt(0),
+      r.getLong(1), r.getString(2), r.getInt(3))).sortBy(identity).toSeq
+    assert(got == exp)
+    assert(got.size == 35 && got.count(_._4 == 1) == 7)
   }
 
   test("k beyond group size, k = 1, and global (no partition) top-k") {
-    withExtSession { s =>
-      assert(topk(fixture(s), 400).count() == 1000) // groups are ~143 rows
-      assert(topk(fixture(s), 1).count() == 7)
-      val w = Window.orderBy(col("v").desc, col("payload"))
-      val g = fixture(s).withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-      assert(topkNodes(finalPlan(g)) == 2)
-      val exp = fixture(spark).orderBy(col("v").desc, col("payload"))
-        .limit(3).collect().map(_.getLong(1)).toSeq
-      assert(g.orderBy(col("rnk")).collect().map(_.getLong(1)).toSeq == exp)
-    }
+    assert(topk(fixture(spark), 400).count() == 1000) // groups are ~143 rows
+    assert(topk(fixture(spark), 1).count() == 7)
+    val w = Window.orderBy(col("v").desc, col("payload"))
+    val g = fixture(spark).withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 3)
+    assert(topkNodes(finalPlan(g)) == 2)
+    val exp = fixture(windowOnly).orderBy(col("v").desc, col("payload"))
+      .limit(3).collect().map(_.getLong(1)).toSeq
+    assert(g.orderBy(col("rnk")).collect().map(_.getLong(1)).toSeq == exp)
   }
 
   test("residual conjuncts survive; unsupported shapes stay windows") {
-    withExtSession { s =>
-      val q = topk(fixture(s), 5).filter(col("g") =!= 3)
-      // rank bound + residual: still rewritten, residual applied
-      assert(topkNodes(finalPlan(q)) == 2)
-      assert(q.collect().forall(_.getInt(0) != 3) && q.count() == 30)
-      // rank published with NO upper bound → no rewrite
-      val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
-      val unbounded = fixture(s).withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") > 2)
-      assert(topkNodes(finalPlan(unbounded)) == 0)
-      assert(unbounded.count() == 1000 - 14)
-      // rank() (not row_number) → no rewrite
-      val rk = fixture(s).withColumn("rnk", rank().over(w))
-        .filter(col("rnk") <= 5)
-      assert(topkNodes(finalPlan(rk)) == 0)
-      // floating-point partition key → no rewrite (byte-equality groups
-      // would split 0.0 / -0.0 where WindowExec normalizes them); the
-      // window path must also produce ONE group for the two zeros
-      import s.implicits._
-      val fl = Seq((0.0, 1L), (-0.0, 2L), (-0.0, 3L), (1.5, 4L))
-        .toDF("gd", "v")
-      val wf = Window.partitionBy(col("gd")).orderBy(col("v"))
-      val flq = fl.withColumn("rnk", row_number().over(wf))
-        .filter(col("rnk") <= 2)
-      assert(topkNodes(finalPlan(flq)) == 0,
-        "float partition key must refuse the rewrite")
-      assert(flq.count() == 3) // {0.0,-0.0,-0.0} one group → 2 rows + 1.5's 1
-    }
+    val q = topk(fixture(spark), 5).filter(col("g") =!= 3)
+    // rank bound + residual: still rewritten, residual applied
+    assert(topkNodes(finalPlan(q)) == 2)
+    assert(q.collect().forall(_.getInt(0) != 3) && q.count() == 30)
+    // rank published with NO upper bound → no rewrite
+    val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
+    val unbounded = fixture(spark).withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") > 2)
+    assert(topkNodes(finalPlan(unbounded)) == 0)
+    assert(unbounded.count() == 1000 - 14)
+    // rank() (not row_number) → no rewrite
+    val rk = fixture(spark).withColumn("rnk", rank().over(w))
+      .filter(col("rnk") <= 5)
+    assert(topkNodes(finalPlan(rk)) == 0)
+    // floating-point partition key → no rewrite (byte-equality groups
+    // would split 0.0 / -0.0 where WindowExec normalizes them); the
+    // window path must also produce ONE group for the two zeros
+    import spark.implicits._
+    val fl = Seq((0.0, 1L), (-0.0, 2L), (-0.0, 3L), (1.5, 4L))
+      .toDF("gd", "v")
+    val wf = Window.partitionBy(col("gd")).orderBy(col("v"))
+    val flq = fl.withColumn("rnk", row_number().over(wf))
+      .filter(col("rnk") <= 2)
+    assert(topkNodes(finalPlan(flq)) == 0,
+      "float partition key must refuse the rewrite")
+    assert(flq.count() == 3) // {0.0,-0.0,-0.0} one group → 2 rows + 1.5's 1
   }
 
   test("byte-budget overflow degrades to the spilling sort path, same rows") {
-    withExtSession { s =>
-      import s.implicits._
-      // group cardinality ≫ the (deliberately tiny) task budget: 997
-      // groups across 4 partitions, unique v per row → total order
-      def wide(sess: SparkSession): DataFrame = {
-        import sess.implicits._
-        (0 until 5000).map { i =>
-          (i % 997, (i * 2654435761L) % 100003, s"p$i")
-        }.toDF("g", "v", "payload")
-      }
-      def run(df: DataFrame): Seq[(Int, Long, String, Int)] = {
-        val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
-        df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3)
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2),
-            r.getInt(3))).sortBy(identity).toSeq
-      }
-      val saved = graft.plans.TopKPerGroup.fallbackBytes
-      val viaFallback =
-        try {
-          graft.plans.TopKPerGroup.fallbackBytes = 1L // overflow on row 1
-          // the rewrite still fires (fallback is a runtime degrade, not
-          // a plan change)
-          val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
-          val q = wide(s).withColumn("rnk", row_number().over(w))
-            .filter(col("rnk") <= 3)
-          assert(topkNodes(finalPlan(q)) == 2)
-          run(wide(s))
-        } finally graft.plans.TopKPerGroup.fallbackBytes = saved
-      val viaHeap = run(wide(s))
-      val viaWindow = run(wide(spark)) // extension-free session: WindowExec
-      assert(viaFallback == viaHeap, "fallback path diverged from heap path")
-      assert(viaFallback == viaWindow, "fallback path diverged from WindowExec")
-      assert(viaFallback.size == 997 * 3 &&
-        viaFallback.count(_._4 == 1) == 997)
+    // group cardinality ≫ the (deliberately tiny) task budget: 997
+    // groups across 4 partitions, unique v per row → total order
+    def wide(sess: SparkSession): DataFrame = {
+      import sess.implicits._
+      (0 until 5000).map { i =>
+        (i % 997, (i * 2654435761L) % 100003, s"p$i")
+      }.toDF("g", "v", "payload")
     }
+    def run(df: DataFrame): Seq[(Int, Long, String, Int)] = {
+      val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
+      df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2),
+          r.getInt(3))).sortBy(identity).toSeq
+    }
+    val saved = graft.plans.TopKPerGroup.fallbackBytes
+    val viaFallback =
+      try {
+        graft.plans.TopKPerGroup.fallbackBytes = 1L // overflow on row 1
+        // the rewrite still fires (fallback is a runtime degrade, not
+        // a plan change)
+        val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("payload"))
+        val q = wide(spark).withColumn("rnk", row_number().over(w))
+          .filter(col("rnk") <= 3)
+        assert(topkNodes(finalPlan(q)) == 2)
+        run(wide(spark))
+      } finally graft.plans.TopKPerGroup.fallbackBytes = saved
+    val viaHeap = run(wide(spark))
+    val viaWindow = run(wide(windowOnly)) // rule excluded: WindowExec
+    assert(viaFallback == viaHeap, "fallback path diverged from heap path")
+    assert(viaFallback == viaWindow, "fallback path diverged from WindowExec")
+    assert(viaFallback.size == 997 * 3 &&
+      viaFallback.count(_._4 == 1) == 997)
   }
 
   test("TopK helper goes native under the extension and matches itself") {
-    withExtSession { s =>
-      val ext = graft.etl.TopK.topK(fixture(s), Seq(col("g")),
-        col("v"), col("payload"), 4)
-      assert(topkNodes(finalPlan(ext)) == 2)
-      val got = ext.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(3)))
-        .sortBy(identity).toSeq
-      val exp = graft.etl.TopK.topK(fixture(spark), Seq(col("g")),
-        col("v"), col("payload"), 4).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getInt(3))).sortBy(identity).toSeq
-      assert(got == exp && got.size == 28)
-    }
+    val ext = graft.etl.TopK.topK(fixture(spark), Seq(col("g")),
+      col("v"), col("payload"), 4)
+    assert(topkNodes(finalPlan(ext)) == 2)
+    val got = ext.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(3)))
+      .sortBy(identity).toSeq
+    val exp = graft.etl.TopK.topK(fixture(windowOnly), Seq(col("g")),
+      col("v"), col("payload"), 4).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(3))).sortBy(identity).toSeq
+    assert(got == exp && got.size == 28)
   }
 }
