@@ -254,13 +254,9 @@ object AggregateMain {
         case k => throw new IllegalArgumentException(s"Config '$k' not found")
       }
     }
-    // persist: the store count and the fan-out write would otherwise each
-    // run the full normalization+aggregation pipeline from the scan
-    result.persist()
-    val nStores = result.select(keyCol).distinct().count()
-    FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
-    result.unpersist()
-    println(s"[OK] config=$cfgKey, stores=$nStores")
+    // stores = files written (the reference counts stores written too)
+    val stores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
+    println(s"[OK] config=$cfgKey, stores=${stores.length}")
     spark.stop()
   }
 }

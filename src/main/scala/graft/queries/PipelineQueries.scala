@@ -30,7 +30,7 @@ object PipelineQueries {
 
   /** The events fan-out layout, materialized ONCE per (dataset, process)
     * and read back by q15 (round-trip), q17 (verify summary) and q31
-    * (violation samples) — the write+finalize pipeline is the most
+    * (violation samples) — the fan-out write is the most
     * expensive filesystem work in the suite and its output is identical
     * for all three consumers (same checkpoint-the-expensive-intermediate
     * shape as the shared LSH pair table).

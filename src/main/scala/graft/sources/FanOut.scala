@@ -1,28 +1,46 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Partitioned fan-out sink (reference fan_out_by_storeid.py:36–48;
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+/** Partitioned fan-out sink (reference fan_out_by_storeid.py:32–48;
   * SURVEY.md §2.1 S5/S6): split rows of each source into
   * `out/{key}/{srcName}.csv`, optionally replaying meta prefix rows and a
   * UTF-8 BOM (`utf-8-sig`) at the top of every output file.
   *
-  * The heavy lifting is Spark's dynamic-partition CSV write — one writer
-  * per (task, key), iterator-based, constant memory (the reference's
-  * explicit O(1)-rows constraint is free here, SURVEY.md §4). The exact
-  * `{key}/{src}.csv` layout the reference promises is restored by a
-  * finalize pass whose DRIVER work is metadata-only: single-part keys
-  * with no prefix/BOM are `FileSystem.rename`d, and any byte-level
-  * concat (multi-part keys, prefix/BOM replay) runs distributed, one
-  * task per key — at 100 TB the finalize scales with the cluster.
+  * The reference is one loop: `csv.reader` feeds one `csv.writer` per
+  * output file. Here each row becomes `(key, seq, to_csv(cells))`, rows
+  * are hash-partitioned by key (a key never spans two tasks) and sorted
+  * by (key, seq) within each partition, and every task streams its rows
+  * with ONE open file at a time: prefix + header once per key, then the
+  * key's rows in input order. The writer holds one row (the sort
+  * spills), so memory stays bounded like the reference's (SURVEY.md §4);
+  * no output byte goes through the driver, whose only filesystem work
+  * is the orphan-temp sweep over the key directories written.
   */
 object FanOut {
 
-  /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv`.
+  /** The CSV dialect of Python's `csv` module, which the reference reads
+    * and writes with: a quote inside a quoted cell is doubled (`"q ""x"""`),
+    * not backslash-escaped, and cells keep their leading and trailing
+    * spaces. Spark's defaults (escape `\`, whitespace trimmed on write)
+    * would rewrite such cells. Used by the writer's `to_csv` and by the
+    * `from_csv` of [[read]] and [[HeaderScan]].
+    */
+  private[sources] val csvDialect: Map[String, String] = Map(
+    "escape" -> "\"",
+    "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false")
+
+  /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv` and
+    * return the keys written, sorted.
     *
-    * Blank/whitespace keys are dropped (fan_out_by_storeid.py:35–37).
+    * Keys are trimmed, and blank/whitespace keys are dropped
+    * (fan_out_by_storeid.py:35–37). Other cells are written verbatim.
     * `prefixRows` (meta rows from [[HeaderScan]]) and `bom` reproduce the
     * reference's per-file prefix replay + utf-8-sig output.
     *
@@ -49,37 +67,61 @@ object FanOut {
       prefixRows: Seq[String] = Nil,
       bom: Boolean = false,
       encoding: String = "UTF-8",
-      lineSep: String = "\n"): Unit = {
-    val spark = df.sparkSession
-    val staging = s"$outDir/_staging_$srcName"
-    // reserved partition-helper name: a source column literally named
-    // _gk would be silently overwritten and then stripped from the CSVs
-    // by partitionBy — refuse it (schemas are arbitrary BI exports, so
-    // this is an input-validation contract, not an internal invariant)
-    require(!df.columns.contains("_gk"),
-      "FanOut.write reserves column _gk; rename the conflicting input column")
-    val cleaned = df
-      .withColumn(keyCol, trim(col(keyCol)))
-      .filter(col(keyCol).isNotNull && col(keyCol) =!= "")
-    // Partition on a duplicated helper column so the key stays in the CSV
-    // row content (Spark drops partition columns from files; the reference
-    // keeps the key cell — that's the invariant verify_fanout checks).
-    val helper = "_gk"
+      lineSep: String = "\n"): Seq[String] = {
     require(!bom || java.nio.charset.Charset.forName(encoding) ==
       java.nio.charset.StandardCharsets.UTF_8,
       s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
-    // staging is ALWAYS UTF-8 + LF: Spark 4's CSV writer whitelists
-    // charsets (big5 is rejected without a legacy flag) and caps the
-    // write-side lineSep at one char, so non-default output encodings
-    // are produced by the DISTRIBUTED finalize pass transcoding the
-    // staging bytes (one task per key — same scale shape as the concat)
-    cleaned.withColumn(helper, col(keyCol)).write
-      .mode("overwrite")
-      .option("header", true)
-      .partitionBy(helper)
-      .csv(staging)
-    finalizeLayout(spark, staging, outDir, helper, srcName, prefixRows, bom,
-      encoding, lineSep)
+    val spark = df.sparkSession
+    val names = df.columns.toSeq
+    def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
+    val key = trim(quoted(keyCol))
+    val cells = names.map(c => if (c == keyCol) key.as(c) else quoted(c))
+    val head = (if (bom) "\uFEFF" else "") +
+      prefixRows.map(_ + lineSep).mkString + csvHeader(spark, names) + lineSep
+    // seq is taken before the shuffle, so sorting by (k, seq) restores
+    // each key's input order
+    val rows = df
+      .select(key.as("k"), monotonically_increasing_id().as("seq"),
+        to_csv(struct(cells: _*), csvDialect.asJava).as("line"))
+      .filter(col("k").isNotNull && col("k") =!= "")
+      // repartition, not rebalance: AQE may split a rebalance partition,
+      // and a key must stay in one task to get one file
+      .repartition(col("k"))
+      .sortWithinPartitions("k", "seq")
+      .select("k", "line")
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val (out, src, enc, sep) = (outDir, srcName, encoding, lineSep)
+    val keys = rows
+      .mapPartitions(it => writeSorted(conf.value, out, src, head, enc, sep, it))(Encoders.STRING)
+      .collect().toSeq.sorted
+    // Sweep orphaned attempt temps (crashed or speculation-killed
+    // attempts that never renamed). Done HERE, after the job has
+    // returned and every key holds a committed dest — a task-side
+    // sweep could delete a live twin's tmp mid-write and leave the
+    // key fileless. Driver cost is metadata-only (one listing per
+    // key; no glob, so keys with glob metachars stay safe).
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    keys.foreach { k =>
+      fs.listStatus(new Path(s"$outDir/$k"))
+        .filter { st =>
+          val n = st.getPath.getName
+          n.contains(s"$srcName.csv.") &&
+            (n.endsWith(".tmp") || n.endsWith(".tmp.crc"))
+        }
+        .foreach(st => fs.delete(st.getPath, false))
+    }
+    keys
+  }
+
+  /** The header line, rendered by the same `to_csv` as the rows over a
+    * one-row local relation (evaluated on the driver, no Spark job).
+    */
+  private def csvHeader(spark: SparkSession, names: Seq[String]): String = {
+    val schema = StructType(names.indices.map(i => StructField(s"c$i", StringType)))
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(names)), schema)
+      .select(to_csv(struct(schema.fieldNames.toSeq.map(col): _*), csvDialect.asJava))
+      .collect().head.getString(0)
   }
 
   /** Hadoop `Configuration` isn't `java.io.Serializable`; it IS a Hadoop
@@ -99,120 +141,36 @@ object FanOut {
     }
   }
 
-  /** One key's concat work item: (key, part-file paths). */
-  private type KeyParts = (String, Seq[String])
-
-  /** Move `staging/{key}={v}/part-*.csv` → `outDir/{v}/{srcName}.csv`.
-    *
-    * Scale contract: the driver touches METADATA only (listings, renames).
-    *   - single part file, no prefix/BOM → `FileSystem.rename` (a true
-    *     metadata op — the common case, since each key's rows land in few
-    *     tasks);
-    *   - multi-part or prefix/BOM → the byte concat runs DISTRIBUTED, one
-    *     task per key over a parallelized key list. At 100× data the
-    *     concat cost scales with the cluster, not with one driver thread.
-    */
-  private def finalizeLayout(
-      spark: SparkSession,
-      staging: String,
-      outDir: String,
-      keyCol: String,
-      srcName: String,
-      prefixRows: Seq[String],
-      bom: Boolean,
-      encoding: String,
-      lineSep: String): Unit = {
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = (if (bom) "﻿" else "") +
-      (if (prefixRows.nonEmpty) prefixRows.mkString("", lineSep, lineSep)
-       else "")
-    val plan: Array[KeyParts] = fs.listStatus(new Path(staging))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$keyCol="))
-      .map { partDir =>
-        // Spark's own partition-value unescaping — NOT URLDecoder, whose
-        // '+'-means-space rule corrupts keys containing '+' (Spark's
-        // escapePathName leaves '+' literal)
-        val key = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(partDir.getPath.getName.stripPrefix(s"$keyCol="))
-        val parts = fs.listStatus(partDir.getPath)
-          .filter(_.getPath.getName.endsWith(".csv"))
-          .map(_.getPath.toString).sorted.toSeq
-        (key, parts)
-      }
-    // non-default encoding or terminator ⇒ every key needs the
-    // (distributed) transcode pass; the metadata-only rename fast path
-    // is only byte-correct when staging bytes ARE the output bytes
-    val transcode = java.nio.charset.Charset.forName(encoding) !=
-      java.nio.charset.StandardCharsets.UTF_8 || lineSep != "\n"
-    val (renameable, needConcat) =
-      plan.partition { case (_, parts) =>
-        parts.length == 1 && prefix.isEmpty && !transcode }
-    renameable.foreach { case (key, parts) =>
-      val dest = new Path(s"$outDir/$key/$srcName.csv")
-      fs.mkdirs(dest.getParent)
-      if (fs.exists(dest)) fs.delete(dest, false)
-      if (!fs.rename(new Path(parts.head), dest))
-        throw new java.io.IOException(
-          s"fan-out finalize: rename ${parts.head} -> $dest failed")
-      dropCrcSidecar(fs, dest)
-    }
-    if (needConcat.nonEmpty) {
-      val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val (out, src, pfx, enc, sep) = (outDir, srcName, prefix, encoding, lineSep)
-      val slices = math.min(needConcat.length, spark.sparkContext.defaultParallelism)
-      spark.sparkContext.parallelize(needConcat.toSeq, slices).foreach {
-        case (key, parts) => concatKey(serConf.value, out, src, pfx, enc, sep, key, parts)
-      }
-      // Sweep orphaned attempt temps (crashed or speculation-killed
-      // attempts that never renamed). Done HERE, after the job has
-      // returned and every key holds a committed dest — a task-side
-      // sweep could delete a live twin's tmp mid-write and leave the
-      // key fileless. Driver cost is metadata-only (one listing per
-      // concat key; no glob, so keys with glob metachars stay safe).
-      needConcat.foreach { case (key, _) =>
-        val dir = new Path(s"$outDir/$key")
-        fs.listStatus(dir)
-          .filter { st =>
-            val n = st.getPath.getName
-            n.contains(s"$srcName.csv.") &&
-              (n.endsWith(".tmp") || n.endsWith(".tmp.crc"))
-          }
-          .foreach(st => fs.delete(st.getPath, false))
-      }
-    }
-    fs.delete(new Path(staging), true)
-  }
-
-  /** Task-side concat of one key's part files (header kept once, prefix
-    * replayed). Runs on executors — keep driver state out of here.
+  /** Task-side writer over one partition's `(key, csv line)` rows, grouped
+    * by key: one open file at a time, `head` (BOM, prefix, header) once
+    * per key, then the key's rows. Returns the keys it committed. Runs on
+    * executors — keep driver state out of here.
     *
     * Retry-safe: each attempt writes to an attempt-unique hidden temp
     * file and renames into place, so a retried or speculatively
     * duplicated task never interleaves bytes with another attempt on the
     * same destination stream — the last rename wins whole-file.
     */
-  private def concatKey(
+  private def writeSorted(
       conf: org.apache.hadoop.conf.Configuration,
       outDir: String,
       srcName: String,
-      prefix: String,
+      head: String,
       encoding: String,
       lineSep: String,
-      key: String,
-      parts: Seq[String]): Unit = {
-    val cs = java.nio.charset.Charset.forName(encoding)
-    val stagingCs = java.nio.charset.StandardCharsets.UTF_8 // staging is UTF-8+LF
-    // Strict transcode: the reference Python opens the sink with the
+      rows: Iterator[(String, String)]): Iterator[String] = {
+    val fs = new Path(outDir).getFileSystem(conf)
+    // Strict encode: the reference Python opens the sink with the
     // target codec and raises UnicodeEncodeError on any unmappable
     // character (fan_out_by_storeid.py's `open(..., encoding=enc)`
     // default errors='strict'). Java's String.getBytes(Charset) instead
     // REPLACEs with '?' — silent corruption. REPORT restores the loud
     // failure contract; the message carries the key so a 1000-task run
     // points at the offending partition, not a stack of anonymous bytes.
-    val strictEnc = cs.newEncoder()
+    val strictEnc = java.nio.charset.Charset.forName(encoding).newEncoder()
       .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
       .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
-    def encodeStrict(s: String): Array[Byte] =
+    def encodeStrict(key: String, s: String): Array[Byte] =
       try {
         val bb = strictEnc.encode(java.nio.CharBuffer.wrap(s))
         val arr = new Array[Byte](bb.remaining()); bb.get(arr); arr
@@ -224,41 +182,49 @@ object FanOut {
               s"matching the reference's UnicodeEncodeError contract): " +
               s"${s.take(120)}", e)
       }
-    val dest = new Path(s"$outDir/$key/$srcName.csv")
-    val fs = dest.getFileSystem(conf)
-    fs.mkdirs(dest.getParent)
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(_.taskAttemptId().toString)
       .getOrElse(java.util.UUID.randomUUID().toString)
-    val tmp = new Path(dest.getParent, s".${dest.getName}.$attempt.tmp")
-    val out = fs.create(tmp, true)
+    val written = Seq.newBuilder[String]
+    var key: String = null
+    var dest, tmp: Path = null
+    var out: java.io.OutputStream = null
+    def commit(): Unit = if (out != null) {
+      out.close(); out = null
+      commitFile(fs, tmp, dest)
+      written += key
+    }
     try {
-      if (prefix.nonEmpty) out.write(encodeStrict(prefix))
-      var wroteHeader = false
-      parts.foreach { p =>
-        val in = fs.open(new Path(p))
-        try {
-          val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, stagingCs))
-          var line = reader.readLine() // header line of this part file
-          if (!wroteHeader && line != null) {
-            out.write(encodeStrict(line + lineSep))
-            wroteHeader = true
-          }
-          line = reader.readLine()
-          while (line != null) {
-            out.write(encodeStrict(line + lineSep))
-            line = reader.readLine()
-          }
-        } finally in.close()
+      rows.foreach { case (k, line) =>
+        if (k != key) {
+          commit()
+          key = k
+          dest = new Path(s"$outDir/$k/$srcName.csv")
+          tmp = new Path(dest.getParent, s".${dest.getName}.$attempt.tmp")
+          fs.mkdirs(dest.getParent)
+          out = fs.create(tmp, true)
+          out.write(encodeStrict(k, head))
+        }
+        out.write(encodeStrict(k, line + lineSep))
       }
-    } finally out.close()
-    // Commit by rename FIRST; only delete a pre-existing dest when the
-    // rename refuses to clobber. A committed destination is therefore
-    // never removed before its replacement exists, so two live
-    // speculative/retried attempts can't strand the key fileless (each
-    // attempt's tmp stays private to it — orphans from crashed attempts
-    // are swept by the driver in finalizeLayout AFTER the job, never by
-    // a peer task that might race a still-writing twin).
+      commit()
+    } catch { case e: Throwable =>
+      // this attempt's own tmp is private to it: safe to remove here
+      if (out != null) { scala.util.Try(out.close()); fs.delete(tmp, false) }
+      throw e
+    }
+    written.result().iterator
+  }
+
+  /** Commit one attempt's `tmp` as `dest` by rename FIRST; only delete a
+    * pre-existing dest when the rename refuses to clobber. A committed
+    * destination is therefore never removed before its replacement
+    * exists, so two live speculative/retried attempts can't strand the
+    * key fileless (each attempt's tmp stays private to it — orphans from
+    * crashed attempts are swept by the driver in [[write]] AFTER the
+    * job, never by a peer task that might race a still-writing twin).
+    */
+  private def commitFile(fs: FileSystem, tmp: Path, dest: Path): Unit = {
     if (!fs.rename(tmp, dest)) {
       if (fs.exists(dest)) fs.delete(dest, false)
       if (!fs.rename(tmp, dest)) {
@@ -268,7 +234,7 @@ object FanOut {
         fs.delete(tmp, false)
         if (!fs.exists(dest))
           throw new java.io.IOException(
-            s"fan-out concat: rename $tmp -> $dest failed")
+            s"fan-out: rename $tmp -> $dest failed")
       }
     }
     dropCrcSidecar(fs, dest)
@@ -304,7 +270,6 @@ object FanOut {
     * reader per file if a source ever does.
     */
   def read(spark: SparkSession, outDir: String, srcName: String, keyCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val first = fs.listStatus(new Path(outDir)).filter(_.isDirectory)
       .map(d => new Path(d.getPath, s"$srcName.csv")).find(fs.exists)
@@ -335,7 +300,7 @@ object FanOut {
       // collide with data rows in practice. A caller needing exactness
       // under adversarial keys should read per-file with positional skip.
       .filter(!col("_line").isin(prefixSet.toSeq: _*))
-      .select(from_csv(col("_line"), schema, Map.empty[String, String]).as("r"),
+      .select(from_csv(col("_line"), schema, csvDialect).as("r"),
         // input_file_name is URI-percent-encoded; url_decode additionally
         // treats '+' as space (form encoding), so protect literal '+'
         // (never raw in a URI) by pre-escaping it

@@ -192,7 +192,7 @@ object HeaderScan {
       }, preservesPartitioning = true)
     import spark.implicits._
     rdd.toDF("_line", "_src")
-      .select(from_csv(col("_line"), schema, Map.empty[String, String]).as("r"), col("_src"))
+      .select(from_csv(col("_line"), schema, FanOut.csvDialect).as("r"), col("_src"))
       .select(col("r.*"), col("_src"))
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.etl.VerifyOps
@@ -21,14 +23,31 @@ class FanOutSpec extends SparkSpec {
 
   private val S = "商店序號"
 
+  /** The output tree holds only `{key}/{src}.csv` files: no checksum
+    * sidecars, no attempt temps, no staging directories.
+    */
+  private def assertOnlyLayout(out: String): Unit = {
+    val root = java.nio.file.Paths.get(out)
+    val entries = Files.walk(root).iterator().asScala.filter(_ != root).toSeq
+    val bad = entries.filterNot { p =>
+      val rel = root.relativize(p)
+      val name = p.getFileName.toString
+      if (Files.isDirectory(p)) rel.getNameCount == 1 && !name.startsWith("_") && !name.startsWith(".")
+      else rel.getNameCount == 2 && name.endsWith(".csv") && !name.startsWith(".")
+    }
+    assert(bad.isEmpty, s"unexpected entries under $out: ${bad.mkString(", ")}")
+  }
+
   test("FanOut.write → read round-trip: layout, prefix replay, BOM, blanks dropped") {
     val out = tmpDir("fanout").toString
     val df = Seq(
       ("s1", "a", "1"), ("s2", "b", "2"), ("s1", "c", "3"),
       ("  ", "dropped", "4"), (" s2 ", "d", "5"))
       .toDF(S, "v1", "v2")
-    FanOut.write(df, S, out, "srcA",
+    val keys = FanOut.write(df, S, out, "srcA",
       prefixRows = Seq("Established At Year,2025,2024"), bom = true)
+    assert(keys == Seq("s1", "s2"))
+    assertOnlyLayout(out)
 
     // exact {key}/{src}.csv layout
     val s1 = new java.io.File(s"$out/s1/srcA.csv")
@@ -65,6 +84,7 @@ class FanOutSpec extends SparkSpec {
     FanOut.write(df, S, out, "srcB5",
       prefixRows = Seq("報表年度,2025,2024"),
       encoding = "big5", lineSep = "\r\n")
+    assertOnlyLayout(out)
     val big5 = java.nio.charset.Charset.forName("big5")
     val got = Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/s1/srcB5.csv"))
@@ -98,33 +118,64 @@ class FanOutSpec extends SparkSpec {
       s"expected strict-encoding error naming key s2 and big5, got: $msg")
   }
 
-  test("multi-part keys: distributed concat keeps one header and all rows") {
+  test("multi-partition input: one header and input row order per key") {
     val out = tmpDir("fanout_mp").toString
-    // 8 input partitions × 3 keys → several part files per key in staging;
-    // these take the distributed-concat path (with prefix, even the
-    // single-part keys do)
-    val df = spark.range(600)
+    // 8 input partitions × 3 keys: every key's rows come from all 8, and
+    // the values are not in sorted order, so only input order passes
+    val df = spark.range(0, 600, 1, 8)
       .select(concat(lit("k"), pmod(col("id"), lit(3))).as(S),
-        col("id").cast("string").as("v"))
-      .repartition(8)
-    FanOut.write(df, S, out, "srcM", prefixRows = Seq("Meta,1"), bom = true)
+        pmod(col("id") * 7919, lit(600)).cast("string").as("v"))
+    assert(df.rdd.getNumPartitions == 8)
+    val input = df.collect().map(r => (r.getString(0), r.getString(1)))
+    FanOut.write(df, S, out, "srcM", prefixRows = Seq("報表,1"),
+      encoding = "big5", lineSep = "\r\n")
+    assertOnlyLayout(out)
+    val big5 = java.nio.charset.Charset.forName("big5")
     (0 to 2).foreach { k =>
-      val raw = Files.readString(new java.io.File(s"$out/k$k/srcM.csv").toPath)
-      assert(raw.startsWith("﻿Meta,1\n"))
-      val lines = raw.stripPrefix("﻿").split("\n").toSeq
-      assert(lines.count(_.startsWith(S)) == 1, "exactly one header after concat")
-      assert(lines.length == 2 + 200, s"k$k: meta + header + 200 rows")
+      val got = Files.readAllBytes(java.nio.file.Paths.get(s"$out/k$k/srcM.csv"))
+      val rows = input.filter(_._1 == s"k$k").map { case (key, v) => s"$key,$v\r\n" }
+      assert(rows.length == 200)
+      val expected = (s"報表,1\r\n$S,v\r\n" + rows.mkString).getBytes(big5)
+      assert(java.util.Arrays.equals(got, expected),
+        s"k$k: want prefix, one header, then input order; got\n" +
+          new String(got, big5).take(300))
     }
-    val back = FanOut.read(spark, out, "srcM", S)
-    assert(back.count() == 600)
-    assert(VerifyOps.contentViolations(back, S).count() == 0)
 
-    // no-prefix single-part path (rename): still a correct layout
+    // one input partition, no prefix, UTF-8: reads back whole
     val out2 = tmpDir("fanout_rn").toString
     FanOut.write(df.coalesce(1), S, out2, "srcR")
+    assertOnlyLayout(out2)
     val back2 = FanOut.read(spark, out2, "srcR", S)
     assert(back2.count() == 600 &&
       VerifyOps.contentViolations(back2, S).count() == 0)
+  }
+
+  test("CSV dialect: cells round-trip byte-exact, as Python's csv module writes them") {
+    // csv.writer output for these cells (padded cells stay padded, an
+    // embedded quote is doubled, backslash is an ordinary character);
+    // the reference copies rows reader → writer, so the data lines must
+    // come out exactly as they went in
+    val dir = tmpDir("dialect_in")
+    val out = tmpDir("dialect_out").toString
+    val dataLines = Seq(
+      "s1, padded ,\"q \"\"x\"\"\"",
+      "s1,a\\b,\"c,d\"",
+      "s2,plain,z")
+    Files.writeString(dir.resolve("d.csv"),
+      (s"$S,name,note" +: dataLines).mkString("", "\n", "\n"))
+    val Seq((info, df)) = HeaderScan.readDirFrames(spark, dir.toString)
+    assert(df.filter(col(S) === "s1").orderBy("note").select("name", "note")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
+    FanOut.write(df.drop("_src"), S, out, "d", prefixRows = info.prefixRows)
+    assertOnlyLayout(out)
+    assert(Files.readString(java.nio.file.Paths.get(s"$out/s1/d.csv")) ==
+      (s"$S,name,note" +: dataLines.take(2)).mkString("", "\n", "\n"))
+    // and the read side parses the same dialect back
+    val back = FanOut.read(spark, out, "d", S)
+      .filter(col(S) === "s1").orderBy("note").select("name", "note")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(back == Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
   }
 
   test("special-character keys round-trip: space, percent, plus, hash") {
@@ -132,6 +183,7 @@ class FanOutSpec extends SparkSpec {
     val df = Seq(("a b", "1"), ("50%", "2"), ("x+y", "3"), ("s#1", "4"))
       .toDF(S, "v")
     FanOut.write(df, S, out, "src")
+    assertOnlyLayout(out)
     // exact on-disk layout uses the literal keys
     assert(Seq("a b", "50%", "x+y", "s#1").forall(k =>
       new java.io.File(s"$out/$k/src.csv").isFile))
@@ -146,6 +198,7 @@ class FanOutSpec extends SparkSpec {
     val df = Seq(("s1", "1"), ("s2", "2")).toDF(S, "v")
     val src = "report(2024)[v1]"
     FanOut.write(df, S, out, src)
+    assertOnlyLayout(out)
     assert(new java.io.File(s"$out/s1/$src.csv").isFile)
     val back = FanOut.read(spark, out, "report(2024)[v1]", S)
     assert(back.count() == 2)
@@ -212,6 +265,7 @@ class FanOutSpec extends SparkSpec {
     val out = tmpDir("kpi_emit").toString
     val kpi = graft.etl.Kpi.config23_1(binds, cum, mem)
     FanOut.write(kpi, S, out, "23-1", bom = true)
+    assertOnlyLayout(out)
     val f1 = Files.readString(new java.io.File(s"$out/1/23-1.csv").toPath)
     assert(f1.startsWith("﻿"), "utf-8-sig BOM")
     val lines = f1.stripPrefix("﻿").split("\n").toSeq
@@ -253,6 +307,7 @@ class FanOutSpec extends SparkSpec {
       s"meta,row\n$S,月份,總綁定\ns1,01,10\ns2,202502,20\ns1,3,30\n")
     val Seq((info, df)) = HeaderScan.readDirFrames(spark, dir.toString)
     FanOut.write(df.drop("_src"), S, out, "export", prefixRows = info.prefixRows)
+    assertOnlyLayout(out)
     val back = FanOut.read(spark, out, "export", S)
     assert(back.count() == 3)
     assert(VerifyOps.contentViolations(back, S).count() == 0)
