@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -46,8 +46,12 @@ private[cli] object Args {
     * case-insensitively ("x.CSV.csv" → "x.CSV", never "x" — a chained
     * stripSuffix would double-strip and collide distinct inputs).
     */
-  def srcBase(fileName: String): String =
-    fileName.replaceAll("(?i)\\.csv$", "")
+  def srcBase(fileName: String): String = fileName.replaceAll(csvExt, "")
+
+  /** [[srcBase]] of a file-name column, by the same regex. */
+  def srcBase(fileName: Column): Column = regexp_replace(fileName, csvExt, "")
+
+  private val csvExt = "(?i)\\.csv$"
 
   /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
     * aggregate_by_store.py:123 etc.): header row taken as-is,
@@ -127,26 +131,22 @@ object VerifyFanoutMain {
     // absent from a source file legitimately has no output for it, and
     // key-less input files are warn-skipped by the fan-out itself
     // (fan_out_by_storeid.py:28–30), so both sides use the same
-    // HeaderScan ingest (same --encoding)
-    val frames = HeaderScan.readDirFrames(spark, in, key, enc)
-    val srcNames = frames.map { case (info, _) =>
-      Args.srcBase(new Path(info.path).getName)
-    }
-    val expected = frames.zip(srcNames).map { case ((_, df), srcName) =>
-      df.select(trim(col(key)).as(key)).filter(col(key) =!= "")
-        .distinct().withColumn("src", lit(srcName))
-    }.reduceOption(_ unionAll _)
-      .getOrElse(Seq.empty[(String, String)].toDF(key, "src"))
+    // HeaderScan ingest (same --encoding), one scan per header group
+    val srcOf = (p: Path) => Args.srcBase(p.getName)
+    val inputs = HeaderScan.scanDir(spark, in, key, enc)
+    val srcNames = inputs.map(i => srcOf(new Path(i.path)))
+    val expected =
+      if (inputs.isEmpty) Seq.empty[(String, String)].toDF(key, "src")
+      else HeaderScan.readFiles(spark, inputs)
+        .select(trim(col(key)).as(key), Args.srcBase(HeaderScan.fileName(col("_path"))).as("src"))
+        .filter(col(key) =!= "")
 
     // pass 1 — file sets (driver metadata listing → anti-join check)
-    val presentPairs = fs.listStatus(new Path(out)).filter(_.isDirectory)
-      .flatMap { d =>
-        fs.listStatus(d.getPath).map(f => (d.getPath.getName, f.getPath.getName))
-      }.toSeq
-      .filter(_._2.toLowerCase.endsWith(".csv"))
-      .map { case (k, f) => (k, Args.srcBase(f)) }
-    val present = presentPairs.toDF(key, "src")
-    val presentSrcs = presentPairs.map(_._2).toSet
+    val listed = fs.listStatus(new Path(out)).filter(_.isDirectory)
+      .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile).map(_.getPath)
+      .filter(_.getName.toLowerCase.endsWith(".csv")).toSeq
+    val present = listed.map(p => (p.getParent.getName, srcOf(p))).toDF(key, "src")
+    val presentSrcs = listed.map(srcOf).toSet
     // --strict: the reference verifier's expectation — every store dir
     // that exists must hold every input file (verify_fanout.py
     // check_file_sets: missing = input_files - store_files per dir)
@@ -156,7 +156,7 @@ object VerifyFanoutMain {
       else VerifyOps.fileSetCheckPairs(present, expected, key)).cache()
     val nMissing = setProblems.filter(col("kind") === "missing").count()
     val nExtra = setProblems.filter(col("kind") === "extra").count()
-    println(s"[sets] input files=${frames.length} missing=$nMissing extra=$nExtra")
+    println(s"[sets] input files=${inputs.length} missing=$nMissing extra=$nExtra")
     // first 10 stores PER set problem (verify_fanout.py truncation) — a
     // flood of one kind must not hide the other
     val wKind = org.apache.spark.sql.expressions.Window
@@ -166,37 +166,37 @@ object VerifyFanoutMain {
       .orderBy(col("kind"), col(key), col("src")).collect()
       .foreach(r => println(s"  ${r.getString(1)}: store=${r.getString(0)} file=${r.getString(2)}.csv"))
 
-    // pass 2 — content invariant per source file (distributed read-back;
-    // membership test on the driver-side listing, no Spark job per file).
-    // STRAY files (present in store dirs but not among the inputs) are
-    // content-checked too — verify_fanout.py's check_store_no_values
-    // scans every CSV under each store dir, so a stray file's violating
-    // rows must add to total_violations, not just surface as "extra"
-    var totalViolations = 0L
+    // pass 2 — content invariant over every listed output file, strays
+    // included (verify_fanout.py's check_store_no_values), in ONE read:
+    // heads scanned in UTF-8 (FanOutMain's default), then --encoding. A
+    // file Hadoop cannot read ('.'/'_' name) or without the key column
+    // cannot satisfy it (the reference's df[key] would throw): one violation
+    val infos = HeaderScan.scanFiles(spark,
+      listed.filterNot(p => HeaderScan.isHidden(p.getName)).map(_.toString),
+      key, Seq("UTF-8", enc).distinct)
+    val keyed = infos.map(_.path).toSet
+    val unreadable = listed.filterNot(p => keyed(p.toString))
+    // ≤5 samples per output file, each carrying its file's violation count
+    val samples =
+      if (infos.isEmpty) Seq.empty
+      else VerifyOps.violationSamples(HeaderScan.readFiles(spark, infos).select(col(key),
+          HeaderScan.parentName(col("_path")).as("_dir_key"),
+          Args.srcBase(HeaderScan.fileName(col("_path"))).as("_src")), key, 5)
+        .select(col("_src"), col("_dir_key"), col("_rnk"), col(key), col("_n_file_violations"))
+        .as[(String, String, Int, String, Long)].collect().toSeq
+    val (samplesOf, unreadableOf) = (samples.groupBy(_._1), unreadable.groupBy(srcOf))
     val strays = (presentSrcs -- srcNames.toSet).toSeq.sorted
     (srcNames.filter(presentSrcs) ++ strays).foreach { srcName =>
-      try {
-        val back = FanOut.read(spark, out, srcName, key)
-        val n = VerifyOps.contentViolations(back, key).count()
-        totalViolations += n
-        if (n > 0) {
-          println(s"[content] $srcName.csv: $n violating rows")
-          VerifyOps.violationSamples(back.select(col(key), col("_dir_key")), key, 5)
-            .orderBy(col("_dir_key"), col("_rnk")).collect()
-            .foreach(r => println(s"  dir=${r.getString(1)} key_cell='${r.getString(0)}'"))
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // a stray CSV without the key header cannot satisfy the
-        // invariant (FanOut.read refuses it; the reference's df[key]
-        // access would throw) — count it as one violation instead of
-        // crashing the verifier mid-report
-        totalViolations += 1
-        val why = Option(e.getMessage)
-          .flatMap(_.linesIterator.toSeq.headOption)
-          .getOrElse(e.getClass.getSimpleName)
-        println(s"[content] $srcName.csv: unreadable under key '$key' ($why) — counted as violation")
+      val rows = samplesOf.getOrElse(srcName, Nil).sortBy(r => (r._2, r._3))
+      val n = rows.filter(_._3 == 1).map(_._5).sum
+      if (n > 0) {
+        println(s"[content] $srcName.csv: $n violating rows")
+        rows.foreach(r => println(s"  dir=${r._2} key_cell='${r._4}'"))
       }
+      unreadableOf.getOrElse(srcName, Nil).foreach(p =>
+        println(s"[content] $p: unreadable under key '$key' — counted as violation"))
     }
+    val totalViolations = samples.filter(_._3 == 1).map(_._5).sum + unreadable.length
     println(s"[content] total violations=$totalViolations")
 
     val failed = nMissing + nExtra + totalViolations > 0

@@ -67,30 +67,34 @@ object VerifyOps {
   }
 
   /** Content-invariant violations: rows whose key cell ≠ directory key.
-    * Input needs (keyCol, _dir_key) as produced by
-    * [[graft.sources.FanOut.read]]. A missing (null) key cell — e.g. a
-    * ragged row null-filled by the CSV parser — counts as "" and thus AS
-    * a violation (verify_fanout.py:90–93), not a silently dropped row.
+    * Input needs (keyCol, _dir_key), as [[graft.sources.FanOut.read]] and
+    * `VerifyFanoutMain` produce them: every data row, the prefix dropped
+    * by byte offset. A missing (null) key cell — e.g. a ragged row
+    * null-filled by the CSV parser — counts as "" and thus AS a violation
+    * (verify_fanout.py:90–93), not a silently dropped row.
     */
   def contentViolations(readBack: DataFrame, keyCol: String): DataFrame =
     readBack.filter(trim(coalesce(col(keyCol), lit(""))) =!= col("_dir_key"))
 
   /** Bounded violation sample report (verify_fanout.py:96–97, 126–135):
-    * at most `k` violating rows per output file (= per `_dir_key`), each
-    * tagged with its rank and the file's total violation count — the
-    * report stays O(k·files) no matter how many rows violate, where the
-    * unbounded [[contentViolations]] set could be the whole corpus.
+    * at most `k` violating rows per output file (= per `_dir_key`, and
+    * per `_src` too when the frame has that column, i.e. holds several
+    * sources), each tagged with its rank and the file's total violation
+    * count — the report stays O(k·files) no matter how many rows
+    * violate, where the unbounded [[contentViolations]] set could be the
+    * whole corpus.
     *
     * Sampling is deterministic up to row content: rows are ranked by the
     * trimmed key cell, so callers wanting hash-stable output should
     * project the frame to (keyCol, _dir_key) first (tied rows are then
     * identical and any k of them are the same sample).
     *
-    * Both windows share one partitioning on `_dir_key` → one shuffle.
+    * Both windows share one partitioning on the file → one shuffle.
     */
   def violationSamples(readBack: DataFrame, keyCol: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val byFile = Window.partitionBy(col("_dir_key"))
+    val byFile = Window.partitionBy(
+      Seq("_src", "_dir_key").filter(readBack.columns.contains).map(col): _*)
     contentViolations(readBack, keyCol)
       .withColumn("_rnk", row_number().over(byFile.orderBy(trim(col(keyCol)))).cast("int"))
       .withColumn("_n_file_violations", count(lit(1)).over(byFile))

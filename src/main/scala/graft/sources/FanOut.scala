@@ -26,15 +26,17 @@ object FanOut {
 
   /** The CSV dialect of Python's `csv` module, which the reference reads
     * and writes with: a quote inside a quoted cell is doubled (`"q ""x"""`),
-    * not backslash-escaped, and cells keep their leading and trailing
-    * spaces. Spark's defaults (escape `\`, whitespace trimmed on write)
-    * would rewrite such cells. Used by the writer's `to_csv` and by the
-    * `from_csv` of [[read]] and [[HeaderScan]].
+    * not backslash-escaped, cells keep their leading and trailing
+    * spaces, and an empty string is written as nothing (`a,,b`, not
+    * `a,"",b`). Spark's defaults (escape `\`, whitespace trimmed on
+    * write, `""` for an empty string) would rewrite such cells. Used by
+    * the writer's `to_csv` and by the `from_csv` of [[HeaderScan]].
     */
   private[sources] val csvDialect: Map[String, String] = Map(
     "escape" -> "\"",
     "ignoreLeadingWhiteSpace" -> "false",
-    "ignoreTrailingWhiteSpace" -> "false")
+    "ignoreTrailingWhiteSpace" -> "false",
+    "emptyValue" -> "")
 
   /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv` and
     * return the keys written, sorted.
@@ -47,7 +49,7 @@ object FanOut {
     * A key containing '/' nests directories (`US/East` →
     * `outDir/US/East/src.csv`) — byte-identical to the reference's
     * `os.path.join(out, key)`, and flagged by the same verify pass in
-    * both systems (the depth-1 read glob won't see it). Callers wanting
+    * both systems (the depth-1 read won't see it). Callers wanting
     * path-safe keys sanitize before writing, as they would there.
     *
     * `encoding` selects the OUTPUT charset and `lineSep` the output
@@ -253,62 +255,33 @@ object FanOut {
 
   /** Read a fan-out layout back: `outDir/{key}/{srcName}.csv` for every
     * key directory, with the key recovered from the directory name (the
-    * content invariant verify_fanout.py checks). All-string schema.
+    * content invariant verify_fanout.py checks) in `_dir_key`.
+    * All-string schema.
     *
-    * Mirrors the verifier's per-file header re-scan (verify_fanout.py:
-    * 69–79) without a per-file driver loop: ONE file's head is scanned for
-    * the prefix/header structure (every file written by [[write]] shares
-    * it), then the whole glob is read as text distributed and the
-    * prefix/header lines are dropped by content. Meta lines don't contain
-    * the key column and the header line's key cell is the column name
-    * itself, so neither can collide with a data row (whose key cell is a
-    * non-blank key value).
+    * Like the reference verifier (verify_fanout.py:69–79), every file's
+    * head is scanned for its own prefix and header
+    * ([[HeaderScan.scanFiles]], in executors) and its data lines are read
+    * from the byte offset the scan found ([[HeaderScan.readFiles]]), so a
+    * data row equal to a meta line stays a data row. The listing is
+    * metadata-only: `outDir`, then each key directory. A listed file
+    * without the key column fails the read.
     *
     * Limitation (inherent to any line-oriented CSV read): quoted cells
     * with embedded newlines aren't reassembled. The reference's BI
-    * exports don't produce them; switch to Spark's `multiLine` CSV
-    * reader per file if a source ever does.
+    * exports don't produce them.
     */
   def read(spark: SparkSession, outDir: String, srcName: String, keyCol: String): DataFrame = {
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val first = fs.listStatus(new Path(outDir)).filter(_.isDirectory)
-      .map(d => new Path(d.getPath, s"$srcName.csv")).find(fs.exists)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no $srcName.csv under $outDir/*/"))
-    val info = HeaderScan.scanHeader(spark, first.toString, keyCol)
-      .getOrElse(throw new IllegalArgumentException(
-        s"key column '$keyCol' not found in $first"))
-    val schema = StructType(info.columns.map(c => StructField(c, StringType)))
-    val prefixSet = info.prefixRows.toSet
-    // srcName is user input: escape glob metacharacters so "data[1]"
-    // reads back literally. The key regex extracts the PARENT DIRECTORY
-    // generically instead of anchoring on srcName — the glob already
-    // restricts the file set, and input_file_name() URI-encodes
-    // characters like '[' so a literal srcName anchor would not match.
-    val srcGlob = srcName.replaceAll("([\\[\\]{}*?\\\\])", "\\\\$1")
-    spark.read.text(s"$outDir/*/$srcGlob.csv")
-      .select(col("value").as("_line"),
-        regexp_extract(input_file_name(), ".*/([^/]+)/[^/]+$", 1).as("_dir_key"))
-      .withColumn("_line", regexp_replace(col("_line"), "^﻿", ""))
-      // Prefix/meta lines are dropped by CONTENT equality: a line-split
-      // text scan has no per-file line offsets, so position-based
-      // skipping (the reference's pandas skiprows) isn't expressible
-      // shuffle-free. Known limitation: a DATA row whose full CSV text
-      // byte-equals a replayed meta line is dropped with it — reachable
-      // only when a key cell equals the meta line's first cell AND every
-      // other cell matches; the reference's dated report headers don't
-      // collide with data rows in practice. A caller needing exactness
-      // under adversarial keys should read per-file with positional skip.
-      .filter(!col("_line").isin(prefixSet.toSeq: _*))
-      .select(from_csv(col("_line"), schema, csvDialect).as("r"),
-        // input_file_name is URI-percent-encoded; url_decode additionally
-        // treats '+' as space (form encoding), so protect literal '+'
-        // (never raw in a URI) by pre-escaping it
-        url_decode(regexp_replace(col("_dir_key"), "\\+", "%2B")).as("_dir_key"))
-      .select(col("r.*") +: Seq(col("_dir_key")): _*)
-      // null-SAFE header drop: a ragged data row null-fills the key cell,
-      // and `null =!= header` is null (row silently dropped) — but that
-      // row is exactly a content violation the verifier must see
-      .filter(coalesce(col(keyCol), lit("")) =!= keyCol)
+    val name = s"$srcName.csv"
+    val files = fs.listStatus(new Path(outDir)).filter(_.isDirectory)
+      .flatMap(d => fs.listStatus(d.getPath).filter(f => f.isFile && f.getPath.getName == name))
+      .map(_.getPath.toString).toSeq
+    require(files.nonEmpty, s"no $name under $outDir/*/")
+    val infos = HeaderScan.scanFiles(spark, files, keyCol)
+    val keyless = files.diff(infos.map(_.path))
+    require(keyless.isEmpty, s"key column '$keyCol' not found in ${keyless.mkString(", ")}")
+    HeaderScan.readFiles(spark, infos)
+      .withColumn("_path", HeaderScan.parentName(col("_path")))
+      .withColumnRenamed("_path", "_dir_key")
   }
 }

@@ -4,9 +4,9 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileSplit, TextInputFormat}
+import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputFormat}
 import org.apache.spark.rdd.HadoopRDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * zipWithIndex pass, no extra job, and files sharing a schema read as
   * ONE multi-path scan ([[readDir]]), so the plan grows with the number
   * of distinct schemas, not the number of files.
+  *
+  * The program's one reader for prefixed CSVs: fan-out inputs and
+  * outputs ([[FanOut.read]], the verifier) all go through [[scanFiles]]
+  * and [[readFiles]], which take any file name literally.
   */
 object HeaderScan {
 
@@ -37,13 +41,16 @@ object HeaderScan {
     * @param dataStart byte offset of the first data line (prefix + header
     *                  bytes, including BOM and CR/LF — measured raw, so
     *                  the offset matches `TextInputFormat`'s line keys)
+    * @param encoding  the charset whose decoding found the key column;
+    *                  the data read decodes the file's lines with it
     */
   final case class HeaderInfo(
       path: String,
       prefixRows: Seq[String], // verbatim meta lines above the header
       columns: Seq[String], // trimmed header cells
       skipLines: Int, // prefix + header line count
-      dataStart: Long)
+      dataStart: Long,
+      encoding: String)
 
   /** Minimal CSV line splitter for the header scan (quoted cells with
     * embedded commas supported; the distributed data path uses Spark's
@@ -89,29 +96,28 @@ object HeaderScan {
       keyCol: String = defaultKeyCol,
       maxScanLines: Int = 100,
       encoding: String = "UTF-8"): Option[HeaderInfo] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = new java.io.BufferedInputStream(fs.open(p))
-    try scanStream(in, file, keyCol, maxScanLines, encoding)
-    finally in.close()
+    val fs = new Path(file).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val found = scanHead(fs, file, keyCol, maxScanLines, encoding)
+    if (found.isEmpty) warnKeyless(file, keyCol)
+    found
   }
 
-  /** The head-scan core over an already-open stream — ONE body shared
-    * by the driver-side [[scanHeader]] and the executor-side
-    * [[scanDirDistributed]], so the two paths cannot diverge on offset
-    * arithmetic (HeaderScanSpec asserts their equality on real files).
+  private def warnKeyless(file: String, keyCol: String): Unit =
+    System.err.println(s"[headerscan] WARN: key column '$keyCol' not found in $file — skipping")
+
+  /** The head-scan core — ONE body shared by the driver-side
+    * [[scanHeader]] and the executor-side [[scanFiles]], so the two
+    * paths cannot diverge on offset arithmetic (HeaderScanSpec asserts
+    * their equality on real files).
     */
-  private[sources] def scanStream(
-      rawIn: java.io.InputStream,
+  private def scanHead(
+      fs: org.apache.hadoop.fs.FileSystem,
       file: String,
       keyCol: String,
       maxScanLines: Int,
       encoding: String): Option[HeaderInfo] = {
-    val in = rawIn match {
-      case b: java.io.BufferedInputStream => b
-      case other => new java.io.BufferedInputStream(other)
-    }
-    {
+    val in = new java.io.BufferedInputStream(fs.open(new Path(file)))
+    try {
       val cs = java.nio.charset.Charset.forName(encoding)
       val prefix = ArrayBuffer.empty[String]
       var found: Option[HeaderInfo] = None
@@ -142,91 +148,106 @@ object HeaderScan {
           pos += consumed
           val cells = splitCsvLine(line).map(_.trim)
           if (cells.contains(keyCol))
-            found = Some(HeaderInfo(file, prefix.toSeq, cells, prefix.length + 1, pos))
+            found = Some(HeaderInfo(file, prefix.toSeq, cells, prefix.length + 1, pos, encoding))
           else { prefix += line; n += 1 }
         }
       }
-      if (found.isEmpty)
-        System.err.println(s"[headerscan] WARN: key column '$keyCol' not found in $file — skipping")
       found
-    }
+    } finally in.close()
   }
 
-  /** ONE distributed scan over same-schema files: every line keyed by
-    * its byte offset (TextInputFormat), lines before the file's
-    * `dataStart` dropped per split — shuffle-free, job-free until an
-    * action, and one scan node regardless of file count. Adds `_src`
-    * (source file name, README.md:54–58).
-    *
-    * All `infos` must share `columns` (the head's schema is used).
-    * Paths must not contain commas (TextInputFormat's path-list
-    * separator — same limit the reference's flat-dir layout has).
+  /** The data lines of `infos`' files as (`_path`, `_line`): one
+    * multi-path `TextInputFormat` scan keys every line with its byte
+    * offset, and lines before the file's `dataStart` are dropped per
+    * split (no shuffle, no job until an action); each file decodes with
+    * its own `encoding`. Paths reach Hadoop as a `Path` list with glob
+    * metacharacters escaped (`data[1].csv` is no pattern for
+    * `data1.csv`; `setInputPaths` escapes commas). Hadoop's hidden-file
+    * filter still refuses `.`/`_`-prefixed names.
     */
-  private def readGroup(
-      spark: SparkSession,
-      infos: Seq[HeaderInfo],
-      encoding: String): DataFrame = {
-    require(infos.nonEmpty)
-    val schema = StructType(infos.head.columns.map(c => StructField(c, StringType)))
+  private def dataLines(spark: SparkSession, infos: Seq[HeaderInfo]): DataFrame = {
     // qualify before keying: a relative caller path must land on the same
     // key as the fully-qualified FileSplit path the executors see
     val hconf = spark.sparkContext.hadoopConfiguration
-    val starts = infos.map { i =>
+    val paths = infos.map { i =>
       val p = new Path(i.path)
-      p.getFileSystem(hconf).makeQualified(p).toUri.getPath -> i.dataStart
-    }.toMap
-    val bStarts = spark.sparkContext.broadcast(starts)
-    val enc = encoding
+      p.getFileSystem(hconf).makeQualified(p)
+    }
+    val byPath = spark.sparkContext.broadcast(paths.zip(infos).map { case (p, i) =>
+      p.toUri.getPath -> (i.dataStart, i.encoding)
+    }.toMap)
+    val job = new JobConf(hconf)
+    FileInputFormat.setInputPaths(job, paths.map(p =>
+      new Path(p.toString.replaceAll("([\\[\\]{}*?\\\\])", "\\\\$1"))): _*)
     val rdd = spark.sparkContext
-      .hadoopFile[LongWritable, Text, TextInputFormat](infos.map(_.path).mkString(","))
+      .hadoopRDD(job, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
       .asInstanceOf[HadoopRDD[LongWritable, Text]]
       .mapPartitionsWithInputSplit({ (split, it) =>
         val fp = split.asInstanceOf[FileSplit].getPath
-        val start = bStarts.value(fp.toUri.getPath)
-        val fname = fp.getName
+        val (start, enc) = byPath.value(fp.toUri.getPath)
         val cs = java.nio.charset.Charset.forName(enc)
+        val path = fp.toString
         // Text/LongWritable objects are reused by the record reader —
         // materialize before the iterator advances
         it.filter(_._1.get() >= start)
-          .map { case (_, t) => (new String(t.getBytes, 0, t.getLength, cs), fname) }
+          .map { case (_, t) => (path, new String(t.getBytes, 0, t.getLength, cs)) }
       }, preservesPartitioning = true)
-    import spark.implicits._
-    rdd.toDF("_line", "_src")
-      .select(from_csv(col("_line"), schema, FanOut.csvDialect).as("r"), col("_src"))
-      .select(col("r.*"), col("_src"))
+    spark.createDataFrame(rdd).toDF("_path", "_line")
   }
 
-  /** Distributed read of one header-scanned file: all-string schema from
-    * the discovered header, prefix + header dropped by byte offset.
-    *
-    * Non-UTF-8 encodings (the reference's `--encoding` flag,
-    * fan_out_by_storeid.py:57) decode each line's raw bytes with the
-    * given charset — valid for any ASCII-newline-compatible charset.
+  /** Read header-scanned files ([[scanFiles]], [[scanDir]]) with ONE
+    * distributed scan per distinct header, unioned by name (missing
+    * columns null-filled): the plan grows with the number of headers, not
+    * of files. Cells are all `StringType`; every row carries its file's
+    * path in `_path`. Groups are ordered by their first file, so the
+    * column order is deterministic.
     */
-  def readFile(spark: SparkSession, info: HeaderInfo, encoding: String = "UTF-8"): DataFrame =
-    readGroup(spark, Seq(info), encoding).drop("_src")
+  def readFiles(spark: SparkSession, infos: Seq[HeaderInfo]): DataFrame = {
+    require(infos.nonEmpty, "readFiles: no scanned files")
+    infos.groupBy(_.columns).values.toSeq.sortBy(_.map(_.path).min).map { g =>
+      val schema = StructType(g.head.columns.map(StructField(_, StringType)))
+      dataLines(spark, g)
+        .select(from_csv(col("_line"), schema, FanOut.csvDialect).as("r"), col("_path"))
+        .select(col("r.*"), col("_path"))
+    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+  }
 
-  /** Scan every `*.csv` in a flat directory, skipping files without the
-    * key column. The driver touches ONLY the file listing; the per-file
-    * head-reads run in EXECUTORS ([[scanDirDistributed]]) — at the
-    * reference's ~60 files the difference is noise, at a million-file
-    * lake the driver-serial head-read loop (one round-trip per file)
-    * was the §4 bottleneck. Results are byte-identical to the
-    * driver-side [[scanHeader]] per file: both run [[scanStream]].
+  /** The file name of a `_path` value. */
+  def fileName(path: Column): Column = substring_index(path, "/", -1)
+
+  /** The name of the directory holding a `_path` value's file. */
+  def parentName(path: Column): Column =
+    substring_index(substring_index(path, "/", -2), "/", 1)
+
+  /** `_path` replaced in place by `_src`, its file name (README.md:54–58). */
+  private def withSrc(df: DataFrame): DataFrame =
+    df.withColumn("_path", fileName(col("_path"))).withColumnRenamed("_path", "_src")
+
+  /** Distributed read of one header-scanned file: all-string schema from
+    * the discovered header, prefix + header dropped by byte offset, lines
+    * decoded with the charset the scan matched (the reference's
+    * `--encoding` flag, fan_out_by_storeid.py:57).
+    */
+  def readFile(spark: SparkSession, info: HeaderInfo): DataFrame =
+    readFiles(spark, Seq(info)).drop("_path")
+
+  /** Scan every `*.csv` under `dir` ([[listCsvFiles]], then
+    * [[scanFiles]]), skipping files without the key column.
     */
   def scanDir(
       spark: SparkSession,
       dir: String,
       keyCol: String = defaultKeyCol,
       encoding: String = "UTF-8"): Seq[HeaderInfo] =
-    scanDirDistributed(spark, dir, keyCol, encoding)
+    scanFiles(spark, listCsvFiles(spark, dir), keyCol, Seq(encoding))
 
   private val globMeta = Set('*', '?', '[', ']', '{', '}')
 
   private def isCsvLoose(name: String): Boolean =
     name.toLowerCase.endsWith(".csv")
 
-  private def isHidden(name: String): Boolean =
+  /** Hadoop's hidden-name rule: its input formats skip these files. */
+  private[graft] def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
   /** Lake-convention test: hidden (`.`/`_`-prefixed) names are system
@@ -356,42 +377,39 @@ object HeaderScan {
     (direct ++ walked).distinct.sorted
   }
 
-  /** Executor-side directory head-scan: the driver lists the directory
-    * (metadata-only) and parallelizes the path list; each task opens
-    * its files and runs the shared [[scanStream]] head-read, returning
-    * (path, prefix, columns, dataStart) — file-count-sized metadata,
-    * safe to collect (the listing itself was already driver-memory-
-    * sized). Warn-and-skip for keyless files happens in the task (the
-    * warning lands in that executor's stderr; locally, the same
-    * console). Output is sorted by path — same deterministic order as
-    * the old driver-serial loop.
+  /** Executor-side head-scan of `files`, sorted by path: each task runs
+    * the shared [[scanHead]] on its files and returns file-count-sized
+    * metadata, safe to collect (the listing itself was already
+    * driver-memory-sized). The charsets of `encodings` are tried in
+    * order; the first whose decoding finds the key column is kept in
+    * `HeaderInfo.encoding`. Files where none does are warned (in that
+    * executor's stderr) and skipped.
     *
     * Scale shape: head-reads are embarrassingly parallel (one bounded
-    * ≤ maxScanLines read per file, no shuffle); partition count is
-    * capped so a small directory doesn't schedule empty tasks. At a
-    * million files this is the schema-inference pattern Spark's own
-    * CSV/JSON readers use for their sampling pass.
+    * ≤ maxScanLines read per file, no shuffle), the schema-inference
+    * pattern of Spark's own CSV/JSON readers; partition count is capped
+    * so a small file list doesn't schedule empty tasks.
     */
-  def scanDirDistributed(
+  def scanFiles(
       spark: SparkSession,
-      dir: String,
+      files: Seq[String],
       keyCol: String = defaultKeyCol,
-      encoding: String = "UTF-8",
+      encodings: Seq[String] = Seq("UTF-8"),
       maxScanLines: Int = 100): Seq[HeaderInfo] = {
-    val files = listCsvFiles(spark, dir)
     if (files.isEmpty) return Seq.empty
     val bconf = spark.sparkContext.broadcast(
       new FanOut.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val (k, enc, msl) = (keyCol, encoding, maxScanLines)
+    val (k, encs, msl) = (keyCol, encodings, maxScanLines)
     val nPart = math.max(1,
       math.min(files.length, spark.sparkContext.defaultParallelism))
     val infos = spark.sparkContext.parallelize(files, nPart)
       .mapPartitions { it =>
         val conf = bconf.value.value
         it.flatMap { f =>
-          val fp = new Path(f)
-          val in = new java.io.BufferedInputStream(fp.getFileSystem(conf).open(fp))
-          try scanStream(in, f, k, msl, enc) finally in.close()
+          val fs = new Path(f).getFileSystem(conf)
+          val found = encs.iterator.map(scanHead(fs, f, k, msl, _)).collectFirst { case Some(i) => i }
+          if (found.isEmpty) warnKeyless(f, k)
+          found
         }
       }
       .collect().toSeq.sortBy(_.path)
@@ -410,15 +428,12 @@ object HeaderScan {
       keyCol: String = defaultKeyCol,
       encoding: String = "UTF-8"): Seq[(HeaderInfo, DataFrame)] =
     scanDir(spark, dir, keyCol, encoding)
-      .map(info => info -> readGroup(spark, Seq(info), encoding))
+      .map(info => info -> withSrc(readFiles(spark, Seq(info))))
 
-  /** Scan + read + union a directory (missing columns null-filled).
-    *
-    * Files are GROUPED by their discovered header: each distinct column
-    * list becomes one multi-path scan, so at 10k+ files the plan holds a
-    * handful of scan nodes instead of 10k unioned single-file reads.
-    * For alias-divergent schemas that must be resolved per file before
-    * unioning, use [[readDirFrames]].
+  /** Scan + read + union a directory ([[readFiles]]: one scan per
+    * distinct header, missing columns null-filled), each row tagged with
+    * its source file name in `_src`. For alias-divergent schemas that
+    * must be resolved per file before unioning, use [[readDirFrames]].
     */
   def readDir(
       spark: SparkSession,
@@ -427,10 +442,6 @@ object HeaderScan {
       encoding: String = "UTF-8"): DataFrame = {
     val infos = scanDir(spark, dir, keyCol, encoding)
     require(infos.nonEmpty, s"no readable CSVs with key column '$keyCol' in $dir")
-    // deterministic union order: groups sorted by their first file, so
-    // the output column order doesn't depend on hash-map iteration
-    infos.groupBy(_.columns).values.toSeq.sortBy(_.head.path)
-      .map(g => readGroup(spark, g, encoding))
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    withSrc(readFiles(spark, infos))
   }
 }

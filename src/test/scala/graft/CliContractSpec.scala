@@ -44,11 +44,15 @@ class CliContractSpec extends AnyFunSuite {
     runMain("graft.cli.VerifyFanoutMain",
       "--input-dir", in.toString, "--output-dir", out.toString)
 
-  /** Generated input (one file carries a meta row) and its fan-out. */
+  /** Generated input (one file carries a meta row), plus one file whose
+    * store keys hold glob metacharacters and a comma, and its fan-out.
+    */
   private lazy val fannedOut: (Path, Path) = {
     val in = Files.createTempDirectory("cli_in")
     CsvGen.generate(in, CsvGen.Config(nFiles = 4, minRows = 20, maxRows = 60,
       nStores = 5, seed = 3))
+    Files.writeString(in.resolve("glob_keys.csv"),
+      s"$S,v\ns[1],1\ns1,2\n\"s{a,b}*?\",3\ns[1],4\n")
     val out = Files.createTempDirectory("cli_out").resolve("out")
     val (code, log) = runMain("graft.cli.FanOutMain",
       "--input-dir", in.toString, "--output-dir", out.toString)
@@ -73,9 +77,37 @@ class CliContractSpec extends AnyFunSuite {
 
   test("a clean fan-out verifies with exit 0") {
     val (in, out) = fannedOut
+    assert(Files.isRegularFile(out.resolve("s[1]/glob_keys.csv")))
+    assert(Files.isRegularFile(out.resolve("s{a,b}*?/glob_keys.csv")))
     val (code, log) = verify(in, out)
     assert(code == 0, log)
     assert(log.contains("[OK] fan-out verified"), log)
+  }
+
+  test("big5 in and out (the reference's parity mode) verifies with exit 0") {
+    val in = Files.createTempDirectory("cli_b5_in")
+    Files.write(in.resolve("b5.csv"),
+      s"報表年度,2025\n$S,城市\ns1,台北\ns2,高雄\ns1,門市\n"
+        .getBytes(java.nio.charset.Charset.forName("big5")))
+    val out = Files.createTempDirectory("cli_b5_out").resolve("out")
+    val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
+      "--input-dir", in.toString, "--output-dir", out.toString,
+      "--encoding", "big5", "--output-encoding", "big5")
+    assert(fanCode == 0, fanLog)
+    val (code, log) = runMain("graft.cli.VerifyFanoutMain",
+      "--input-dir", in.toString, "--output-dir", out.toString, "--encoding", "big5")
+    assert(code == 0, log)
+    assert(log.contains("[OK] fan-out verified"), log)
+  }
+
+  test("a stray keyless CSV in one store dir fails verify, printed by path") {
+    val (in, _) = fannedOut
+    val out = copyOut()
+    val stray = outputFiles(out).head.resolveSibling("stray.csv")
+    Files.writeString(stray, "a,b\n1,2\n")
+    val (code, log) = verify(in, out)
+    assert(code == 1, log)
+    assert(log.contains(stray.toString) && log.contains("total violations=1"), log)
   }
 
   test("a deleted output file fails verify with exit 1") {

@@ -73,7 +73,7 @@ class FanOutPropertySpec extends SparkSpec {
     val info = HeaderScan.scanHeader(spark, in.resolve("latin.csv").toString,
       keyCol = "store", encoding = "ISO-8859-1")
     assert(info.isDefined && info.get.columns.contains("libellé"))
-    val rows = HeaderScan.readFile(spark, info.get, "ISO-8859-1")
+    val rows = HeaderScan.readFile(spark, info.get)
       .orderBy("store").collect()
     assert(rows.map(_.getString(1)).toSeq == Seq("café", "naïve"))
   }

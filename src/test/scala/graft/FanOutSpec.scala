@@ -40,13 +40,15 @@ class FanOutSpec extends SparkSpec {
 
   test("FanOut.write → read round-trip: layout, prefix replay, BOM, blanks dropped") {
     val out = tmpDir("fanout").toString
+    // the last row's CSV text is byte-equal to the replayed meta line
     val df = Seq(
       ("s1", "a", "1"), ("s2", "b", "2"), ("s1", "c", "3"),
-      ("  ", "dropped", "4"), (" s2 ", "d", "5"))
+      ("  ", "dropped", "4"), (" s2 ", "d", "5"),
+      ("Established At Year", "2025", "2024"))
       .toDF(S, "v1", "v2")
     val keys = FanOut.write(df, S, out, "srcA",
       prefixRows = Seq("Established At Year,2025,2024"), bom = true)
-    assert(keys == Seq("s1", "s2"))
+    assert(keys == Seq("Established At Year", "s1", "s2"))
     assertOnlyLayout(out)
 
     // exact {key}/{src}.csv layout
@@ -64,13 +66,15 @@ class FanOutSpec extends SparkSpec {
 
     // read back: key recovered from directory, content invariant holds
     val back = FanOut.read(spark, out, "srcA", S)
-    assert(back.count() == 4) // blank-key row dropped, " s2 " trimmed
+    assert(back.count() == 5) // blank-key row dropped, " s2 " trimmed
+    // the prefix is skipped by position, so the meta-equal row is kept
+    assert(back.filter(col(S) === "Established At Year").count() == 1)
     assert(VerifyOps.contentViolations(back, S).count() == 0)
     val sum = VerifyOps.summary(
       back.select(col(S), lit("srcA").as("src")), back, S, Seq("srcA"))
       .collect()(0)
     assert(sum.getLong(0) == 0 && sum.getLong(1) == 0 &&
-      sum.getLong(2) == 0 && sum.getLong(3) == 2)
+      sum.getLong(2) == 0 && sum.getLong(3) == 3)
   }
 
   test("output-encoding big5 + CRLF: byte-identical to the reference's contract") {
@@ -167,15 +171,20 @@ class FanOutSpec extends SparkSpec {
     assert(df.filter(col(S) === "s1").orderBy("note").select("name", "note")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
-    FanOut.write(df.drop("_src"), S, out, "d", prefixRows = info.prefixRows)
+    // plus an empty-string cell, which csv.writer writes as nothing
+    // (Spark's default would write `""`)
+    val withEmpty = df.drop("_src")
+      .unionByName(Seq(("s1", "", "e")).toDF(S, "name", "note"))
+    FanOut.write(withEmpty, S, out, "d", prefixRows = info.prefixRows)
     assertOnlyLayout(out)
     assert(Files.readString(java.nio.file.Paths.get(s"$out/s1/d.csv")) ==
-      (s"$S,name,note" +: dataLines.take(2)).mkString("", "\n", "\n"))
-    // and the read side parses the same dialect back
+      (s"$S,name,note" +: dataLines.take(2) :+ "s1,,e").mkString("", "\n", "\n"))
+    // and the read side parses the same dialect back (an unquoted empty
+    // cell reads as null)
     val back = FanOut.read(spark, out, "d", S)
       .filter(col(S) === "s1").orderBy("note").select("name", "note")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(back == Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
+    assert(back == Seq(("a\\b", "c,d"), (null, "e"), (" padded ", "q \"x\"")))
   }
 
   test("special-character keys round-trip: space, percent, plus, hash") {

@@ -72,7 +72,7 @@ class HeaderScanPropertySpec extends SparkSpec {
     // one keyless file: must be skipped by BOTH paths
     Files.writeString(dir.resolve("zz_nokey.csv"), "a,b\n1,2\n")
 
-    val dist = HeaderScan.scanDirDistributed(spark, dir.toString,
+    val dist = HeaderScan.scanDir(spark, dir.toString,
       keyCol = "store")
     assert(dist.length == expected.length)
     val byName = dist.map(i => new java.io.File(i.path).getName -> i).toMap
@@ -83,7 +83,7 @@ class HeaderScanPropertySpec extends SparkSpec {
       assert(info.columns == header, s"$name: header")
       assert(info.prefixRows.length == metas.length, s"$name: prefix count")
       assert(info.skipLines == metas.length + 1, s"$name: skipLines")
-      // driver-side scan agrees field-for-field (shared scanStream body)
+      // driver-side scan agrees field-for-field (shared scanHead body)
       val drv = HeaderScan.scanHeader(spark,
         dir.resolve(name).toString, keyCol = "store").get
       assert(drv.dataStart == info.dataStart &&

@@ -69,12 +69,12 @@ class HeaderScanSpec extends SparkSpec {
     Files.writeString(dir.resolve("c.csv"), "store,v\na,1\n")
     Files.writeString(dir.resolve("d.csv"), "m1,x\nm2,y\nstore,w\nb,2\n")
     Files.writeString(dir.resolve("nokey.csv"), "foo,bar\n1,2\n")
-    val dist = HeaderScan.scanDirDistributed(spark, dir.toString, keyCol = "store")
+    val dist = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
     val driver = Seq("a.csv", "b.csv", "c.csv", "d.csv", "nokey.csv")
       .flatMap(f => HeaderScan.scanHeader(spark, dir.resolve(f).toString,
         keyCol = "store"))
     // same files found (keyless skipped), same offsets, same headers —
-    // the executor path and the driver path run the SAME scanStream,
+    // the executor path and the driver path run the SAME scanHead,
     // and this pins that they cannot drift
     assert(dist.map(_.path.stripPrefix("file:")).sorted ==
       driver.map(_.path).sorted)
@@ -131,7 +131,7 @@ class HeaderScanSpec extends SparkSpec {
     assert(j == Seq("j1.csv")) // j2.CSV not matched by lowercase glob
 
     // distributed ≡ driver pin extended over the nested tree
-    val dist = HeaderScan.scanDirDistributed(spark, dir.toString, keyCol = "store")
+    val dist = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
     val driver = all.flatMap(rel => HeaderScan.scanHeader(
       spark, dir.resolve(rel).toString, keyCol = "store"))
     assert(dist.size == driver.size && dist.size == 5)
@@ -184,6 +184,23 @@ class HeaderScanSpec extends SparkSpec {
       ("s2", "2", null, "a1.csv"),
       ("s3", "3", null, "a2.csv"),
       ("s4", null, "4", "b.csv")))
+  }
+
+  test("file names with glob metacharacters or commas read literally") {
+    val dir = tmpDir("literal")
+    // data[1].csv is also a glob matching data1.csv, and a comma once
+    // split the path list: each file must read as exactly itself
+    Files.writeString(dir.resolve("data1.csv"), "store,v\na,1\n")
+    Files.writeString(dir.resolve("data[1].csv"), "meta\nstore,v\nb,2\n")
+    Files.writeString(dir.resolve("x,y.csv"), "store,v\nc,3\n")
+    Files.writeString(dir.resolve("{p}*?.csv"), "store,v\nd,4\n")
+    val want = Seq(("data1.csv", "a"), ("data[1].csv", "b"), ("x,y.csv", "c"),
+      ("{p}*?.csv", "d")).sorted
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_src", "store").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val frames = HeaderScan.readDirFrames(spark, dir.toString, keyCol = "store")
+    assert(frames.flatMap(f => rows(f._2)).sorted == want)
+    assert(rows(HeaderScan.readDir(spark, dir.toString, keyCol = "store")).sorted == want)
   }
 
   test("property: random endings × BOM × prefix depth round-trip exactly") {
