@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -20,11 +20,9 @@ import graft.sources.{CsvGen, FanOut, HeaderScan}
   *   - [[PresenceMain]]    ≙ verify_store_presence.py:66–71
   *   - [[CsvGenMain]]      ≙ csv_gen.py:74–115
   *
-  * Known deviation: output CSVs are always UTF-8 (with optional BOM);
-  * `--encoding` governs INPUT decoding only. The reference writes
-  * outputs in the input encoding — BI tools consuming the outputs
-  * expect utf-8-sig regardless (README.md:95–99), which is what the BOM
-  * flag produces.
+  * Output charsets: [[FanOutMain]]'s `--output-encoding` (UTF-8 unless
+  * set); [[AggregateMain]] writes utf-8-sig, which the BI tools
+  * consuming its outputs expect (README.md:95–99).
   */
 private[cli] object Args {
 
@@ -41,17 +39,6 @@ private[cli] object Args {
 
   def required(m: Map[String, String], k: String): String =
     m.getOrElse(k, throw new IllegalArgumentException(s"missing required --$k"))
-
-  /** Source name from a CSV file name: strip ONE trailing extension,
-    * case-insensitively ("x.CSV.csv" → "x.CSV", never "x" — a chained
-    * stripSuffix would double-strip and collide distinct inputs).
-    */
-  def srcBase(fileName: String): String = fileName.replaceAll(csvExt, "")
-
-  /** [[srcBase]] of a file-name column, by the same regex. */
-  def srcBase(fileName: Column): Column = regexp_replace(fileName, csvExt, "")
-
-  private val csvExt = "(?i)\\.csv$"
 
   /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
     * aggregate_by_store.py:123 etc.): header row taken as-is,
@@ -79,18 +66,9 @@ object FanOutMain {
     val outEnc = a.getOrElse("output-encoding", "UTF-8")
     val key = a.getOrElse("key", HeaderScan.defaultKeyCol)
     val spark = GraftSession("graft-fanout")
-    val frames = HeaderScan.readDirFrames(spark, in, key, enc)
-    val names = frames.map { case (info, _) => Args.srcBase(new Path(info.path).getName) }
-    // two inputs collapsing to one src name would silently overwrite
-    // each other's {key}/{src}.csv — refuse rather than lose data
-    require(names.distinct.length == names.length,
-      s"input files collide on source names: " +
-        names.groupBy(identity).collect { case (n, g) if g.length > 1 => n }.mkString(", "))
-    frames.zip(names).foreach { case ((info, df), srcName) =>
-      println(s"[info] processing: ${info.path}")
-      FanOut.write(df.drop("_src"), key, out, srcName,
-        prefixRows = info.prefixRows, encoding = outEnc)
-    }
+    val infos = HeaderScan.scanDir(spark, in, key, enc)
+    infos.foreach(i => println(s"[info] processing: ${i.path}"))
+    FanOut.writeFiles(spark, infos, key, out, encoding = outEnc)
     spark.stop()
   }
 }
@@ -132,13 +110,13 @@ object VerifyFanoutMain {
     // key-less input files are warn-skipped by the fan-out itself
     // (fan_out_by_storeid.py:28–30), so both sides use the same
     // HeaderScan ingest (same --encoding), one scan per header group
-    val srcOf = (p: Path) => Args.srcBase(p.getName)
+    val srcOf = (p: Path) => FanOut.srcOf(p.getName)
     val inputs = HeaderScan.scanDir(spark, in, key, enc)
     val srcNames = inputs.map(i => srcOf(new Path(i.path)))
     val expected =
       if (inputs.isEmpty) Seq.empty[(String, String)].toDF(key, "src")
       else HeaderScan.readFiles(spark, inputs)
-        .select(trim(col(key)).as(key), Args.srcBase(HeaderScan.fileName(col("_path"))).as("src"))
+        .select(trim(col(key)).as(key), FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("src"))
         .filter(col(key) =!= "")
 
     // pass 1 — file sets (driver metadata listing → anti-join check)
@@ -181,7 +159,7 @@ object VerifyFanoutMain {
       if (infos.isEmpty) Seq.empty
       else VerifyOps.violationSamples(HeaderScan.readFiles(spark, infos).select(col(key),
           HeaderScan.parentName(col("_path")).as("_dir_key"),
-          Args.srcBase(HeaderScan.fileName(col("_path"))).as("_src")), key, 5)
+          FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("_src")), key, 5)
         .select(col("_src"), col("_dir_key"), col("_rnk"), col(key), col("_n_file_violations"))
         .as[(String, String, Int, String, Long)].collect().toSeq
     val (samplesOf, unreadableOf) = (samples.groupBy(_._1), unreadable.groupBy(srcOf))

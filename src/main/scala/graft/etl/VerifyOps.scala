@@ -24,22 +24,16 @@ object VerifyOps {
     * (key, src); `expectedSrcs` is the full source-file list (small →
     * broadcast cross join).
     *
-    * By default the key universe comes from `present` — the reference's
-    * semantics (verify_fanout.py iterates EXISTING output store dirs, so
-    * a store whose output vanished entirely is equally invisible to it;
-    * its `verify_store_presence` covers that from the source side). Pass
-    * `expectedKeys` (one column, the key) derived from the SOURCE data
-    * for the stronger total-loss-detecting check.
+    * The key universe comes from `present` — the reference's semantics
+    * (verify_fanout.py iterates EXISTING output store dirs, so a store
+    * whose output vanished entirely is equally invisible to it; its
+    * `verify_store_presence` covers that from the source side).
     */
-  def fileSetCheck(present: DataFrame, keyCol: String, expectedSrcs: Seq[String],
-                   expectedKeys: Option[DataFrame] = None): DataFrame = {
+  def fileSetCheck(present: DataFrame, keyCol: String, expectedSrcs: Seq[String]): DataFrame = {
     val spark = present.sparkSession
     import spark.implicits._
-    val keys = expectedKeys
-      .map(_.toDF(keyCol).select(col(keyCol)).distinct())
-      .getOrElse(present.select(col(keyCol)).distinct())
-    fileSetCheckPairs(present,
-      keys.crossJoin(broadcast(expectedSrcs.toDF("src"))), keyCol)
+    fileSetCheckPairs(present, present.select(col(keyCol)).distinct()
+      .crossJoin(broadcast(expectedSrcs.toDF("src"))), keyCol)
   }
 
   /** [[fileSetCheck]] against an explicit expected (key, src) pair set —

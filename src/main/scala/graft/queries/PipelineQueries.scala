@@ -97,11 +97,11 @@ object PipelineQueries {
     "q16_header_scan_ingest",
     (s, d) => {
       val dir = fabricateMessyCsvs(s, d)
-      // alias resolution is per-file: the exports disagree on the
-      // store-name header, so canonicalize before the union
-      val named = HeaderScan.readDirFrames(s, dir, "商店序號")
-        .map { case (_, df) =>
-          SchemaResolver.ensureStoreNameCol(df)
+      // the exports disagree on the store-name header: canonicalize it
+      // per header group (aliases depend only on the header), then union
+      val named = HeaderScan.scanDir(s, dir, "商店序號").groupBy(_.columns).values
+        .map { g =>
+          SchemaResolver.ensureStoreNameCol(HeaderScan.readFiles(s, g))
             .select(col("商店序號"), col("門市名稱"), col("region"))
         }
         .reduce(_ unionByName _)

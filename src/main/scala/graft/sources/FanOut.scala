@@ -2,25 +2,26 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Partitioned fan-out sink (reference fan_out_by_storeid.py:32–48;
   * SURVEY.md §2.1 S5/S6): split rows of each source into
-  * `out/{key}/{srcName}.csv`, optionally replaying meta prefix rows and a
+  * `out/{key}/{src}.csv`, optionally replaying meta prefix rows and a
   * UTF-8 BOM (`utf-8-sig`) at the top of every output file.
   *
-  * The reference is one loop: `csv.reader` feeds one `csv.writer` per
-  * output file. Here each row becomes `(key, seq, to_csv(cells))`, rows
-  * are hash-partitioned by key (a key never spans two tasks) and sorted
-  * by (key, seq) within each partition, and every task streams its rows
-  * with ONE open file at a time: prefix + header once per key, then the
-  * key's rows in input order. The writer holds one row (the sort
+  * The reference loops over input files, `csv.reader` feeding one
+  * `csv.writer` per output file. Here every row of every source becomes
+  * `(key, src, seq, to_csv(cells))` in ONE job, hash-partitioned by key
+  * (a key never spans two tasks) and sorted by (key, src, seq), and each
+  * task streams ONE open file at a time: the source's prefix + header,
+  * then its rows in input order. The writer holds one row (the sort
   * spills), so memory stays bounded like the reference's (SURVEY.md §4);
-  * no output byte goes through the driver, whose only filesystem work
-  * is the orphan-temp sweep over the key directories written.
+  * no output byte goes through the driver, whose only filesystem work is
+  * the orphan-temp sweep over the key directories written.
   */
 object FanOut {
 
@@ -37,6 +38,18 @@ object FanOut {
     "ignoreLeadingWhiteSpace" -> "false",
     "ignoreTrailingWhiteSpace" -> "false",
     "emptyValue" -> "")
+
+  /** The `{src}` of an input file in the layout: its file name less ONE
+    * trailing `.csv`, case-insensitively ("x.CSV.csv" → "x.CSV", never
+    * "x" — a chained stripSuffix would double-strip and collide distinct
+    * inputs).
+    */
+  def srcOf(fileName: String): String = fileName.replaceAll(csvExt, "")
+
+  /** [[srcOf]] of a file-name column, by the same regex. */
+  def srcOf(fileName: Column): Column = regexp_replace(fileName, csvExt, "")
+
+  private val csvExt = "(?i)\\.csv$"
 
   /** Fan out `df` by `keyCol` into `outDir/{key}/{srcName}.csv` and
     * return the keys written, sorted.
@@ -73,48 +86,97 @@ object FanOut {
     require(!bom || java.nio.charset.Charset.forName(encoding) ==
       java.nio.charset.StandardCharsets.UTF_8,
       s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
-    val spark = df.sparkSession
     val names = df.columns.toSeq
+    val head = (if (bom) "\uFEFF" else "") +
+      prefixRows.map(_ + lineSep).mkString + csvHeader(df.sparkSession, names) + lineSep
+    writeRows(Seq((df, names, lit(srcName))), keyCol, Map(srcName -> head),
+      outDir, encoding, lineSep)
+  }
+
+  /** Fan out header-scanned files ([[HeaderScan.scanFiles]]) into
+    * `outDir/{key}/{src}.csv`, `src` being [[srcOf]] the file name, in ONE
+    * write: the files are read one scan per distinct header
+    * ([[HeaderScan.readFiles]]), and each output file starts with its own
+    * source's prefix rows and its header group's header. Returns the keys
+    * written, sorted. `encoding` and `lineSep` are those of [[write]].
+    */
+  def writeFiles(
+      spark: SparkSession,
+      infos: Seq[HeaderScan.HeaderInfo],
+      keyCol: String,
+      outDir: String,
+      encoding: String = "UTF-8",
+      lineSep: String = "\n"): Seq[String] = {
+    val srcs = infos.map(i => srcOf(new Path(i.path).getName))
+    // two inputs collapsing to one src name would silently overwrite
+    // each other's {key}/{src}.csv — refuse rather than lose data
+    val collide = srcs.diff(srcs.distinct).distinct
+    require(collide.isEmpty, s"input files collide on source names: ${collide.mkString(", ")}")
+    if (infos.isEmpty) return Nil
+    val groups = infos.groupBy(_.columns).toSeq
+    val header = groups.map { case (names, _) => names -> (csvHeader(spark, names) + lineSep) }.toMap
+    val heads = srcs.zip(infos).map { case (src, i) =>
+      src -> (i.prefixRows.map(_ + lineSep).mkString + header(i.columns))
+    }.toMap
+    writeRows(groups.map { case (names, g) =>
+      (HeaderScan.readFiles(spark, g), names, srcOf(HeaderScan.fileName(col("_path"))))
+    }, keyCol, heads, outDir, encoding, lineSep)
+  }
+
+  /** Write the `names` cells of each `(frame, names, src)` part, keyed by
+    * `keyCol`; `heads` maps each source to its BOM + prefix + header
+    * (shipped to the tasks once). Returns the keys written, sorted.
+    */
+  private def writeRows(
+      parts: Seq[(DataFrame, Seq[String], Column)],
+      keyCol: String,
+      heads: Map[String, String],
+      outDir: String,
+      encoding: String,
+      lineSep: String): Seq[String] = {
     def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
     val key = trim(quoted(keyCol))
-    val cells = names.map(c => if (c == keyCol) key.as(c) else quoted(c))
-    val head = (if (bom) "\uFEFF" else "") +
-      prefixRows.map(_ + lineSep).mkString + csvHeader(spark, names) + lineSep
-    // seq is taken before the shuffle, so sorting by (k, seq) restores
-    // each key's input order
-    val rows = df
-      .select(key.as("k"), monotonically_increasing_id().as("seq"),
-        to_csv(struct(cells: _*), csvDialect.asJava).as("line"))
+    // seq is taken before the shuffle, so sorting by (k, src, seq)
+    // restores each source's input order
+    val rows = parts
+      .map { case (df, names, src) =>
+        val cells = names.map(c => if (c == keyCol) key.as(c) else quoted(c))
+        df.select(key.as("k"), src.as("src"), monotonically_increasing_id().as("seq"),
+          to_csv(struct(cells: _*), csvDialect.asJava).as("line"))
+      }
+      .reduce(_ union _)
       .filter(col("k").isNotNull && col("k") =!= "")
       // repartition, not rebalance: AQE may split a rebalance partition,
-      // and a key must stay in one task to get one file
+      // and a key must stay in one task to get one file per source
       .repartition(col("k"))
-      .sortWithinPartitions("k", "seq")
-      .select("k", "line")
-      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val (out, src, enc, sep) = (outDir, srcName, encoding, lineSep)
-    val keys = rows
-      .mapPartitions(it => writeSorted(conf.value, out, src, head, enc, sep, it))(Encoders.STRING)
-      .collect().toSeq.sorted
-    // Sweep orphaned attempt temps (crashed or speculation-killed
-    // attempts that never renamed). Done HERE, after the job has
-    // returned and every key holds a committed dest — a task-side
-    // sweep could delete a live twin's tmp mid-write and leave the
-    // key fileless. Driver cost is metadata-only (one listing per
-    // key; no glob, so keys with glob metachars stay safe).
+      .sortWithinPartitions("k", "src", "seq")
+      .select("k", "src", "line")
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING))
+    val spark = rows.sparkSession
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val bheads = spark.sparkContext.broadcast(heads)
+    val written = rows
+      .mapPartitions(it => writeSorted(conf.value, outDir, bheads.value, encoding, lineSep, it))(
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .collect().toSeq
+    bheads.destroy()
+    // Sweep the temps of crashed or speculation-killed attempts HERE,
+    // after the job, when every (key, src) holds a committed dest: a
+    // task-side sweep could delete a live twin's tmp mid-write. One
+    // listing per key (no glob: glob metachars in keys stay safe); only
+    // the temps of the sources written under that key go.
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    keys.foreach { k =>
-      fs.listStatus(new Path(s"$outDir/$k"))
-        .filter { st =>
-          val n = st.getPath.getName
-          n.contains(s"$srcName.csv.") &&
-            (n.endsWith(".tmp") || n.endsWith(".tmp.crc"))
-        }
-        .foreach(st => fs.delete(st.getPath, false))
+    written.groupBy(_._1).foreach { case (k, ws) =>
+      val srcs = ws.map(_._2).toSet
+      fs.listStatus(new Path(s"$outDir/$k")).map(_.getPath)
+        .filter(p => TmpName.unapplySeq(p.getName).exists(m => srcs(m.head)))
+        .foreach(fs.delete(_, false))
     }
-    keys
+    written.map(_._1).distinct.sorted
   }
+
+  /** An attempt temp: `.{src}.csv.{attempt}.tmp`. */
+  private val TmpName = """\.(.+)\.csv\.[^.]+\.tmp""".r
 
   /** The header line, rendered by the same `to_csv` as the rows over a
     * one-row local relation (evaluated on the driver, no Spark job).
@@ -126,27 +188,11 @@ object FanOut {
       .collect().head.getString(0)
   }
 
-  /** Hadoop `Configuration` isn't `java.io.Serializable`; it IS a Hadoop
-    * `Writable`, so ship it to tasks via writeObject/readFields (the same
-    * trick Spark uses internally for its own config broadcasts).
-    */
-  private[sources] class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** Task-side writer over one partition's `(key, csv line)` rows, grouped
-    * by key: one open file at a time, `head` (BOM, prefix, header) once
-    * per key, then the key's rows. Returns the keys it committed. Runs on
-    * executors — keep driver state out of here.
+  /** Task-side writer over one partition's `(key, src, csv line)` rows,
+    * grouped by (key, src): one open file at a time, the source's head
+    * (BOM, prefix, header) once per file, then its rows. Returns the
+    * (key, src) files it committed. Runs on executors — keep driver state
+    * out of here.
     *
     * Retry-safe: each attempt writes to an attempt-unique hidden temp
     * file and renames into place, so a retried or speculatively
@@ -156,12 +202,16 @@ object FanOut {
   private def writeSorted(
       conf: org.apache.hadoop.conf.Configuration,
       outDir: String,
-      srcName: String,
-      head: String,
+      heads: Map[String, String],
       encoding: String,
       lineSep: String,
-      rows: Iterator[(String, String)]): Iterator[String] = {
-    val fs = new Path(outDir).getFileSystem(conf)
+      rows: Iterator[(String, String, String)]): Iterator[(String, String)] = {
+    // around the local FS's checksums: `.crc` sidecars are no part of the
+    // reference's plain `{key}/{src}.csv` layout
+    val fs = new Path(outDir).getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
     // Strict encode: the reference Python opens the sink with the
     // target codec and raises UnicodeEncodeError on any unmappable
     // character (fan_out_by_storeid.py's `open(..., encoding=enc)`
@@ -184,28 +234,35 @@ object FanOut {
               s"matching the reference's UnicodeEncodeError contract): " +
               s"${s.take(120)}", e)
       }
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId().toString)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val written = Seq.newBuilder[String]
-    var key: String = null
+    // Local file names go through the JVM's file-name charset, which
+    // follows the locale (ASCII under LC_ALL=C) and writes '?' for what
+    // it cannot encode: distinct keys would share one directory
+    val nameEnc = Option.when(fs.getUri.getScheme == "file")(java.nio.charset.Charset
+      .forName(sys.props.getOrElse("sun.jnu.encoding", "UTF-8")).newEncoder())
+    val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+    val written = Seq.newBuilder[(String, String)]
+    var key, src: String = null
     var dest, tmp: Path = null
     var out: java.io.OutputStream = null
     def commit(): Unit = if (out != null) {
       out.close(); out = null
       commitFile(fs, tmp, dest)
-      written += key
+      written += key -> src
     }
     try {
-      rows.foreach { case (k, line) =>
-        if (k != key) {
+      rows.foreach { case (k, s, line) =>
+        if (k != key || s != src) {
           commit()
-          key = k
-          dest = new Path(s"$outDir/$k/$srcName.csv")
-          tmp = new Path(dest.getParent, s".${dest.getName}.$attempt.tmp")
-          fs.mkdirs(dest.getParent)
-          out = fs.create(tmp, true)
-          out.write(encodeStrict(k, head))
+          key = k; src = s
+          val name = s"$k/$s.csv"
+          nameEnc.filterNot(_.canEncode(name)).foreach(e => throw new java.io.IOException(
+            s"fan-out: file name '$name' is not representable in the platform " +
+              s"file-name charset ${e.charset}, so distinct keys would share one " +
+              "directory; run under a UTF-8 locale (e.g. LC_ALL=C.UTF-8)"))
+          dest = new Path(s"$outDir/$name")
+          tmp = new Path(dest.getParent, s".$s.csv.$attempt.tmp")
+          out = fs.create(tmp, true) // creates the key directory
+          out.write(encodeStrict(k, heads(s)))
         }
         out.write(encodeStrict(k, line + lineSep))
       }
@@ -222,9 +279,7 @@ object FanOut {
     * pre-existing dest when the rename refuses to clobber. A committed
     * destination is therefore never removed before its replacement
     * exists, so two live speculative/retried attempts can't strand the
-    * key fileless (each attempt's tmp stays private to it — orphans from
-    * crashed attempts are swept by the driver in [[write]] AFTER the
-    * job, never by a peer task that might race a still-writing twin).
+    * key fileless (orphan temps are swept in [[writeRows]], after the job).
     */
   private def commitFile(fs: FileSystem, tmp: Path, dest: Path): Unit = {
     if (!fs.rename(tmp, dest)) {
@@ -239,18 +294,6 @@ object FanOut {
             s"fan-out: rename $tmp -> $dest failed")
       }
     }
-    dropCrcSidecar(fs, dest)
-    dropCrcSidecar(fs, tmp)
-  }
-
-  /** Delete the local-FS checksum sidecar (`.{name}.crc`) so the layout
-    * is exactly the reference's plain `{key}/{src}.csv` files — a stale
-    * sidecar would also fail later Hadoop reads of an output a user
-    * edited in place. No-op on filesystems without sidecars (HDFS, S3).
-    */
-  private def dropCrcSidecar(fs: FileSystem, dest: Path): Unit = {
-    val crc = new Path(dest.getParent, s".${dest.getName}.crc")
-    if (fs.exists(crc)) fs.delete(crc, false)
   }
 
   /** Read a fan-out layout back: `outDir/{key}/{srcName}.csv` for every

@@ -9,6 +9,7 @@ import org.apache.spark.rdd.HadoopRDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Header-scanning CSV ingestion (reference fan_out_by_storeid.py:14–30,
   * verify_fanout.py:67–86; SURVEY.md §2.1 S2).
@@ -18,19 +19,19 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * contains the key column (`商店序號` by default). Files without the key
   * column are warned and skipped, not failed (fan_out_by_storeid.py:28–30).
   *
-  * Scale split: the *scan* touches only the head of each file (bounded
-  * driver-side metadata pass over ≤ maxScanLines lines per file — the same
-  * role as schema inference) and records the BYTE OFFSET where data
-  * starts; the *data read* is fully distributed and shuffle-free:
+  * Scale split: the *scan* touches only the head of each file (a bounded
+  * read of ≤ maxScanLines lines per file, in executors — [[scanFiles]];
+  * the same role as schema inference) and records the BYTE OFFSET where
+  * data starts; the *data read* is fully distributed and shuffle-free:
   * `TextInputFormat` keys every line with its byte offset, so dropping
   * the prefix+header is a per-split `offset >= dataStart` filter — no
   * zipWithIndex pass, no extra job, and files sharing a schema read as
   * ONE multi-path scan ([[readDir]]), so the plan grows with the number
   * of distinct schemas, not the number of files.
   *
-  * The program's one reader for prefixed CSVs: fan-out inputs and
-  * outputs ([[FanOut.read]], the verifier) all go through [[scanFiles]]
-  * and [[readFiles]], which take any file name literally.
+  * The program's one reader for prefixed CSVs: fan-out inputs
+  * ([[FanOut.writeFiles]]) and outputs ([[FanOut.read]], the verifier)
+  * go through [[scanFiles]] and [[readFiles]] (file names taken literally).
   */
 object HeaderScan {
 
@@ -219,10 +220,6 @@ object HeaderScan {
   def parentName(path: Column): Column =
     substring_index(substring_index(path, "/", -2), "/", 1)
 
-  /** `_path` replaced in place by `_src`, its file name (README.md:54–58). */
-  private def withSrc(df: DataFrame): DataFrame =
-    df.withColumn("_path", fileName(col("_path"))).withColumnRenamed("_path", "_src")
-
   /** Distributed read of one header-scanned file: all-string schema from
     * the discovered header, prefix + header dropped by byte offset, lines
     * decoded with the charset the scan matched (the reference's
@@ -360,7 +357,7 @@ object HeaderScan {
         // contract stays loud at the DRIVER — executor stderr is
         // invisible on a real cluster
         val bconf = spark.sparkContext.broadcast(
-          new FanOut.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+          new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
         val nPart = math.min(dirPaths.length, spark.sparkContext.defaultParallelism)
         val res = spark.sparkContext.parallelize(dirPaths, nPart)
           .map { d =>
@@ -398,8 +395,7 @@ object HeaderScan {
       maxScanLines: Int = 100): Seq[HeaderInfo] = {
     if (files.isEmpty) return Seq.empty
     val bconf = spark.sparkContext.broadcast(
-      new FanOut.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val (k, encs, msl) = (keyCol, encodings, maxScanLines)
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val nPart = math.max(1,
       math.min(files.length, spark.sparkContext.defaultParallelism))
     val infos = spark.sparkContext.parallelize(files, nPart)
@@ -407,8 +403,9 @@ object HeaderScan {
         val conf = bconf.value.value
         it.flatMap { f =>
           val fs = new Path(f).getFileSystem(conf)
-          val found = encs.iterator.map(scanHead(fs, f, k, msl, _)).collectFirst { case Some(i) => i }
-          if (found.isEmpty) warnKeyless(f, k)
+          val found = encodings.iterator.map(scanHead(fs, f, keyCol, maxScanLines, _))
+            .collectFirst { case Some(i) => i }
+          if (found.isEmpty) warnKeyless(f, keyCol)
           found
         }
       }
@@ -417,23 +414,10 @@ object HeaderScan {
     infos
   }
 
-  /** Scan + read every `*.csv` in a directory, one DataFrame per readable
-    * file (schemas are inconsistent by design — csv_gen.py:45–56 — so
-    * callers normalize/alias-resolve per file before any union). Each
-    * frame carries its source file name in `_src` (README.md:54–58).
-    */
-  def readDirFrames(
-      spark: SparkSession,
-      dir: String,
-      keyCol: String = defaultKeyCol,
-      encoding: String = "UTF-8"): Seq[(HeaderInfo, DataFrame)] =
-    scanDir(spark, dir, keyCol, encoding)
-      .map(info => info -> withSrc(readFiles(spark, Seq(info))))
-
   /** Scan + read + union a directory ([[readFiles]]: one scan per
     * distinct header, missing columns null-filled), each row tagged with
-    * its source file name in `_src`. For alias-divergent schemas that
-    * must be resolved per file before unioning, use [[readDirFrames]].
+    * its source file name in `_src`. To resolve aliases before a union,
+    * read per header group: [[scanDir]], group by `columns`, [[readFiles]].
     */
   def readDir(
       spark: SparkSession,
@@ -442,6 +426,7 @@ object HeaderScan {
       encoding: String = "UTF-8"): DataFrame = {
     val infos = scanDir(spark, dir, keyCol, encoding)
     require(infos.nonEmpty, s"no readable CSVs with key column '$keyCol' in $dir")
-    withSrc(readFiles(spark, infos))
+    readFiles(spark, infos)
+      .withColumn("_path", fileName(col("_path"))).withColumnRenamed("_path", "_src")
   }
 }

@@ -12,16 +12,22 @@ import graft.sources.{CsvGen, HeaderScan}
 /** The CLI exit contract of the reference's verifier
   * (verify_fanout.py:187–188): `FanOutMain` output passes
   * `VerifyFanoutMain` with exit 0, and a removed output file or an edited
-  * key cell makes it exit 1. Each main runs in a child JVM (this JVM's
-  * class path and options), so the real `sys.exit` is observed and the
-  * mains' `spark.stop()` cannot stop the shared test session.
+  * key cell makes it exit 1. Also `PresenceMain`'s per-dataset report
+  * (verify_store_presence.py:35–63). Each main runs in a child JVM (this
+  * JVM's class path and options), so the real `sys.exit` is observed and
+  * the mains' `spark.stop()` cannot stop the shared test session.
   */
 class CliContractSpec extends AnyFunSuite {
 
   private val S = HeaderScan.defaultKeyCol
 
-  /** Run `main` in a child JVM; returns its exit code and its output. */
-  private def runMain(main: String, args: String*): (Int, String) = {
+  /** Run `main` in a child JVM, with `env` added to this JVM's
+    * environment; returns its exit code and its output.
+    */
+  private def runMain(
+      main: String,
+      args: Seq[String],
+      env: Map[String, String] = Map.empty): (Int, String) = {
     val log = Files.createTempFile("cli_contract", ".log")
     log.toFile.deleteOnExit()
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
@@ -32,6 +38,7 @@ class CliContractSpec extends AnyFunSuite {
     val pb = new ProcessBuilder(cmd.asJava)
       .redirectErrorStream(true).redirectOutput(log.toFile)
     pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.environment().putAll(env.asJava)
     val p = pb.start()
     if (!p.waitFor(300, TimeUnit.SECONDS)) {
       p.destroyForcibly()
@@ -42,7 +49,7 @@ class CliContractSpec extends AnyFunSuite {
 
   private def verify(in: Path, out: Path): (Int, String) =
     runMain("graft.cli.VerifyFanoutMain",
-      "--input-dir", in.toString, "--output-dir", out.toString)
+      Seq("--input-dir", in.toString, "--output-dir", out.toString))
 
   /** Generated input (one file carries a meta row), plus one file whose
     * store keys hold glob metacharacters and a comma, and its fan-out.
@@ -55,7 +62,7 @@ class CliContractSpec extends AnyFunSuite {
       s"$S,v\ns[1],1\ns1,2\n\"s{a,b}*?\",3\ns[1],4\n")
     val out = Files.createTempDirectory("cli_out").resolve("out")
     val (code, log) = runMain("graft.cli.FanOutMain",
-      "--input-dir", in.toString, "--output-dir", out.toString)
+      Seq("--input-dir", in.toString, "--output-dir", out.toString))
     assert(code == 0, log)
     (in, out)
   }
@@ -91,11 +98,11 @@ class CliContractSpec extends AnyFunSuite {
         .getBytes(java.nio.charset.Charset.forName("big5")))
     val out = Files.createTempDirectory("cli_b5_out").resolve("out")
     val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
-      "--input-dir", in.toString, "--output-dir", out.toString,
-      "--encoding", "big5", "--output-encoding", "big5")
+      Seq("--input-dir", in.toString, "--output-dir", out.toString,
+        "--encoding", "big5", "--output-encoding", "big5"))
     assert(fanCode == 0, fanLog)
     val (code, log) = runMain("graft.cli.VerifyFanoutMain",
-      "--input-dir", in.toString, "--output-dir", out.toString, "--encoding", "big5")
+      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--encoding", "big5"))
     assert(code == 0, log)
     assert(log.contains("[OK] fan-out verified"), log)
   }
@@ -132,5 +139,57 @@ class CliContractSpec extends AnyFunSuite {
     val (code, log) = verify(in, out)
     assert(code == 1, log)
     assert(log.contains("total violations=1") && log.contains("[FAIL]"), log)
+  }
+
+  test("non-ASCII keys under a non-UTF-8 file-name charset fail the fan-out") {
+    // under LC_ALL=C the JVM names files in ASCII: both stores would map
+    // to one '??' directory, one file overwriting the other
+    val in = Files.createTempDirectory("cli_c_in")
+    Files.writeString(in.resolve("tw.csv"), s"$S,v\n台北,1\n高雄,2\n")
+    val out = Files.createTempDirectory("cli_c_out").resolve("out")
+    val (code, log) = runMain("graft.cli.FanOutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString), Map("LC_ALL" -> "C"))
+    assert(code != 0, log)
+    assert(log.contains("platform file-name charset") && log.contains("LC_ALL=C.UTF-8"), log)
+  }
+
+  test("presence: rows per dataset, NONE for a dataset without the store, warn for a missing file") {
+    // the dataset files have non-ASCII names: write and probe them under
+    // a UTF-8 locale
+    val utf8 = Map("LC_ALL" -> "C.UTF-8")
+    val in = Files.createTempDirectory("cli_presence")
+    val (fixCode, fixLog) = runMain("graft.PresenceFixture",
+      Seq(in.resolve("aggregate").toString), utf8)
+    assert(fixCode == 0, fixLog)
+    val (code, log) = runMain("graft.cli.PresenceMain",
+      Seq("--store", "s9", "--input-dir", in.toString), utf8)
+    assert(code == 0, log)
+    Seq(
+      "[OK ] 23-1 / 23-2 / 24-1 / 24-2（區間推薦人綁定）: rows=2",
+      "[NONE] 23-1 / 24-1（累計推薦人綁定）: rows=0",
+      "[OK ] 23-1 / 24-1（會員總數）: rows=1",
+      "[OK ] 24-2（門市首購人數－月份）: rows=3",
+      "[OK ] 25-1 / 25-2（門市首購人數－門市）: rows=1",
+      "[warn] 25-1 / 25-2（各門市累計綁定）: file not found (各門市累計綁定人數.csv)")
+      .foreach(line => assert(log.linesIterator.contains(line), s"no line '$line' in:\n$log"))
+  }
+}
+
+/** Writes five of PresenceMain's six datasets into the directory
+  * `args(0)`; the probe store `s9` has 2, 0, 1, 3 and 1 rows in them (one
+  * key padded). Runs in a child JVM under a UTF-8 locale: the file names
+  * are not ASCII, and a JVM under the C locale cannot name them.
+  */
+object PresenceFixture {
+  def main(args: Array[String]): Unit = {
+    val S = HeaderScan.defaultKeyCol
+    val dir = Files.createDirectories(Paths.get(args(0)))
+    Seq(
+      "區間綁定推薦人人數.csv" -> s"$S,年度\ns9,2025\ns1,2025\n s9 ,2024\n",
+      "累計至今綁定推薦人人數.csv" -> s"$S,累計至今推薦人綁定人數\ns1,5\ns2,7\n",
+      "14-1.會員成長趨勢_新增註冊會員數卡片.csv" -> s"$S,總會員數\ns9,40\ns1,20\n",
+      "門市首購人數_月份.csv" -> s"$S,月份,門市首購人數\ns9,1,3\ns9,2,4\ns9,3,5\n",
+      "門市首購人數_門市.csv" -> s"$S,門市,門市首購人數\ns2,br_1,1\ns9,br_2,2\n")
+      .foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
   }
 }

@@ -22,13 +22,13 @@ class FanOutPropertySpec extends SparkSpec {
     val files = graft.sources.CsvGen.generate(in,
       graft.sources.CsvGen.Config(nFiles = 4, seed = 7))
 
-    val frames = HeaderScan.readDirFrames(spark, in.toString)
-    assert(frames.length == 4) // every generated file carries the key col
+    val infos = HeaderScan.scanDir(spark, in.toString)
+    assert(infos.length == 4) // every generated file carries the key col
+    FanOut.writeFiles(spark, infos, "商店序號", out)
 
-    frames.foreach { case (info, df) =>
+    infos.foreach { info =>
       val src = info.path.split('/').last.stripSuffix(".csv")
-      FanOut.write(df.drop("_src"), "商店序號", out, src,
-        prefixRows = info.prefixRows)
+      val df = HeaderScan.readFile(spark, info)
       val back = FanOut.read(spark, out, src, "商店序號")
 
       // content invariant (verify_fanout.py:52–102): key cell == dir name
@@ -55,9 +55,9 @@ class FanOutPropertySpec extends SparkSpec {
     }
     // expected = only sources that actually contain the store → compute
     // per-store expected sets from the inputs themselves
-    val expected = frames.flatMap { case (info, df) =>
+    val expected = infos.flatMap { info =>
       val src = info.path.split('/').last.stripSuffix(".csv")
-      df.select(trim(col("商店序號")).as("k")).distinct()
+      HeaderScan.readFile(spark, info).select(trim(col("商店序號")).as("k")).distinct()
         .collect().map(r => (r.getString(0), src))
     }
     assert(present.toSet == expected.toSet)

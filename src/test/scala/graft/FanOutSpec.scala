@@ -167,14 +167,14 @@ class FanOutSpec extends SparkSpec {
       "s2,plain,z")
     Files.writeString(dir.resolve("d.csv"),
       (s"$S,name,note" +: dataLines).mkString("", "\n", "\n"))
-    val Seq((info, df)) = HeaderScan.readDirFrames(spark, dir.toString)
+    val Seq(info) = HeaderScan.scanDir(spark, dir.toString)
+    val df = HeaderScan.readFile(spark, info)
     assert(df.filter(col(S) === "s1").orderBy("note").select("name", "note")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
     // plus an empty-string cell, which csv.writer writes as nothing
     // (Spark's default would write `""`)
-    val withEmpty = df.drop("_src")
-      .unionByName(Seq(("s1", "", "e")).toDF(S, "name", "note"))
+    val withEmpty = df.unionByName(Seq(("s1", "", "e")).toDF(S, "name", "note"))
     FanOut.write(withEmpty, S, out, "d", prefixRows = info.prefixRows)
     assertOnlyLayout(out)
     assert(Files.readString(java.nio.file.Paths.get(s"$out/s1/d.csv")) ==
@@ -301,9 +301,9 @@ class FanOutSpec extends SparkSpec {
     assert(info.columns == Seq(S, "name, quoted", "金額"))
     assert(HeaderScan.scanHeader(spark, dir.resolve("nokey.csv").toString).isEmpty)
 
-    val frames = HeaderScan.readDirFrames(spark, dir.toString)
-    assert(frames.length == 1) // nokey.csv warn-skipped
-    val rows = frames.head._2.orderBy(S).collect()
+    val infos = HeaderScan.scanDir(spark, dir.toString)
+    assert(infos.length == 1) // nokey.csv warn-skipped
+    val rows = HeaderScan.readFile(spark, infos.head).orderBy(S).collect()
     assert(rows.length == 2)
     assert(rows(0).getString(1) == "Ace, Inc") // quoted comma survives
     assert(rows(0).getString(2) == "1,234") // stays string — typing is lazy
@@ -314,8 +314,7 @@ class FanOutSpec extends SparkSpec {
     val out = tmpDir("h2fout").toString
     Files.writeString(dir.resolve("export.csv"),
       s"meta,row\n$S,月份,總綁定\ns1,01,10\ns2,202502,20\ns1,3,30\n")
-    val Seq((info, df)) = HeaderScan.readDirFrames(spark, dir.toString)
-    FanOut.write(df.drop("_src"), S, out, "export", prefixRows = info.prefixRows)
+    FanOut.writeFiles(spark, HeaderScan.scanDir(spark, dir.toString), S, out)
     assertOnlyLayout(out)
     val back = FanOut.read(spark, out, "export", S)
     assert(back.count() == 3)
@@ -323,5 +322,81 @@ class FanOutSpec extends SparkSpec {
     val firstLine = Files.readAllLines(
       java.nio.file.Paths.get(s"$out/s1/export.csv")).get(0)
     assert(firstLine == "meta,row") // prefix replayed into every store file
+  }
+
+  test("writeFiles: files sharing a header keep their own prefix and rows, in one write") {
+    val dir = tmpDir("wf_in")
+    val out = tmpDir("wf_out").toString
+    // same header, prefix depths 0 and 2, overlapping keys; values out of
+    // sorted order, so only input order passes
+    val a = Seq(("k1", "9"), ("k2", "1"), ("k1", "3"), ("k1", "2"))
+    val b = Seq(("k2", "8"), ("k1", "7"), ("k2", "0"), ("k3", "5"))
+    def body(rows: Seq[(String, String)]) = rows.map { case (k, v) => s"$k,$v\n" }.mkString
+    Files.writeString(dir.resolve("a.csv"), s"$S,v\n" + body(a))
+    Files.writeString(dir.resolve("b.csv"), s"Report,2025\nSource,BI\n$S,v\n" + body(b))
+    val keys = FanOut.writeFiles(spark, HeaderScan.scanDir(spark, dir.toString), S, out)
+    assert(keys == Seq("k1", "k2", "k3"))
+    assertOnlyLayout(out)
+    def expected(src: String, prefix: String, rows: Seq[(String, String)], k: String) =
+      s"$k/$src.csv" -> (prefix + s"$S,v\n" + body(rows.filter(_._1 == k)))
+    val want = (Seq("k1", "k2").map(expected("a", "", a, _)) ++
+      Seq("k1", "k2", "k3").map(expected("b", "Report,2025\nSource,BI\n", b, _))).toMap
+    val root = java.nio.file.Paths.get(out)
+    val got = Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+    assert(got == want)
+  }
+
+  /** Jobs `body` runs, counted by a SparkListener. The listener bus is
+    * asynchronous but ordered, so a marker job before and one after
+    * `body` bound its jobs once the second marker has arrived.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-begin")
+      body
+      marker("jobs-end")
+      while (groups.take() != "jobs-begin") {}
+      Iterator.continually(groups.take()).takeWhile(_ != "jobs-end").length
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("writeFiles: the job count does not grow with the number of files") {
+    def fanOut(nFiles: Int): Int = {
+      val dir = tmpDir(s"wf_jobs$nFiles")
+      (0 until nFiles).foreach(f => Files.writeString(dir.resolve(s"f$f.csv"),
+        s"meta,$f\n$S,v\n" + (0 until 20).map(i => s"k${i % 5},$f-$i\n").mkString))
+      val out = tmpDir(s"wf_jobs_out$nFiles").toString
+      val jobs = jobsOf(FanOut.writeFiles(spark, HeaderScan.scanDir(spark, dir.toString), S, out))
+      assert(Files.list(java.nio.file.Paths.get(out, "k0")).count() == nFiles)
+      jobs
+    }
+    val (two, eight) = (fanOut(2), fanOut(8))
+    assert(two > 0 && two == eight, s"2 files: $two jobs, 8 files: $eight jobs")
+  }
+
+  test("orphan-temp sweep removes only the temps of the sources written") {
+    val out = tmpDir("fanout_sweep")
+    val key = Files.createDirectories(out.resolve("s1"))
+    // a crashed attempt of source a, and a temp of source xa, whose name
+    // also contains "a.csv."
+    val mine = Seq(".a.csv.17.tmp", "..a.csv.17.tmp.crc")
+    val other = ".xa.csv.18.tmp"
+    (mine :+ other).foreach(n => Files.writeString(key.resolve(n), "partial"))
+    FanOut.write(Seq(("s1", "1")).toDF(S, "v"), S, out.toString, "a")
+    assert(Files.list(key).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("a.csv", other))
   }
 }

@@ -198,8 +198,6 @@ class HeaderScanSpec extends SparkSpec {
       ("{p}*?.csv", "d")).sorted
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("_src", "store").collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val frames = HeaderScan.readDirFrames(spark, dir.toString, keyCol = "store")
-    assert(frames.flatMap(f => rows(f._2)).sorted == want)
     assert(rows(HeaderScan.readDir(spark, dir.toString, keyCol = "store")).sorted == want)
   }
 
