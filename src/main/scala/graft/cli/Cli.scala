@@ -42,10 +42,13 @@ private[cli] object Args {
 
   /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
     * aggregate_by_store.py:123 etc.): header row taken as-is,
-    * `inferSchema` off so every column is StringType.
+    * `inferSchema` off so every column is StringType. A local name the
+    * JVM cannot spell fails ([[FanOut.requireLocalName]]).
     */
-  def readAllString(spark: SparkSession, path: String): DataFrame =
+  def readAllString(spark: SparkSession, path: String): DataFrame = {
+    FanOut.requireLocalName(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
     spark.read.option("header", "true").csv(path)
+  }
 }
 
 /** `graft.cli.FanOutMain --input-dir I --output-dir O [--encoding E]
@@ -105,11 +108,10 @@ object VerifyFanoutMain {
 
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // expected (store, src) pairs come from the INPUT CONTENT — a store
-    // absent from a source file legitimately has no output for it, and
-    // key-less input files are warn-skipped by the fan-out itself
-    // (fan_out_by_storeid.py:28–30), so both sides use the same
-    // HeaderScan ingest (same --encoding), one scan per header group
+    // expected (store, src) pairs come from the INPUT CONTENT: a store
+    // absent from a source has no output for it, and key-less inputs are
+    // warn-skipped by the fan-out itself (fan_out_by_storeid.py:28–30),
+    // so both sides use the same HeaderScan read (same --encoding)
     val srcOf = (p: Path) => FanOut.srcOf(p.getName)
     val inputs = HeaderScan.scanDir(spark, in, key, enc)
     val srcNames = inputs.map(i => srcOf(new Path(i.path)))
@@ -147,8 +149,9 @@ object VerifyFanoutMain {
     // pass 2 — content invariant over every listed output file, strays
     // included (verify_fanout.py's check_store_no_values), in ONE read:
     // heads scanned in UTF-8 (FanOutMain's default), then --encoding. A
-    // file Hadoop cannot read ('.'/'_' name) or without the key column
-    // cannot satisfy it (the reference's df[key] would throw): one violation
+    // hidden ('.'/'_') name, which no fan-out writes, or a file without
+    // the key column cannot satisfy it (the reference's df[key] would
+    // throw): one violation each
     val infos = HeaderScan.scanFiles(spark,
       listed.filterNot(p => HeaderScan.isHidden(p.getName)).map(_.toString),
       key, Seq("UTF-8", enc).distinct)
@@ -261,6 +264,7 @@ object PresenceMain {
     val datasets = files.flatMap { case (desc, f) =>
       val p = new Path(s"$aggDir/$f")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      FanOut.requireLocalName(fs, f) // else every name reads as missing
       if (fs.exists(p)) Some(desc -> Args.readAllString(spark, p.toString))
       else { println(s"[warn] $desc: file not found ($f)"); None }
     }

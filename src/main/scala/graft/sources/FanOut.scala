@@ -1,11 +1,14 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Partitioned fan-out sink (reference fan_out_by_storeid.py:32–48;
@@ -15,13 +18,14 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The reference loops over input files, `csv.reader` feeding one
   * `csv.writer` per output file. Here every row of every source becomes
-  * `(key, src, seq, to_csv(cells))` in ONE job, hash-partitioned by key
-  * (a key never spans two tasks) and sorted by (key, src, seq), and each
-  * task streams ONE open file at a time: the source's prefix + header,
-  * then its rows in input order. The writer holds one row (the sort
-  * spills), so memory stays bounded like the reference's (SURVEY.md §4);
-  * no output byte goes through the driver, whose only filesystem work is
-  * the orphan-temp sweep over the key directories written.
+  * `(key, src, seq, line)` in ONE job, `line` rendered by [[csvLine]]
+  * before the shuffle, hash-partitioned by key (a key never spans two
+  * tasks) and sorted by (key, src, seq), and each task streams ONE open
+  * file at a time: the source's prefix + header, then its rows in input
+  * order. The writer holds one row (the sort spills), so memory stays
+  * bounded like the reference's (SURVEY.md §4); no output byte goes
+  * through the driver, whose only filesystem work is the orphan-temp
+  * sweep over the key directories written.
   */
 object FanOut {
 
@@ -30,14 +34,50 @@ object FanOut {
     * not backslash-escaped, cells keep their leading and trailing
     * spaces, and an empty string is written as nothing (`a,,b`, not
     * `a,"",b`). Spark's defaults (escape `\`, whitespace trimmed on
-    * write, `""` for an empty string) would rewrite such cells. Used by
-    * the writer's `to_csv` and by the `from_csv` of [[HeaderScan]].
+    * write, `""` for an empty string) would rewrite such cells.
     */
-  private[sources] val csvDialect: Map[String, String] = Map(
+  private val csvDialect: Map[String, String] = Map(
     "escape" -> "\"",
     "ignoreLeadingWhiteSpace" -> "false",
     "ignoreTrailingWhiteSpace" -> "false",
     "emptyValue" -> "")
+
+  private def strings(n: Int) = StructType((0 until n).map(i => StructField(s"c$i", StringType)))
+
+  /** One line → `n` string cells, parsed as `from_csv` parses (PERMISSIVE:
+    * a short row's missing cells and empty cells are null, a long row is
+    * cut to `n`). The result row is reused by the next call.
+    */
+  private[sources] def csvParser(n: Int): String => InternalRow = {
+    val options = new CSVOptions(Map("lineSep" -> "\uFFFF") ++ csvDialect, true, "UTC")
+    val univocity = new UnivocityParser(strings(n), strings(n), options)
+    val parser = new FailureSafeParser[String](univocity.parse(_), PermissiveMode, strings(n),
+      options.columnNameOfCorruptRecord)
+    line => parser.parse(line).next()
+  }
+
+  /** `n` string cells → one line without terminator, as `to_csv` renders. */
+  private def csvLine(n: Int): InternalRow => String = {
+    val gen = new UnivocityGenerator(strings(n), new java.io.CharArrayWriter,
+      new CSVOptions(csvDialect, true, "UTC"))
+    gen.writeToString
+  }
+
+  private def cellsRow(cells: Seq[String]) = InternalRow.fromSeq(cells.map(UTF8String.fromString))
+
+  /** A source's head: its BOM and prefix rows, then `header`'s line. */
+  private def head(pre: String, prefixRows: Seq[String], header: Seq[String], lineSep: String) =
+    pre + prefixRows.map(_ + lineSep).mkString + csvLine(header.length)(cellsRow(header)) + lineSep
+
+  /** Refuse a local file name the JVM's file-name charset (ASCII under
+    * LC_ALL=C) would spell with '?': distinct names would share a file.
+    */
+  def requireLocalName(fs: FileSystem, name: String): Unit = {
+    val cs = java.nio.charset.Charset.forName(sys.props.getOrElse("sun.jnu.encoding", "UTF-8"))
+    if (fs.getUri.getScheme == "file" && !cs.newEncoder().canEncode(name))
+      throw new java.io.IOException(s"file name '$name' is not representable in the " +
+        s"platform file-name charset $cs; run under a UTF-8 locale (e.g. LC_ALL=C.UTF-8)")
+  }
 
   /** The `{src}` of an input file in the layout: its file name less ONE
     * trailing `.csv`, case-insensitively ("x.CSV.csv" → "x.CSV", never
@@ -55,24 +95,21 @@ object FanOut {
     * return the keys written, sorted.
     *
     * Keys are trimmed, and blank/whitespace keys are dropped
-    * (fan_out_by_storeid.py:35–37). Other cells are written verbatim.
+    * (fan_out_by_storeid.py:35–37). Other cells are written verbatim,
+    * non-string ones as their string cast.
     * `prefixRows` (meta rows from [[HeaderScan]]) and `bom` reproduce the
     * reference's per-file prefix replay + utf-8-sig output.
     *
     * A key containing '/' nests directories (`US/East` →
-    * `outDir/US/East/src.csv`) — byte-identical to the reference's
-    * `os.path.join(out, key)`, and flagged by the same verify pass in
-    * both systems (the depth-1 read won't see it). Callers wanting
-    * path-safe keys sanitize before writing, as they would there.
+    * `outDir/US/East/src.csv`), as the reference's `os.path.join(out,
+    * key)` does, and the same verify pass flags it in both systems.
     *
     * `encoding` selects the OUTPUT charset and `lineSep` the output
-    * line terminator (the reference writes output in the input's
-    * encoding — one `--encoding` for both, fan_out_by_storeid.py:14/:42
-    * — and its `csv.writer` terminates rows with CRLF); the defaults
-    * stay UTF-8 + LF (this library's documented normalize stance —
-    * COVERAGE.md). Pass `encoding = "big5", lineSep = "\r\n"` for
-    * byte-identical reference output (FanOutSpec pins it). `bom` is
-    * the utf-8-sig marker and therefore requires UTF-8 output.
+    * line terminator; the defaults stay UTF-8 + LF (COVERAGE.md's
+    * normalize stance). The reference writes its input's encoding
+    * (fan_out_by_storeid.py:14/:42) and CRLF: pass `encoding = "big5",
+    * lineSep = "\r\n"` for byte-identical output (FanOutSpec pins it).
+    * `bom` is the utf-8-sig marker and therefore requires UTF-8 output.
     */
   def write(
       df: DataFrame,
@@ -86,19 +123,26 @@ object FanOut {
     require(!bom || java.nio.charset.Charset.forName(encoding) ==
       java.nio.charset.StandardCharsets.UTF_8,
       s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
+    def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
+    val key = trim(quoted(keyCol))
     val names = df.columns.toSeq
-    val head = (if (bom) "\uFEFF" else "") +
-      prefixRows.map(_ + lineSep).mkString + csvHeader(df.sparkSession, names) + lineSep
-    writeRows(Seq((df, names, lit(srcName))), keyCol, Map(srcName -> head),
+    val cells = names.map(c => if (c == keyCol) key else quoted(c).cast(StringType))
+    import df.sparkSession.implicits._
+    // seq is taken before the shuffle: (src, seq) is the input order
+    val rows = df.select(key, monotonically_increasing_id(), array(cells: _*))
+      .as[(String, Long, Seq[String])].mapPartitions { it =>
+        val line = csvLine(names.length)
+        it.map { case (k, seq, c) => (k, srcName, seq, line(cellsRow(c))) }
+      }.toDF("k", "src", "seq", "line")
+    writeRows(rows, Map(srcName -> head(if (bom) "\uFEFF" else "", prefixRows, names, lineSep)),
       outDir, encoding, lineSep)
   }
 
   /** Fan out header-scanned files ([[HeaderScan.scanFiles]]) into
     * `outDir/{key}/{src}.csv`, `src` being [[srcOf]] the file name, in ONE
-    * write: the files are read one scan per distinct header
-    * ([[HeaderScan.readFiles]]), and each output file starts with its own
-    * source's prefix rows and its header group's header. Returns the keys
-    * written, sorted. `encoding` and `lineSep` are those of [[write]].
+    * write: one [[HeaderScan.scan]] reads all files, and each output file
+    * starts with its own source's prefix rows and header. Returns the
+    * keys written, sorted. `encoding` and `lineSep` are those of [[write]].
     */
   def writeFiles(
       spark: SparkSession,
@@ -113,38 +157,36 @@ object FanOut {
     val collide = srcs.diff(srcs.distinct).distinct
     require(collide.isEmpty, s"input files collide on source names: ${collide.mkString(", ")}")
     if (infos.isEmpty) return Nil
-    val groups = infos.groupBy(_.columns).toSeq
-    val header = groups.map { case (names, _) => names -> (csvHeader(spark, names) + lineSep) }.toMap
-    val heads = srcs.zip(infos).map { case (src, i) =>
-      src -> (i.prefixRows.map(_ + lineSep).mkString + header(i.columns))
-    }.toMap
-    writeRows(groups.map { case (names, g) =>
-      (HeaderScan.readFiles(spark, g), names, srcOf(HeaderScan.fileName(col("_path"))))
-    }, keyCol, heads, outDir, encoding, lineSep)
+    val keyAt = infos.map(_.columns.indexOf(keyCol)).toArray
+    val src = srcs.map(UTF8String.fromString).toArray
+    // seq is the line's byte offset: (src, seq) is each source's input order
+    val rows = HeaderScan.scan(spark, infos,
+      StructType.fromDDL("k string, src string, seq bigint, line string")) { (i, _) =>
+      val line = csvLine(infos(i).columns.length)
+      (offset, parsed) => {
+        val cells = Array.tabulate[Any](parsed.numFields)(parsed.getUTF8String)
+        val k = Option(parsed.getUTF8String(keyAt(i))).map(_.trim()).orNull
+        cells(keyAt(i)) = k
+        InternalRow(k, src(i), offset, UTF8String.fromString(line(new GenericInternalRow(cells))))
+      }
+    }
+    writeRows(rows, srcs.zip(infos).map { case (s, i) =>
+      s -> head("", i.prefixRows, i.columns, lineSep)
+    }.toMap, outDir, encoding, lineSep)
   }
 
-  /** Write the `names` cells of each `(frame, names, src)` part, keyed by
-    * `keyCol`; `heads` maps each source to its BOM + prefix + header
+  /** Write the `line`s of `rows` (`k`, `src`, `seq`, `line`) under
+    * `outDir/{k}/{src}.csv`, in (`src`, `seq`) order; blank keys are
+    * dropped. `heads` maps each source to its BOM + prefix + header
     * (shipped to the tasks once). Returns the keys written, sorted.
     */
   private def writeRows(
-      parts: Seq[(DataFrame, Seq[String], Column)],
-      keyCol: String,
+      rows: DataFrame,
       heads: Map[String, String],
       outDir: String,
       encoding: String,
       lineSep: String): Seq[String] = {
-    def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
-    val key = trim(quoted(keyCol))
-    // seq is taken before the shuffle, so sorting by (k, src, seq)
-    // restores each source's input order
-    val rows = parts
-      .map { case (df, names, src) =>
-        val cells = names.map(c => if (c == keyCol) key.as(c) else quoted(c))
-        df.select(key.as("k"), src.as("src"), monotonically_increasing_id().as("seq"),
-          to_csv(struct(cells: _*), csvDialect.asJava).as("line"))
-      }
-      .reduce(_ union _)
+    val sorted = rows
       .filter(col("k").isNotNull && col("k") =!= "")
       // repartition, not rebalance: AQE may split a rebalance partition,
       // and a key must stay in one task to get one file per source
@@ -155,7 +197,7 @@ object FanOut {
     val spark = rows.sparkSession
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val bheads = spark.sparkContext.broadcast(heads)
-    val written = rows
+    val written = sorted
       .mapPartitions(it => writeSorted(conf.value, outDir, bheads.value, encoding, lineSep, it))(
         Encoders.tuple(Encoders.STRING, Encoders.STRING))
       .collect().toSeq
@@ -178,19 +220,10 @@ object FanOut {
   /** An attempt temp: `.{src}.csv.{attempt}.tmp`. */
   private val TmpName = """\.(.+)\.csv\.[^.]+\.tmp""".r
 
-  /** The header line, rendered by the same `to_csv` as the rows over a
-    * one-row local relation (evaluated on the driver, no Spark job).
-    */
-  private def csvHeader(spark: SparkSession, names: Seq[String]): String = {
-    val schema = StructType(names.indices.map(i => StructField(s"c$i", StringType)))
-    spark.createDataFrame(java.util.List.of(Row.fromSeq(names)), schema)
-      .select(to_csv(struct(schema.fieldNames.toSeq.map(col): _*), csvDialect.asJava))
-      .collect().head.getString(0)
-  }
-
   /** Task-side writer over one partition's `(key, src, csv line)` rows,
-    * grouped by (key, src): one open file at a time, the source's head
-    * (BOM, prefix, header) once per file, then its rows. Returns the
+    * grouped by (key, src): one open file at a time (its name checked by
+    * [[requireLocalName]]), the source's head (BOM, prefix, header) once
+    * per file, then its rows. Returns the
     * (key, src) files it committed. Runs on executors — keep driver state
     * out of here.
     *
@@ -212,13 +245,9 @@ object FanOut {
       case c: ChecksumFileSystem => c.getRawFileSystem
       case f => f
     }
-    // Strict encode: the reference Python opens the sink with the
-    // target codec and raises UnicodeEncodeError on any unmappable
-    // character (fan_out_by_storeid.py's `open(..., encoding=enc)`
-    // default errors='strict'). Java's String.getBytes(Charset) instead
-    // REPLACEs with '?' — silent corruption. REPORT restores the loud
-    // failure contract; the message carries the key so a 1000-task run
-    // points at the offending partition, not a stack of anonymous bytes.
+    // Strict encode, as the reference's `open(..., encoding=enc)` raises
+    // UnicodeEncodeError (String.getBytes would write '?'); the message
+    // carries the key, pointing at the offending partition.
     val strictEnc = java.nio.charset.Charset.forName(encoding).newEncoder()
       .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
       .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
@@ -234,11 +263,6 @@ object FanOut {
               s"matching the reference's UnicodeEncodeError contract): " +
               s"${s.take(120)}", e)
       }
-    // Local file names go through the JVM's file-name charset, which
-    // follows the locale (ASCII under LC_ALL=C) and writes '?' for what
-    // it cannot encode: distinct keys would share one directory
-    val nameEnc = Option.when(fs.getUri.getScheme == "file")(java.nio.charset.Charset
-      .forName(sys.props.getOrElse("sun.jnu.encoding", "UTF-8")).newEncoder())
     val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
     val written = Seq.newBuilder[(String, String)]
     var key, src: String = null
@@ -255,10 +279,7 @@ object FanOut {
           commit()
           key = k; src = s
           val name = s"$k/$s.csv"
-          nameEnc.filterNot(_.canEncode(name)).foreach(e => throw new java.io.IOException(
-            s"fan-out: file name '$name' is not representable in the platform " +
-              s"file-name charset ${e.charset}, so distinct keys would share one " +
-              "directory; run under a UTF-8 locale (e.g. LC_ALL=C.UTF-8)"))
+          requireLocalName(fs, name)
           dest = new Path(s"$outDir/$name")
           tmp = new Path(dest.getParent, s".$s.csv.$attempt.tmp")
           out = fs.create(tmp, true) // creates the key directory
@@ -297,21 +318,16 @@ object FanOut {
   }
 
   /** Read a fan-out layout back: `outDir/{key}/{srcName}.csv` for every
-    * key directory, with the key recovered from the directory name (the
-    * content invariant verify_fanout.py checks) in `_dir_key`.
-    * All-string schema.
+    * key directory, all-string, with the directory name (the key
+    * verify_fanout.py checks against) in `_dir_key`. Like the reference
+    * verifier (verify_fanout.py:69–79), each file's own prefix and header
+    * are scanned ([[HeaderScan.scanFiles]]) and its data read from the
+    * offset found ([[HeaderScan.readFiles]]), so a data row equal to a
+    * meta line stays a data row. A listed file without the key column
+    * fails the read.
     *
-    * Like the reference verifier (verify_fanout.py:69–79), every file's
-    * head is scanned for its own prefix and header
-    * ([[HeaderScan.scanFiles]], in executors) and its data lines are read
-    * from the byte offset the scan found ([[HeaderScan.readFiles]]), so a
-    * data row equal to a meta line stays a data row. The listing is
-    * metadata-only: `outDir`, then each key directory. A listed file
-    * without the key column fails the read.
-    *
-    * Limitation (inherent to any line-oriented CSV read): quoted cells
-    * with embedded newlines aren't reassembled. The reference's BI
-    * exports don't produce them.
+    * Limitation (of any line-oriented CSV read): a quoted cell's embedded
+    * newline is not reassembled; the reference's BI exports hold none.
     */
   def read(spark: SparkSession, outDir: String, srcName: String, keyCol: String): DataFrame = {
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)

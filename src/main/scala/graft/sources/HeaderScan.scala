@@ -3,12 +3,18 @@ package graft.sources
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf, TextInputFormat}
-import org.apache.spark.rdd.HadoopRDD
+import org.apache.hadoop.mapred.{FileSplit, LineRecordReader}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD,
+  FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Header-scanning CSV ingestion (reference fan_out_by_storeid.py:14–30,
@@ -22,16 +28,10 @@ import org.apache.spark.util.SerializableConfiguration
   * Scale split: the *scan* touches only the head of each file (a bounded
   * read of ≤ maxScanLines lines per file, in executors — [[scanFiles]];
   * the same role as schema inference) and records the BYTE OFFSET where
-  * data starts; the *data read* is fully distributed and shuffle-free:
-  * `TextInputFormat` keys every line with its byte offset, so dropping
-  * the prefix+header is a per-split `offset >= dataStart` filter — no
-  * zipWithIndex pass, no extra job, and files sharing a schema read as
-  * ONE multi-path scan ([[readDir]]), so the plan grows with the number
-  * of distinct schemas, not the number of files.
-  *
-  * The program's one reader for prefixed CSVs: fan-out inputs
-  * ([[FanOut.writeFiles]]) and outputs ([[FanOut.read]], the verifier)
-  * go through [[scanFiles]] and [[readFiles]] (file names taken literally).
+  * data starts; the *data read* ([[scan]]) is ONE line source for all
+  * files whatever their headers, with tasks that follow bytes. Fan-out
+  * inputs ([[FanOut.writeFiles]]) and outputs ([[FanOut.read]], the
+  * verifier) are read this way, file names taken literally.
   */
 object HeaderScan {
 
@@ -41,9 +41,9 @@ object HeaderScan {
     *
     * @param dataStart byte offset of the first data line (prefix + header
     *                  bytes, including BOM and CR/LF — measured raw, so
-    *                  the offset matches `TextInputFormat`'s line keys)
-    * @param encoding  the charset whose decoding found the key column;
-    *                  the data read decodes the file's lines with it
+    *                  the offset matches `LineRecordReader`'s line keys)
+    * @param encoding  the first charset that decodes the head strictly
+    *                  and finds the key column; the lines decode with it
     */
   final case class HeaderInfo(
       path: String,
@@ -54,8 +54,8 @@ object HeaderScan {
       encoding: String)
 
   /** Minimal CSV line splitter for the header scan (quoted cells with
-    * embedded commas supported; the distributed data path uses Spark's
-    * real `from_csv` parser).
+    * embedded commas supported); data lines go through the dialect's
+    * real parser ([[FanOut.csvParser]]).
     */
   private[sources] def splitCsvLine(line: String): Seq[String] = {
     val out = ArrayBuffer.empty[String]
@@ -80,36 +80,10 @@ object HeaderScan {
     out.toSeq
   }
 
-  /** Driver-side head scan: locate the header row (first row containing
-    * `keyCol`), collecting the meta rows above it and counting the exact
-    * bytes consumed through the header line. Returns None (with a
-    * warning) when the key column never appears in the first
-    * `maxScanLines` lines — mirroring the reference's warn-and-skip.
-    *
-    * Reads raw bytes (newline-delimited) and decodes per line, so the
-    * byte count is exact for any ASCII-newline-compatible charset
-    * (latin-1, GBK, Big5, UTF-8, ...) — the same constraint Hadoop's
-    * line reader has.
-    */
-  def scanHeader(
-      spark: SparkSession,
-      file: String,
-      keyCol: String = defaultKeyCol,
-      maxScanLines: Int = 100,
-      encoding: String = "UTF-8"): Option[HeaderInfo] = {
-    val fs = new Path(file).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val found = scanHead(fs, file, keyCol, maxScanLines, encoding)
-    if (found.isEmpty) warnKeyless(file, keyCol)
-    found
-  }
-
-  private def warnKeyless(file: String, keyCol: String): Unit =
-    System.err.println(s"[headerscan] WARN: key column '$keyCol' not found in $file — skipping")
-
-  /** The head-scan core — ONE body shared by the driver-side
-    * [[scanHeader]] and the executor-side [[scanFiles]], so the two
-    * paths cannot diverge on offset arithmetic (HeaderScanSpec asserts
-    * their equality on real files).
+  /** The head-scan core of [[scanFiles]], run in executors. Each line is
+    * decoded strictly: a head holding a byte sequence malformed in
+    * `encoding` is not read in it (None), so the caller moves on to its
+    * next charset instead of matching on replacement characters.
     */
   private def scanHead(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -119,7 +93,7 @@ object HeaderScan {
       encoding: String): Option[HeaderInfo] = {
     val in = new java.io.BufferedInputStream(fs.open(new Path(file)))
     try {
-      val cs = java.nio.charset.Charset.forName(encoding)
+      val decoder = java.nio.charset.Charset.forName(encoding).newDecoder() // REPORTs
       val prefix = ArrayBuffer.empty[String]
       var found: Option[HeaderInfo] = None
       var pos = 0L // bytes consumed so far (incl. BOM + line terminators)
@@ -140,7 +114,9 @@ object HeaderScan {
         } else if (b == '\n') consumed += 1
         if (b == -1 && buf.size() == 0) eof = true
         else {
-          var line = new String(buf.toByteArray, cs)
+          var line =
+            try decoder.decode(java.nio.ByteBuffer.wrap(buf.toByteArray)).toString
+            catch { case _: java.nio.charset.CharacterCodingException => return None }
           // strip a UTF-8 BOM if present (utf-8-sig exports); its bytes
           // stay in `consumed`, keeping dataStart aligned with the file
           if (firstLine && line.nonEmpty && line.charAt(0) == '﻿')
@@ -157,60 +133,76 @@ object HeaderScan {
     } finally in.close()
   }
 
-  /** The data lines of `infos`' files as (`_path`, `_line`): one
-    * multi-path `TextInputFormat` scan keys every line with its byte
-    * offset, and lines before the file's `dataStart` are dropped per
-    * split (no shuffle, no job until an action); each file decodes with
-    * its own `encoding`. Paths reach Hadoop as a `Path` list with glob
-    * metacharacters escaped (`data[1].csv` is no pattern for
-    * `data1.csv`; `setInputPaths` escapes commas). Hadoop's hidden-file
-    * filter still refuses `.`/`_`-prefixed names.
+  /** Every data line of `infos`' files from ONE line source, as
+    * `row(i, path)(offset, cells)`: `row(i, path)` once per piece of file
+    * `i` (its qualified path), then per line its byte offset and its
+    * cells parsed ([[FanOut.csvParser]]) to the width of its own header.
+    * Tasks follow bytes: files are cut only past Spark's split size and
+    * packed as `spark.read` packs them (`maxPartitionBytes`,
+    * `openCostInBytes`). Hadoop's `LineRecordReader` reads each piece
+    * (lines end at \n, \r\n or \r); lines before `dataStart` are dropped,
+    * and each file decodes in its own `encoding`. One plan leaf for any
+    * number of headers; hidden names are skipped by [[listCsvFiles]] only.
     */
-  private def dataLines(spark: SparkSession, infos: Seq[HeaderInfo]): DataFrame = {
-    // qualify before keying: a relative caller path must land on the same
-    // key as the fully-qualified FileSplit path the executors see
+  private[sources] def scan(spark: SparkSession, infos: Seq[HeaderInfo], schema: StructType)(
+      row: (Int, UTF8String) => (Long, InternalRow) => InternalRow): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val paths = infos.map { i =>
-      val p = new Path(i.path)
-      p.getFileSystem(hconf).makeQualified(p)
+    val files = infos.toIndexedSeq.map(i => new Path(i.path))
+      .map(p => FileStatusWithMetadata(p.getFileSystem(hconf).getFileStatus(p)))
+    val size = FilePartition.maxSplitBytes(spark, Seq(PartitionDirectory(InternalRow.empty, files)))
+    // a piece carries its file's index as its partition value
+    val pieces = files.zipWithIndex.flatMap { case (f, i) =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = true, size, InternalRow(i))
     }
-    val byPath = spark.sparkContext.broadcast(paths.zip(infos).map { case (p, i) =>
-      p.toUri.getPath -> (i.dataStart, i.encoding)
-    }.toMap)
-    val job = new JobConf(hconf)
-    FileInputFormat.setInputPaths(job, paths.map(p =>
-      new Path(p.toString.replaceAll("([\\[\\]{}*?\\\\])", "\\\\$1"))): _*)
-    val rdd = spark.sparkContext
-      .hadoopRDD(job, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
-      .asInstanceOf[HadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit({ (split, it) =>
-        val fp = split.asInstanceOf[FileSplit].getPath
-        val (start, enc) = byPath.value(fp.toUri.getPath)
-        val cs = java.nio.charset.Charset.forName(enc)
-        val path = fp.toString
-        // Text/LongWritable objects are reused by the record reader —
-        // materialize before the iterator advances
-        it.filter(_._1.get() >= start)
-          .map { case (_, t) => (path, new String(t.getBytes, 0, t.getLength, cs)) }
-      }, preservesPartitioning = true)
-    spark.createDataFrame(rdd).toDF("_path", "_line")
+    // per-file data reaches each executor once, not with every task
+    val paths = files.map(f => UTF8String.fromString(f.getPath.toString))
+    val shared = spark.sparkContext.broadcast(
+      (infos.toIndexedSeq, paths, row, new SerializableConfiguration(hconf)))
+    val read = (piece: PartitionedFile) => {
+      val (byIdx, pathOf, rowOf, conf) = shared.value
+      val i = piece.partitionValues.getInt(0)
+      val info = byIdx(i)
+      val cs = java.nio.charset.Charset.forName(info.encoding)
+      val (parse, emit) = (FanOut.csvParser(info.columns.length), rowOf(i, pathOf(i)))
+      val lines = new LineRecordReader(conf.value,
+        new FileSplit(piece.toPath, piece.start, piece.length, Array.empty[String]))
+      TaskContext.get().addTaskCompletionListener[Unit](_ => lines.close())
+      val (offset, text) = (lines.createKey(), lines.createValue())
+      Iterator.continually(lines.next(offset, text)).takeWhile(identity)
+        .filter(_ => offset.get >= info.dataStart)
+        .map(_ => emit(offset.get, parse(new String(text.getBytes, 0, text.getLength, cs))))
+    }
+    val parts = FilePartition.getFilePartitions(spark, pieces, size)
+    PlanBridge.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema)
   }
 
-  /** Read header-scanned files ([[scanFiles]], [[scanDir]]) with ONE
-    * distributed scan per distinct header, unioned by name (missing
-    * columns null-filled): the plan grows with the number of headers, not
-    * of files. Cells are all `StringType`; every row carries its file's
-    * path in `_path`. Groups are ordered by their first file, so the
-    * column order is deterministic.
+  /** Header-scanned files ([[scanFiles]]) in one [[scan]], unioned as by
+    * `unionByName` (headers in order of their first file, names by the
+    * session's case rule, missing cells null), plus each row's `_path`.
     */
   def readFiles(spark: SparkSession, infos: Seq[HeaderInfo]): DataFrame = {
     require(infos.nonEmpty, "readFiles: no scanned files")
-    infos.groupBy(_.columns).values.toSeq.sortBy(_.map(_.path).min).map { g =>
-      val schema = StructType(g.head.columns.map(StructField(_, StringType)))
-      dataLines(spark, g)
-        .select(from_csv(col("_line"), schema, FanOut.csvDialect).as("r"), col("_path"))
-        .select(col("r.*"), col("_path"))
-    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val fold: String => String = if (spark.conf.get("spark.sql.caseSensitive").toBoolean) identity
+      else _.toLowerCase(java.util.Locale.ROOT)
+    val names = ArrayBuffer.empty[String]
+    // a header's cell → the n-th column of its name, n = earlier cells of
+    // that name in the header; a column is added when there is none
+    val slots = infos.sortBy(_.path).map(_.columns).distinct.map(h => h -> h.indices.map { p =>
+      val same = (c: String) => fold(c) == fold(h(p))
+      names.indices.filter(j => same(names(j))).lift(h.take(p).count(same))
+        .getOrElse { names += h(p); names.length - 1 }
+    }.toArray).toMap
+    val (slotOf, width) = (infos.map(i => slots(i.columns)).toArray, names.length)
+    scan(spark, infos, StructType((names :+ "_path").map(StructField(_, StringType)).toSeq)) {
+      (i, path) =>
+        val s = slotOf(i)
+        (_, cells) => {
+          val out = new Array[Any](width + 1)
+          s.indices.foreach(p => out(s(p)) = cells.getUTF8String(p))
+          out(width) = path
+          new GenericInternalRow(out)
+        }
+    }
   }
 
   /** The file name of a `_path` value. */
@@ -219,14 +211,6 @@ object HeaderScan {
   /** The name of the directory holding a `_path` value's file. */
   def parentName(path: Column): Column =
     substring_index(substring_index(path, "/", -2), "/", 1)
-
-  /** Distributed read of one header-scanned file: all-string schema from
-    * the discovered header, prefix + header dropped by byte offset, lines
-    * decoded with the charset the scan matched (the reference's
-    * `--encoding` flag, fan_out_by_storeid.py:57).
-    */
-  def readFile(spark: SparkSession, info: HeaderInfo): DataFrame =
-    readFiles(spark, Seq(info)).drop("_path")
 
   /** Scan every `*.csv` under `dir` ([[listCsvFiles]], then
     * [[scanFiles]]), skipping files without the key column.
@@ -243,7 +227,9 @@ object HeaderScan {
   private def isCsvLoose(name: String): Boolean =
     name.toLowerCase.endsWith(".csv")
 
-  /** Hadoop's hidden-name rule: its input formats skip these files. */
+  /** Hadoop's hidden-name rule (`spark.read` skips these files); the
+    * listing is the one place that applies it, [[scan]] does not.
+    */
   private[graft] def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
@@ -252,14 +238,11 @@ object HeaderScan {
   private def isCsvName(name: String): Boolean =
     isCsvLoose(name) && !isHidden(name)
 
-  /** A `*.csv` whose name Hadoop refuses to read: the reference's
-    * `os.scandir` (fan_out_by_storeid.py:7–9) WOULD ingest
-    * `_totals.csv` from a flat input dir, but every Hadoop input
-    * format hard-filters `.`/`_`-prefixed paths (FileInputFormat's
-    * hiddenFileFilter — the same files are invisible to
-    * `spark.read.csv`), so silent parity is impossible on this data
-    * plane. Warn-and-skip keeps the divergence LOUD, mirroring the
-    * reference's own warn-skip style for unreadable inputs.
+  /** A hidden `*.csv`: the reference's `os.scandir`
+    * (fan_out_by_storeid.py:7–9) WOULD ingest `_totals.csv` from a flat
+    * input dir, but `.`/`_`-prefixed paths are Hadoop system state
+    * (invisible to `spark.read.csv` too). Warn-and-skip keeps the
+    * divergence LOUD, in the reference's own warn-skip style.
     */
   private def warnHiddenCsv(path: Path): Unit =
     System.err.println(
@@ -268,23 +251,17 @@ object HeaderScan {
         "ingest it; rename the file to include it)")
 
   /** One scan root's files: direct `*.csv` children are all taken
-    * except hidden-prefixed names, which are warn-skipped (see
-    * [[warnHiddenCsv]] — a platform constraint, not a policy);
-    * subdirectory recursion follows the lake convention — hidden
-    * `.`/`_` path segments (staging temps, `_SUCCESS`-style markers,
-    * checkpoint state) never ingest as data, silently. Recursion is
-    * explicit per-directory `listStatus` (hidden dirs pruned without
-    * descending — same file set as a descend-then-filter walk, less
-    * work). MEASURED reason (round-14 1e5-file probe, jstack): the
-    * previous `listFiles(recursive = true)` materializes a
-    * `LocatedFileStatus` per file, which on the local filesystem
-    * EAGER-loads permissions by forking a shell PER FILE (~10 ms each
-    * — 100k files took >17 min of fork/exec); plain `listStatus`
-    * keeps permissions lazy and the walk never reads them. On HDFS
-    * this costs one RPC per directory instead of one bulk call; on S3
-    * the per-root distribution in [[listCsvFiles]] bounds each walk,
-    * and a flat-LIST fast path can slot in here if a real object
-    * store ever needs it.
+    * except hidden-prefixed names, which are warn-skipped
+    * ([[warnHiddenCsv]]); below the root, hidden `.`/`_` path segments
+    * (staging temps, `_SUCCESS`-style markers, checkpoint state) are
+    * lake state and skip silently. Recursion is per-directory
+    * `listStatus`, hidden dirs pruned without descending. MEASURED
+    * (1e5-file probe, jstack): `listFiles(recursive = true)` builds a
+    * `LocatedFileStatus` per file, whose permissions the local
+    * filesystem loads by forking a shell PER FILE (~10 ms each, >17 min
+    * for 100k files); plain `listStatus` keeps them lazy. On HDFS this
+    * is one RPC per directory; on S3 the per-root distribution in
+    * [[listCsvFiles]] bounds each walk.
     */
   private def walkRoot(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -313,14 +290,11 @@ object HeaderScan {
     * layouts list completely) or a Hadoop glob (star wildcards, `{a,b}`
     * alternation, `?` single-char); every match — the plain dir, or
     * each glob-matched file/directory — is a scan ROOT with the
-    * [[walkRoot]] semantics: direct file children are taken except
-    * hidden-prefixed names (warn-skipped — Hadoop's data plane cannot
-    * read them), deeper levels keep the lake convention. Listing
-    * is metadata-only; when a glob fans out to many directories the
-    * per-root walks run IN EXECUTORS (the same split Spark's
-    * `InMemoryFileIndex` uses past its parallelism threshold), so a
-    * million-file lake never serializes its listing through one driver
-    * loop — and the head-reads that follow are already distributed.
+    * [[walkRoot]] semantics. Listing is metadata-only; when a glob fans
+    * out to many directories the per-root walks run IN EXECUTORS (the
+    * split Spark's `InMemoryFileIndex` uses past its parallelism
+    * threshold), so a million-file lake never lists through one driver
+    * loop.
     */
   def listCsvFiles(spark: SparkSession, dir: String): Seq[String] = {
     val p = new Path(dir)
@@ -342,8 +316,7 @@ object HeaderScan {
       else throw new java.io.FileNotFoundException(
         s"scan path does not exist: $dir")
     val (dirs, plainFiles) = roots.partition(_.isDirectory)
-    // glob-matched FILES were explicitly targeted — but the Hadoop
-    // hidden-path constraint still applies (warn, don't silently drop)
+    // glob-matched FILES were explicitly targeted: hidden ones still warn
     val direct = plainFiles.map(_.getPath).filter { f =>
       val take = isCsvName(f.getName)
       if (!take && isCsvLoose(f.getName)) warnHiddenCsv(f)
@@ -378,9 +351,9 @@ object HeaderScan {
     * the shared [[scanHead]] on its files and returns file-count-sized
     * metadata, safe to collect (the listing itself was already
     * driver-memory-sized). The charsets of `encodings` are tried in
-    * order; the first whose decoding finds the key column is kept in
-    * `HeaderInfo.encoding`. Files where none does are warned (in that
-    * executor's stderr) and skipped.
+    * order; the first that decodes the head strictly and finds the key
+    * column in it is kept in `HeaderInfo.encoding`. Files where none
+    * does are warned (in that executor's stderr) and skipped.
     *
     * Scale shape: head-reads are embarrassingly parallel (one bounded
     * ≤ maxScanLines read per file, no shuffle), the schema-inference
@@ -405,7 +378,8 @@ object HeaderScan {
           val fs = new Path(f).getFileSystem(conf)
           val found = encodings.iterator.map(scanHead(fs, f, keyCol, maxScanLines, _))
             .collectFirst { case Some(i) => i }
-          if (found.isEmpty) warnKeyless(f, keyCol)
+          if (found.isEmpty) System.err.println(s"[headerscan] WARN: key column " +
+            s"'$keyCol' not found in $f (read as ${encodings.mkString(", ")}) — skipping")
           found
         }
       }
@@ -414,8 +388,7 @@ object HeaderScan {
     infos
   }
 
-  /** Scan + read + union a directory ([[readFiles]]: one scan per
-    * distinct header, missing columns null-filled), each row tagged with
+  /** Scan + read + union a directory ([[readFiles]]), each row tagged with
     * its source file name in `_src`. To resolve aliases before a union,
     * read per header group: [[scanDir]], group by `columns`, [[readFiles]].
     */

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH,
   ResolvedHint}
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.types.StructType
 
 /** Logical-plan doorway for the one join hint Spark computes internally
   * but never exposed as a `df.hint(...)` alias: `NO_BROADCAST_HASH`
@@ -38,4 +41,8 @@ object PlanBridge {
       ResolvedHint(ds.queryExecution.analyzed,
         HintInfo(strategy = Some(NO_BROADCAST_HASH))))
   }
+
+  /** `rows` of `schema` as a DataFrame over one leaf, no `Row` round trip. */
+  def ofRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

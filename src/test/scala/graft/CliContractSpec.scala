@@ -107,6 +107,37 @@ class CliContractSpec extends AnyFunSuite {
     assert(log.contains("[OK] fan-out verified"), log)
   }
 
+  test("big5 with an ASCII key column verifies with exit 0 (heads decode strictly)") {
+    // the key column is ASCII, so a lenient UTF-8 read of the head found
+    // it and the big5 key cells decoded as mojibake; the head's big5 cell
+    // is malformed UTF-8, so a strict read moves on to big5
+    val utf8 = Map("LC_ALL" -> "C.UTF-8")
+    val in = Files.createTempDirectory("cli_b5k_in")
+    Files.write(in.resolve("b5.csv"),
+      "store,城市\n台北,1\n高雄,2\n".getBytes(java.nio.charset.Charset.forName("big5")))
+    val out = Files.createTempDirectory("cli_b5k_out").resolve("out")
+    val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
+        "--encoding", "big5", "--output-encoding", "big5"), utf8)
+    assert(fanCode == 0, fanLog)
+    val (code, log) = runMain("graft.cli.VerifyFanoutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
+        "--encoding", "big5"), utf8)
+    assert(code == 0, log)
+    assert(log.contains("total violations=0"), log)
+  }
+
+  test("hidden output files fail verify, each printed by path") {
+    val (in, _) = fannedOut
+    val out = copyOut()
+    val dir = outputFiles(out).head.getParent
+    val hidden = Seq(dir.resolve("_stray.csv"), dir.resolve(".stray.csv"))
+    hidden.foreach(Files.copy(outputFiles(out).head, _))
+    val (code, log) = verify(in, out)
+    assert(code == 1, log)
+    hidden.foreach(p => assert(log.contains(p.toString), log))
+  }
+
   test("a stray keyless CSV in one store dir fails verify, printed by path") {
     val (in, _) = fannedOut
     val out = copyOut()
@@ -151,6 +182,25 @@ class CliContractSpec extends AnyFunSuite {
       Seq("--input-dir", in.toString, "--output-dir", out.toString), Map("LC_ALL" -> "C"))
     assert(code != 0, log)
     assert(log.contains("platform file-name charset") && log.contains("LC_ALL=C.UTF-8"), log)
+  }
+
+  test("aggregate and presence under a non-UTF-8 file-name charset fail, naming it") {
+    // the six dataset names are not ASCII: under LC_ALL=C the JVM would
+    // spell them with '?' and read every one as missing
+    val in = Files.createTempDirectory("cli_c_agg")
+    val (fixCode, fixLog) = runMain("graft.PresenceFixture",
+      Seq(in.resolve("aggregate").toString), Map("LC_ALL" -> "C.UTF-8"))
+    assert(fixCode == 0, fixLog)
+    val out = Files.createTempDirectory("cli_c_agg_out")
+    Seq(
+      "graft.cli.AggregateMain" -> Seq("--config", "23-2", "--output-dir", out.toString),
+      "graft.cli.PresenceMain" -> Seq("--store", "s9")).foreach { case (main, args) =>
+      val (code, log) = runMain(main, args ++ Seq("--input-dir", in.toString),
+        Map("LC_ALL" -> "C"))
+      assert(code != 0, log)
+      assert(log.contains("platform file-name charset US-ASCII") &&
+        log.contains("LC_ALL=C.UTF-8") && !log.contains("file not found"), log)
+    }
   }
 
   test("presence: rows per dataset, NONE for a dataset without the store, warn for a missing file") {

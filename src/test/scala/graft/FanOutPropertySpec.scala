@@ -28,7 +28,7 @@ class FanOutPropertySpec extends SparkSpec {
 
     infos.foreach { info =>
       val src = info.path.split('/').last.stripSuffix(".csv")
-      val df = HeaderScan.readFile(spark, info)
+      val df = HeaderScan.readFiles(spark, Seq(info)).drop("_path")
       val back = FanOut.read(spark, out, src, "商店序號")
 
       // content invariant (verify_fanout.py:52–102): key cell == dir name
@@ -57,7 +57,8 @@ class FanOutPropertySpec extends SparkSpec {
     // per-store expected sets from the inputs themselves
     val expected = infos.flatMap { info =>
       val src = info.path.split('/').last.stripSuffix(".csv")
-      HeaderScan.readFile(spark, info).select(trim(col("商店序號")).as("k")).distinct()
+      HeaderScan.readFiles(spark, Seq(info)).drop("_path")
+        .select(trim(col("商店序號")).as("k")).distinct()
         .collect().map(r => (r.getString(0), src))
     }
     assert(present.toSet == expected.toSet)
@@ -70,10 +71,10 @@ class FanOutPropertySpec extends SparkSpec {
       content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
 
     // UTF-8 read mangles the accents; latin-1 read restores them
-    val info = HeaderScan.scanHeader(spark, in.resolve("latin.csv").toString,
-      keyCol = "store", encoding = "ISO-8859-1")
+    val info = HeaderScan.scanFiles(spark, Seq(in.resolve("latin.csv").toString),
+      keyCol = "store", encodings = Seq("ISO-8859-1")).headOption
     assert(info.isDefined && info.get.columns.contains("libellé"))
-    val rows = HeaderScan.readFile(spark, info.get)
+    val rows = HeaderScan.readFiles(spark, Seq(info.get)).drop("_path")
       .orderBy("store").collect()
     assert(rows.map(_.getString(1)).toSeq == Seq("café", "naïve"))
   }

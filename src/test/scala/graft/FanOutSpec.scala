@@ -168,7 +168,7 @@ class FanOutSpec extends SparkSpec {
     Files.writeString(dir.resolve("d.csv"),
       (s"$S,name,note" +: dataLines).mkString("", "\n", "\n"))
     val Seq(info) = HeaderScan.scanDir(spark, dir.toString)
-    val df = HeaderScan.readFile(spark, info)
+    val df = HeaderScan.readFiles(spark, Seq(info)).drop("_path")
     assert(df.filter(col(S) === "s1").orderBy("note").select("name", "note")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("a\\b", "c,d"), (" padded ", "q \"x\"")))
@@ -294,16 +294,16 @@ class FanOutSpec extends SparkSpec {
         "s2,Bob,99\n")
     Files.writeString(dir.resolve("nokey.csv"), "a,b\n1,2\n")
 
-    val scanned = HeaderScan.scanHeader(spark, dir.resolve("good.csv").toString)
+    val scanned = HeaderScan.scanFiles(spark, Seq(dir.resolve("good.csv").toString)).headOption
     assert(scanned.isDefined)
     val info = scanned.get
     assert(info.prefixRows.length == 2 && info.skipLines == 3)
     assert(info.columns == Seq(S, "name, quoted", "金額"))
-    assert(HeaderScan.scanHeader(spark, dir.resolve("nokey.csv").toString).isEmpty)
+    assert(HeaderScan.scanFiles(spark, Seq(dir.resolve("nokey.csv").toString)).isEmpty)
 
     val infos = HeaderScan.scanDir(spark, dir.toString)
     assert(infos.length == 1) // nokey.csv warn-skipped
-    val rows = HeaderScan.readFile(spark, infos.head).orderBy(S).collect()
+    val rows = HeaderScan.readFiles(spark, Seq(infos.head)).drop("_path").orderBy(S).collect()
     assert(rows.length == 2)
     assert(rows(0).getString(1) == "Ace, Inc") // quoted comma survives
     assert(rows(0).getString(2) == "1,234") // stays string — typing is lazy

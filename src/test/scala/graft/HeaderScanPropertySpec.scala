@@ -84,12 +84,12 @@ class HeaderScanPropertySpec extends SparkSpec {
       assert(info.prefixRows.length == metas.length, s"$name: prefix count")
       assert(info.skipLines == metas.length + 1, s"$name: skipLines")
       // driver-side scan agrees field-for-field (shared scanHead body)
-      val drv = HeaderScan.scanHeader(spark,
-        dir.resolve(name).toString, keyCol = "store").get
+      val drv = HeaderScan.scanFiles(spark,
+        Seq(dir.resolve(name).toString), keyCol = "store").head
       assert(drv.dataStart == info.dataStart &&
         drv.columns == info.columns && drv.prefixRows == info.prefixRows)
       // the offset-filtered distributed read yields exactly the data rows
-      val back = HeaderScan.readFile(spark, info).collect()
+      val back = HeaderScan.readFiles(spark, Seq(info)).drop("_path").collect()
         .map(r => header.indices.map(j => r.getString(j)).toSeq).toSet
       assert(back == data.toSet, s"$name: data rows")
     }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.HeaderScan
 
 /** Byte-offset header-scan ingestion: dataStart accuracy under BOM and
-  * CRLF line endings, and the grouped multi-path readDir (one scan per
-  * distinct schema — the 10k-file scale path).
+  * CRLF line endings, and the one line source behind readFiles/readDir
+  * (one plan leaf for any number of headers, tasks packed by bytes).
   */
 class HeaderScanSpec extends SparkSpec {
 
@@ -20,8 +20,8 @@ class HeaderScanSpec extends SparkSpec {
     val content = "﻿Report 報表,x\r\nstore,金額\r\ns1,10\r\ns2,20\r\n"
     Files.write(dir.resolve("crlf.csv"),
       content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val info = HeaderScan.scanHeader(spark, dir.resolve("crlf.csv").toString,
-      keyCol = "store").get
+    val info = HeaderScan.scanFiles(spark, Seq(dir.resolve("crlf.csv").toString),
+      keyCol = "store").head
     assert(info.prefixRows == Seq("Report 報表,x"))
     assert(info.columns == Seq("store", "金額"))
     // BOM(3) + "Report 報表,x"(9 + 3*2 ascii→ 報表 is 2 CJK chars × 3 bytes)
@@ -29,7 +29,7 @@ class HeaderScanSpec extends SparkSpec {
     val headBytes = ("﻿Report 報表,x\r\nstore,金額\r\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8).length
     assert(info.dataStart == headBytes)
-    val rows = HeaderScan.readFile(spark, info).orderBy("store").collect()
+    val rows = HeaderScan.readFiles(spark, Seq(info)).drop("_path").orderBy("store").collect()
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("s1", "10"), ("s2", "20")))
   }
@@ -39,11 +39,11 @@ class HeaderScanSpec extends SparkSpec {
     Files.write(dir.resolve("mac.csv"),
       "meta,x\rstore,v\rs1,1\rs2,2\r"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val info = HeaderScan.scanHeader(spark, dir.resolve("mac.csv").toString,
-      keyCol = "store").get
+    val info = HeaderScan.scanFiles(spark, Seq(dir.resolve("mac.csv").toString),
+      keyCol = "store").head
     assert(info.prefixRows == Seq("meta,x") && info.columns == Seq("store", "v"))
     assert(info.dataStart == "meta,x\rstore,v\r".getBytes.length)
-    val rows = HeaderScan.readFile(spark, info).orderBy("store").collect()
+    val rows = HeaderScan.readFiles(spark, Seq(info)).drop("_path").orderBy("store").collect()
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("s1", "1"), ("s2", "2")))
   }
@@ -53,8 +53,8 @@ class HeaderScanSpec extends SparkSpec {
     Files.writeString(dir.resolve("r.csv"), "store,v\na,1\n")
     val cwd = java.nio.file.Paths.get("").toAbsolutePath
     val rel = cwd.relativize(dir.resolve("r.csv")).toString
-    val info = HeaderScan.scanHeader(spark, rel, keyCol = "store").get
-    assert(HeaderScan.readFile(spark, info).count() == 1)
+    val info = HeaderScan.scanFiles(spark, Seq(rel), keyCol = "store").head
+    assert(HeaderScan.readFiles(spark, Seq(info)).drop("_path").count() == 1)
   }
 
   test("distributed dir scan ≡ driver-side scanHeader per file") {
@@ -71,8 +71,8 @@ class HeaderScanSpec extends SparkSpec {
     Files.writeString(dir.resolve("nokey.csv"), "foo,bar\n1,2\n")
     val dist = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
     val driver = Seq("a.csv", "b.csv", "c.csv", "d.csv", "nokey.csv")
-      .flatMap(f => HeaderScan.scanHeader(spark, dir.resolve(f).toString,
-        keyCol = "store"))
+      .flatMap(f => HeaderScan.scanFiles(spark, Seq(dir.resolve(f).toString),
+        keyCol = "store").headOption)
     // same files found (keyless skipped), same offsets, same headers —
     // the executor path and the driver path run the SAME scanHead,
     // and this pins that they cannot drift
@@ -132,8 +132,8 @@ class HeaderScanSpec extends SparkSpec {
 
     // distributed ≡ driver pin extended over the nested tree
     val dist = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
-    val driver = all.flatMap(rel => HeaderScan.scanHeader(
-      spark, dir.resolve(rel).toString, keyCol = "store"))
+    val driver = all.flatMap(rel => HeaderScan.scanFiles(
+      spark, Seq(dir.resolve(rel).toString), keyCol = "store").headOption)
     assert(dist.size == driver.size && dist.size == 5)
     dist.sortBy(_.path).zip(driver.sortBy(_.path)).foreach { case (e, d) =>
       assert(e.dataStart == d.dataStart && e.columns == d.columns &&
@@ -174,8 +174,8 @@ class HeaderScanSpec extends SparkSpec {
     assert(infos.map(_.dataStart).forall(_ > 0))
 
     val df = HeaderScan.readDir(spark, dir.toString, keyCol = "store")
-    // plan size ∝ distinct schemas: 2 groups → exactly 2 leaf scans
-    assert(df.queryExecution.optimizedPlan.collectLeaves().length == 2)
+    // one line source for every header: 2 schemas → still 1 leaf
+    assert(df.queryExecution.optimizedPlan.collectLeaves().length == 1)
     val rows = df.orderBy("store")
       .select("store", "v", "w", "_src").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
@@ -184,6 +184,41 @@ class HeaderScanSpec extends SparkSpec {
       ("s2", "2", null, "a1.csv"),
       ("s3", "3", null, "a2.csv"),
       ("s4", null, "4", "b.csv")))
+  }
+
+  test("a file larger than the split size reads every row once, in order") {
+    val dir = tmpDir("split")
+    val endings = Seq("\n", "\r\n", "\r")
+    val rows = (0 until 600).map(r => (s"k$r", s"v$r 值"))
+    val body = (Seq("meta,報表", "meta2,x", "store,v") ++ rows.map { case (k, v) => s"$k,$v" })
+      .zipWithIndex.map { case (l, i) => l + endings(i % 3) }.mkString
+    Files.write(dir.resolve("big.csv"),
+      ("\uFEFF" + body).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val info = HeaderScan.scanDir(spark, dir.toString, keyCol = "store").head
+    assert(info.prefixRows == Seq("meta,報表", "meta2,x"))
+    // several split sizes, so piece boundaries land inside lines, on
+    // '\r', on '\n' and inside "\r\n"
+    Seq("2000", "2001", "2003", "4096").foreach { bytes =>
+      withConf("spark.sql.files.maxPartitionBytes" -> bytes) {
+        val df = HeaderScan.readFiles(spark, Seq(info))
+        assert(df.rdd.getNumPartitions >= 2, s"split size $bytes")
+        val got = df.select("store", "v").collect().map(r => (r.getString(0), r.getString(1)))
+        assert(got.toSeq == rows, s"split size $bytes")
+      }
+    }
+  }
+
+  test("40 headers read as one plan leaf in at most defaultParallelism tasks") {
+    val dir = tmpDir("wide")
+    (0 until 40).foreach(i => Files.writeString(dir.resolve(f"f$i%02d.csv"), s"store,c$i\ns$i,$i\n"))
+    val infos = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
+    assert(infos.map(_.columns).distinct.length == 40)
+    val df = HeaderScan.readFiles(spark, infos)
+    assert(df.queryExecution.optimizedPlan.collectLeaves().length == 1)
+    assert(df.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    assert(df.columns.toSeq == ("store" +: (0 until 40).map(i => s"c$i")) :+ "_path")
+    assert(df.select("store", "c7").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSet == (0 until 40).map(i => (s"s$i", if (i == 7) "7" else null)).toSet)
   }
 
   test("file names with glob metacharacters or commas read literally") {

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the session policy and the storage root single: no source file
-  * under src/main/scala may build a session outside [[GraftSession]] or
-  * read the JVM temp dir outside [[WorkDir]].
+/** Keeps the session policy, the storage root and the CSV dialect
+  * single: no source file under src/main/scala may build a session
+  * outside [[GraftSession]], read the JVM temp dir outside [[WorkDir]],
+  * or parse or render CSV cells outside `FanOut`.
   */
 class SourceSeamsSpec extends AnyFunSuite {
 
@@ -30,5 +31,11 @@ class SourceSeamsSpec extends AnyFunSuite {
 
   test("java.io.tmpdir is read only in WorkDir") {
     assert(filesContaining("java.io.tmpdir") == Set("WorkDir.scala"))
+  }
+
+  test("one CSV dialect implementation reads and writes: no Hadoop RDD, from_csv or to_csv") {
+    Seq("hadoopRDD(", "from_csv(", "to_csv(").foreach(n => assert(filesContaining(n).isEmpty, n))
+    assert(filesContaining("UnivocityParser") == Set("FanOut.scala"))
+    assert(filesContaining("UnivocityGenerator") == Set("FanOut.scala"))
   }
 }
