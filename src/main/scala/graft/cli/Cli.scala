@@ -20,11 +20,11 @@ import graft.sources.{CsvGen, FanOut, HeaderScan}
   *   - [[PresenceMain]]    ≙ verify_store_presence.py:66–71
   *   - [[CsvGenMain]]      ≙ csv_gen.py:74–115
   *
-  * Output charsets: [[FanOutMain]]'s `--output-encoding` (UTF-8 unless
-  * set); [[AggregateMain]] writes utf-8-sig, which the BI tools
-  * consuming its outputs expect (README.md:95–99).
+  * Every CSV is read through [[HeaderScan]]. Output charsets: [[FanOutMain]]'s
+  * `--output-encoding` (UTF-8 unless set); [[AggregateMain]] writes utf-8-sig,
+  * which the BI tools consuming its outputs expect (README.md:95–99).
   */
-private[cli] object Args {
+private[graft] object Args {
 
   /** `--flag value` parser: returns the flag map; unknown flags fail. */
   def parse(args: Array[String], known: Set[String]): Map[String, String] = {
@@ -40,15 +40,23 @@ private[cli] object Args {
   def required(m: Map[String, String], k: String): String =
     m.getOrElse(k, throw new IllegalArgumentException(s"missing required --$k"))
 
-  /** All-string whole-file CSV read (`pd.read_csv(dtype=str)`,
-    * aggregate_by_store.py:123 etc.): header row taken as-is,
-    * `inferSchema` off so every column is StringType. A local name the
-    * JVM cannot spell fails ([[FanOut.requireLocalName]]).
+  /** Line-0-header CSVs (`pd.read_csv(dtype=str)`, aggregate_by_store.py:123
+    * etc.) head-scanned in ONE job, in `paths`' order. A name the JVM cannot
+    * spell ([[FanOut.requireLocalName]]) or a line 0 without `key` fails.
     */
-  def readAllString(spark: SparkSession, path: String): DataFrame = {
-    FanOut.requireLocalName(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-    spark.read.option("header", "true").csv(path)
+  def scanHeaded(spark: SparkSession, paths: Seq[String], key: String): Seq[HeaderScan.HeaderInfo] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.foreach(p => FanOut.requireLocalName(new Path(p).getFileSystem(conf), p))
+    val infos = HeaderScan.scanFiles(spark, paths, key, maxScanLines = 1)
+    paths.map(p => infos.find(_.path == p).getOrElse(
+      throw new IllegalArgumentException(s"key column '$key' not on line 0 of $p")))
   }
+
+  /** [[scanHeaded]] `paths`, one all-string frame each, less rows without a cell:
+    * blank lines (pandas skips them) and `,,,` rows (no store, no output). */
+  def readHeaded(spark: SparkSession, paths: Seq[String], key: String): Seq[DataFrame] =
+    scanHeaded(spark, paths, key).map(i =>
+      HeaderScan.readFiles(spark, Seq(i)).drop("_path").na.drop("all"))
 }
 
 /** `graft.cli.FanOutMain --input-dir I --output-dir O [--encoding E]
@@ -198,12 +206,12 @@ object VerifyFanoutMain {
   */
 object AggregateMain {
 
-  private val bindsFile = "區間綁定推薦人人數.csv"
-  private val cumFile = "累計至今綁定推薦人人數.csv"
-  private val memFile = "14-1.會員成長趨勢_新增註冊會員數卡片.csv"
-  private val fpMonthFile = "門市首購人數_月份.csv"
-  private val fpBranchFile = "門市首購人數_門市.csv"
-  private val branchBindsFile = "各門市累計綁定人數.csv"
+  private val binds = "區間綁定推薦人人數.csv"
+  private val cum = "累計至今綁定推薦人人數.csv"
+  private val mem = "14-1.會員成長趨勢_新增註冊會員數卡片.csv"
+  private val fpMonth = "門市首購人數_月份.csv"
+  private val fpBranch = "門市首購人數_門市.csv"
+  private val branchBinds = "各門市累計綁定人數.csv"
 
   def main(args: Array[String]): Unit = {
     val a = Args.parse(args, Set("config", "input-dir", "output-dir",
@@ -214,27 +222,27 @@ object AggregateMain {
     // the six dedicated configs read from {input-dir}/aggregate; the
     // generic path reads its --input-file relative to {input-dir} root
     // unless the config says otherwise (aggregate_by_store.py:733)
-    def rd(f: String): DataFrame = Args.readAllString(spark, s"$inDir/aggregate/$f")
-
-    val (cfgKey, result, keyCol): (String, DataFrame, String) = a.get("input-file") match {
+    def agg(fs: String*): Seq[String] = fs.map(f => s"$inDir/aggregate/$f")
+    val (cfgKey, keyCol, files, kpi): (String, String, Seq[String], Seq[DataFrame] => DataFrame) =
+      a.get("input-file") match {
       case Some(f) =>
         val months = Args.required(a, "months").split(",").toSeq
         val storeCol = Args.required(a, "store-col")
         // keep the config's store column as the output header — the
         // reference writes it verbatim (aggregate_by_store.py:745–762)
-        val r = Kpi.generic(Args.readAllString(spark, s"$inDir/$f"), storeCol,
-          Args.required(a, "month-col"), Args.required(a, "target-col"), months)
-        (f.stripSuffix(".csv"), r, storeCol)
+        (f.stripSuffix(".csv"), storeCol, Seq(s"$inDir/$f"), d => Kpi.generic(d(0), storeCol,
+          Args.required(a, "month-col"), Args.required(a, "target-col"), months))
       case None => Args.required(a, "config") match {
-        case k @ "23-1" => (k, Kpi.config23_1(rd(bindsFile), rd(cumFile), rd(memFile)), Kpi.S)
-        case k @ "23-2" => (k, Kpi.config23_2(rd(bindsFile)), Kpi.S)
-        case k @ "24-1" => (k, Kpi.config24_1(rd(bindsFile), rd(cumFile), rd(memFile)), Kpi.S)
-        case k @ "24-2" => (k, Kpi.config24_2(rd(fpMonthFile), rd(bindsFile)), Kpi.S)
-        case k @ "25-1" => (k, Kpi.config25_1(rd(fpBranchFile), rd(branchBindsFile)), Kpi.S)
-        case k @ "25-2" => (k, Kpi.config25_2(rd(fpBranchFile), rd(branchBindsFile)), Kpi.S)
+        case k @ "23-1" => (k, Kpi.S, agg(binds, cum, mem), d => Kpi.config23_1(d(0), d(1), d(2)))
+        case k @ "23-2" => (k, Kpi.S, agg(binds), d => Kpi.config23_2(d(0)))
+        case k @ "24-1" => (k, Kpi.S, agg(binds, cum, mem), d => Kpi.config24_1(d(0), d(1), d(2)))
+        case k @ "24-2" => (k, Kpi.S, agg(fpMonth, binds), d => Kpi.config24_2(d(0), d(1)))
+        case k @ "25-1" => (k, Kpi.S, agg(fpBranch, branchBinds), d => Kpi.config25_1(d(0), d(1)))
+        case k @ "25-2" => (k, Kpi.S, agg(fpBranch, branchBinds), d => Kpi.config25_2(d(0), d(1)))
         case k => throw new IllegalArgumentException(s"Config '$k' not found")
       }
     }
+    val result = kpi(Args.readHeaded(spark, files, keyCol))
     // stores = files written (the reference counts stores written too)
     val stores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
     println(s"[OK] config=$cfgKey, stores=${stores.length}")
@@ -259,20 +267,21 @@ object PresenceMain {
   def main(args: Array[String]): Unit = {
     val a = Args.parse(args, Set("store", "input-dir"))
     val store = Args.required(a, "store")
-    val aggDir = s"${a.getOrElse("input-dir", "./input")}/aggregate"
+    val aggDir = new Path(s"${a.getOrElse("input-dir", "./input")}/aggregate")
     val spark = GraftSession("graft-presence")
-    val datasets = files.flatMap { case (desc, f) =>
-      val p = new Path(s"$aggDir/$f")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      FanOut.requireLocalName(fs, f) // else every name reads as missing
-      if (fs.exists(p)) Some(desc -> Args.readAllString(spark, p.toString))
-      else { println(s"[warn] $desc: file not found ($f)"); None }
+    val fs = aggDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files.foreach { case (_, f) => FanOut.requireLocalName(fs, f) } // else every name reads as missing
+    val listed = if (fs.exists(aggDir)) fs.listStatus(aggDir).map(_.getPath.getName).toSet
+      else Set.empty[String]
+    val (found, absent) = files.partition { case (_, f) => listed(f) }
+    absent.foreach { case (desc, f) => println(s"[warn] $desc: file not found ($f)") }
+    if (found.nonEmpty) {
+      val infos = Args.scanHeaded(spark, found.map { case (_, f) => s"$aggDir/$f" }, Kpi.S)
+      val rows = VerifyOps.presence(HeaderScan.readFiles(spark, infos), Kpi.S, store,
+        HeaderScan.fileName(col("_path"))).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      found.map { case (desc, f) => desc -> rows.getOrElse(f, 0L) }
+        .foreach { case (desc, n) => println(s"[${if (n > 0) "OK " else "NONE"}] $desc: rows=$n") }
     }
-    if (datasets.nonEmpty)
-      VerifyOps.presence(datasets, Kpi.S, store).collect().foreach { r =>
-        val mark = if (r.getBoolean(2)) "OK " else "NONE"
-        println(s"[$mark] ${r.getString(0)}: rows=${r.getLong(1)}")
-      }
     spark.stop()
   }
 }

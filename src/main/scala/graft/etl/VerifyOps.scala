@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Post-hoc fan-out verification as DataFrame ops (reference
@@ -113,18 +113,9 @@ object VerifyOps {
     sets.crossJoin(content).crossJoin(keys)
   }
 
-  /** Presence precheck (verify_store_presence.py:35–63; SURVEY.md §2.6
-    * V4): per dataset, row count for `keyValue`.
-    */
-  def presence(datasets: Seq[(String, DataFrame)], keyCol: String, keyValue: String): DataFrame = {
-    require(datasets.nonEmpty,
-      "presence: empty dataset list (nothing to check — likely a glob " +
-        "that matched no inputs)")
-    datasets.map { case (name, df) =>
-      df.filter(trim(col(keyCol)) === keyValue)
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit(name).as("dataset"), col("n_rows"),
-          (col("n_rows") > 0).as("present"))
-    }.reduce(_ unionAll _)
-  }
+  /** Presence precheck (verify_store_presence.py:35–63; SURVEY.md §2.6 V4) as ONE grouped
+    * count: (dataset, n_rows) of rows whose trimmed `keyCol` is `keyValue`, none → no row. */
+  def presence(rows: DataFrame, keyCol: String, keyValue: String, dataset: Column): DataFrame =
+    rows.filter(trim(col(keyCol)) === keyValue)
+      .groupBy(dataset.as("dataset")).agg(count(lit(1)).as("n_rows"))
 }

@@ -31,7 +31,8 @@ import org.apache.spark.util.SerializableConfiguration
   * data starts; the *data read* ([[scan]]) is ONE line source for all
   * files whatever their headers, with tasks that follow bytes. Fan-out
   * inputs ([[FanOut.writeFiles]]) and outputs ([[FanOut.read]], the
-  * verifier) are read this way, file names taken literally.
+  * verifier), and the aggregate and presence inputs of `graft.cli`, are
+  * read this way, file names taken literally.
   */
 object HeaderScan {
 
@@ -142,7 +143,8 @@ object HeaderScan {
     * `openCostInBytes`). Hadoop's `LineRecordReader` reads each piece
     * (lines end at \n, \r\n or \r); lines before `dataStart` are dropped,
     * and each file decodes in its own `encoding`. One plan leaf for any
-    * number of headers; hidden names are skipped by [[listCsvFiles]] only.
+    * number of headers, sized by its files' bytes as `spark.read` sizes
+    * its scans; hidden names are skipped by [[listCsvFiles]] only.
     */
   private[sources] def scan(spark: SparkSession, infos: Seq[HeaderInfo], schema: StructType)(
       row: (Int, UTF8String) => (Long, InternalRow) => InternalRow): DataFrame = {
@@ -173,7 +175,8 @@ object HeaderScan {
         .map(_ => emit(offset.get, parse(new String(text.getBytes, 0, text.getLength, cs))))
     }
     val parts = FilePartition.getFilePartitions(spark, pieces, size)
-    PlanBridge.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema)
+    PlanBridge.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema,
+      files.map(f => BigInt(f.getLen)).sum)
   }
 
   /** Header-scanned files ([[scanFiles]]) in one [[scan]], unioned as by
@@ -347,13 +350,29 @@ object HeaderScan {
     (direct ++ walked).distinct.sorted
   }
 
+  /** Does all of `file` decode strictly in `encoding`? */
+  private def decodesStrictly(
+      fs: org.apache.hadoop.fs.FileSystem,
+      file: String,
+      encoding: String): Boolean = {
+    val in = new java.io.InputStreamReader(fs.open(new Path(file)),
+      java.nio.charset.Charset.forName(encoding).newDecoder()) // REPORTs
+    val buf = new Array[Char](1 << 16)
+    try { while (in.read(buf) != -1) {}; true }
+    catch { case _: java.nio.charset.CharacterCodingException => false }
+    finally in.close()
+  }
+
   /** Executor-side head-scan of `files`, sorted by path: each task runs
     * the shared [[scanHead]] on its files and returns file-count-sized
     * metadata, safe to collect (the listing itself was already
     * driver-memory-sized). The charsets of `encodings` are tried in
     * order; the first that decodes the head strictly and finds the key
-    * column in it is kept in `HeaderInfo.encoding`. Files where none
+    * column in it is kept in `HeaderInfo.encoding`, a charset before the
+    * last only if the whole file decodes strictly in it too (an ASCII
+    * head passes in UTF-8 whatever its data's charset). Files where none
     * does are warned (in that executor's stderr) and skipped.
+    * `maxScanLines = 1` takes line 0 as the header, as `pd.read_csv` does.
     *
     * Scale shape: head-reads are embarrassingly parallel (one bounded
     * ≤ maxScanLines read per file, no shuffle), the schema-inference
@@ -376,8 +395,10 @@ object HeaderScan {
         val conf = bconf.value.value
         it.flatMap { f =>
           val fs = new Path(f).getFileSystem(conf)
-          val found = encodings.iterator.map(scanHead(fs, f, keyCol, maxScanLines, _))
-            .collectFirst { case Some(i) => i }
+          val found = encodings.iterator.flatMap { enc =>
+            scanHead(fs, f, keyCol, maxScanLines, enc)
+              .filter(_ => enc == encodings.last || decodesStrictly(fs, f, enc))
+          }.nextOption()
           if (found.isEmpty) System.err.println(s"[headerscan] WARN: key column " +
             s"'$keyCol' not found in $f (read as ${encodings.mkString(", ")}) — skipping")
           found

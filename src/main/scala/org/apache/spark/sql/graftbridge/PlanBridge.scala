@@ -4,8 +4,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH,
-  ResolvedHint}
+  ResolvedHint, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Logical-plan doorway for the one join hint Spark computes internally
@@ -42,7 +44,14 @@ object PlanBridge {
         HintInfo(strategy = Some(NO_BROADCAST_HASH))))
   }
 
-  /** `rows` of `schema` as a DataFrame over one leaf, no `Row` round trip. */
-  def ofRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+  /** `rows` of `schema` as a DataFrame over one leaf, no `Row` round trip.
+    * The leaf reports `sizeInBytes` to the planner, as a file source reports
+    * its files' bytes, so joins over it plan as they would over `spark.read`.
+    */
+  def ofRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType,
+      sizeInBytes: BigInt): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s,
+      LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(s, Some(Statistics(sizeInBytes))))
+  }
 }

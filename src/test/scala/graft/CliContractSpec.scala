@@ -7,15 +7,18 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{CsvGen, HeaderScan}
+import graft.etl.Kpi
+import graft.sources.{CsvGen, FanOut, HeaderScan}
 
 /** The CLI exit contract of the reference's verifier
   * (verify_fanout.py:187–188): `FanOutMain` output passes
   * `VerifyFanoutMain` with exit 0, and a removed output file or an edited
   * key cell makes it exit 1. Also `PresenceMain`'s per-dataset report
-  * (verify_store_presence.py:35–63). Each main runs in a child JVM (this
-  * JVM's class path and options), so the real `sys.exit` is observed and
-  * the mains' `spark.stop()` cannot stop the shared test session.
+  * (verify_store_presence.py:35–63), and `AggregateMain`'s outputs
+  * against its KPIs over `spark.read.csv` frames (the reference reader).
+  * Each main runs in a child JVM (this JVM's class path and options), so
+  * the real `sys.exit` is observed and the mains' `spark.stop()` cannot
+  * stop the shared test session.
   */
 class CliContractSpec extends AnyFunSuite {
 
@@ -110,21 +113,24 @@ class CliContractSpec extends AnyFunSuite {
   test("big5 with an ASCII key column verifies with exit 0 (heads decode strictly)") {
     // the key column is ASCII, so a lenient UTF-8 read of the head found
     // it and the big5 key cells decoded as mojibake; the head's big5 cell
-    // is malformed UTF-8, so a strict read moves on to big5
+    // is malformed UTF-8, so a strict read moves on to big5. An all-ASCII
+    // head decodes strictly in UTF-8 too: only its big5 data does not
     val utf8 = Map("LC_ALL" -> "C.UTF-8")
-    val in = Files.createTempDirectory("cli_b5k_in")
-    Files.write(in.resolve("b5.csv"),
-      "store,城市\n台北,1\n高雄,2\n".getBytes(java.nio.charset.Charset.forName("big5")))
-    val out = Files.createTempDirectory("cli_b5k_out").resolve("out")
-    val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
-      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
-        "--encoding", "big5", "--output-encoding", "big5"), utf8)
-    assert(fanCode == 0, fanLog)
-    val (code, log) = runMain("graft.cli.VerifyFanoutMain",
-      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
-        "--encoding", "big5"), utf8)
-    assert(code == 0, log)
-    assert(log.contains("total violations=0"), log)
+    Seq("store,城市", "store,v").foreach { head =>
+      val in = Files.createTempDirectory("cli_b5k_in")
+      Files.write(in.resolve("b5.csv"),
+        s"$head\n台北,1\n高雄,2\n".getBytes(java.nio.charset.Charset.forName("big5")))
+      val out = Files.createTempDirectory("cli_b5k_out").resolve("out")
+      val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
+        Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
+          "--encoding", "big5", "--output-encoding", "big5"), utf8)
+      assert(fanCode == 0, fanLog)
+      val (code, log) = runMain("graft.cli.VerifyFanoutMain",
+        Seq("--input-dir", in.toString, "--output-dir", out.toString, "--key", "store",
+          "--encoding", "big5"), utf8)
+      assert(code == 0, s"$head: $log")
+      assert(log.contains("total violations=0"), s"$head: $log")
+    }
   }
 
   test("hidden output files fail verify, each printed by path") {
@@ -223,6 +229,60 @@ class CliContractSpec extends AnyFunSuite {
       "[warn] 25-1 / 25-2（各門市累計綁定）: file not found (各門市累計綁定人數.csv)")
       .foreach(line => assert(log.linesIterator.contains(line), s"no line '$line' in:\n$log"))
   }
+
+  /** The six datasets of [[AggregateFixture]] in a new input dir, `variant` applied. */
+  private def aggregateInput(variant: String*): Path = {
+    val in = Files.createTempDirectory("cli_agg")
+    val (code, log) = runMain("graft.AggregateFixture",
+      in.resolve("aggregate").toString +: variant, Map("LC_ALL" -> "C.UTF-8"))
+    assert(code == 0, log)
+    in
+  }
+
+  test("aggregate: every config writes the bytes of its KPI over spark.read.csv frames") {
+    val utf8 = Map("LC_ALL" -> "C.UTF-8")
+    val in = aggregateInput()
+    val (ref, out) = (Files.createTempDirectory("cli_agg_ref"), Files.createTempDirectory("cli_agg_out"))
+    val (refCode, refLog) = runMain("graft.AggregateReference",
+      Seq(in.resolve("aggregate").toString, ref.toString), utf8)
+    assert(refCode == 0, refLog)
+    AggregateFixture.configs.foreach { k =>
+      val (code, log) = runMain("graft.cli.AggregateMain",
+        Seq("--config", k, "--input-dir", in.toString, "--output-dir", out.toString), utf8)
+      assert(code == 0, log)
+    }
+    def tree(d: Path): Map[String, Seq[Byte]] = outputFiles(d)
+      .map(p => d.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    val (want, got) = (tree(ref), tree(out))
+    assert(AggregateFixture.configs.forall(k => want.keys.exists(_.endsWith(s"/$k.csv"))), want.keys)
+    def text(t: Map[String, Seq[Byte]], f: String) = t.get(f).map(b => new String(b.toArray, "UTF-8"))
+    val differ = (want.keySet ++ got.keySet).toSeq.sorted.filter(f => want.get(f) != got.get(f))
+    assert(differ.isEmpty, differ.map(f => s"$f:\n${text(got, f)}\nwant ${text(want, f)}"))
+  }
+
+  test("presence: a header-only dataset is NONE with rows=0") {
+    val (code, log) = runMain("graft.cli.PresenceMain",
+      Seq("--store", "s9", "--input-dir", aggregateInput("headerOnly").toString),
+      Map("LC_ALL" -> "C.UTF-8"))
+    assert(code == 0, log)
+    Seq(
+      "[OK ] 23-1 / 23-2 / 24-1 / 24-2（區間推薦人綁定）: rows=4",
+      "[OK ] 23-1 / 24-1（累計推薦人綁定）: rows=1",
+      "[OK ] 23-1 / 24-1（會員總數）: rows=1",
+      "[OK ] 24-2（門市首購人數－月份）: rows=2",
+      "[OK ] 25-1 / 25-2（門市首購人數－門市）: rows=1",
+      "[NONE] 25-1 / 25-2（各門市累計綁定）: rows=0")
+      .foreach(line => assert(log.linesIterator.contains(line), s"no line '$line' in:\n$log"))
+  }
+
+  test("presence: a dataset whose line 0 lacks the store column fails, naming the file") {
+    val (code, log) = runMain("graft.cli.PresenceMain",
+      Seq("--store", "s9", "--input-dir", aggregateInput("keyless").toString),
+      Map("LC_ALL" -> "C.UTF-8"))
+    assert(code != 0, log)
+    assert(log.contains("14-1.會員成長趨勢_新增註冊會員數卡片.csv") && log.contains("not on line 0") &&
+      !log.contains("file not found"), log)
+  }
 }
 
 /** Writes five of PresenceMain's six datasets into the directory
@@ -241,5 +301,65 @@ object PresenceFixture {
       "門市首購人數_月份.csv" -> s"$S,月份,門市首購人數\ns9,1,3\ns9,2,4\ns9,3,5\n",
       "門市首購人數_門市.csv" -> s"$S,門市,門市首購人數\ns2,br_1,1\ns9,br_2,2\n")
       .foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
+  }
+}
+
+/** Writes all six aggregate datasets (AggregateMain's inputs, in
+  * PresenceMain's order) into the directory `args(0)`, with the messy
+  * cells of the reference's BI exports: padded keys, `nan`, quoted
+  * `"1,234"`, mixed month formats, a UTF-8 BOM, blank lines and an
+  * all-empty `,,,` row. `args(1)` picks a variant: `headerOnly` leaves the
+  * last dataset its header only, `keyless` puts a meta row above the
+  * members header. Runs in a child JVM under a UTF-8 locale.
+  */
+object AggregateFixture {
+  val files = Seq("區間綁定推薦人人數.csv", "累計至今綁定推薦人人數.csv",
+    "14-1.會員成長趨勢_新增註冊會員數卡片.csv", "門市首購人數_月份.csv", "門市首購人數_門市.csv",
+    "各門市累計綁定人數.csv")
+  val configs = Seq("23-1", "23-2", "24-1", "24-2", "25-1", "25-2")
+
+  def main(args: Array[String]): Unit = {
+    val S = HeaderScan.defaultKeyCol
+    val dir = Files.createDirectories(Paths.get(args(0)))
+    val bodies = Seq(
+      s"\uFEFF$S,年度,月份,總綁定\ns1,2025,1,\"1,234\"\n s1 ,2025,2025-02,10\ns1,2024,1,nan\n" +
+        s"s2,2025,202503,5\n\ns2,2024,03,7\n,,,\ns9,2025,2025/04,\ns9,2024,4,3\ns9, 2025,5,8\n" +
+        s"s9,2024,13,2\ns1,2024,2,  40  \n",
+      s"$S,累計至今推薦人綁定人數\ns1,\"1,000\"\ns2,nan\n s9 ,4\n",
+      s"$S,總會員數\ns1,20\ns2,\"2,500\"\n\ns9,40\n",
+      s"$S,Established At Month,門市首購人數\ns1,2025-01,3\ns1,2,nan\ns2,202503,4\n" +
+        s"s9,04,\"1,200\"\ns9,n/a,1\n",
+      s"$S,門市,門市首購人數\ns1,br_1,2\ns1,br_2,5\ns1,NULL,3\ns2,br_1,nan\n s9 ,br_3,1\n",
+      s"$S,Store Name,年度,總綁定數\ns1,br_1,2025,1\ns1,br_2,2025,\"1,100\"\ns2,br_1,2025,2\n" +
+        s"s9,br_3,2024,1\ns9,br_3,2025,4\n")
+    val variant = args.lift(1) match {
+      case None => bodies
+      case Some("headerOnly") => bodies.updated(5, s"$S,Store Name,年度,總綁定數\n")
+      case Some("keyless") => bodies.updated(2, s"報表,2025\n${bodies(2)}")
+      case Some(v) => throw new IllegalArgumentException(s"unknown variant $v")
+    }
+    files.zip(variant).foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
+  }
+}
+
+/** Each config's KPI over its datasets as `spark.read.csv` reads them
+  * (header on, all strings), written as AggregateMain writes it: the
+  * reference for the aggregate parity case. `args`: the dataset dir and
+  * the output dir. Runs in a child JVM under a UTF-8 locale.
+  */
+object AggregateReference {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession("aggregate-reference")
+    val Seq(binds, cum, mem, fpMonth, fpBranch, branchBinds) = AggregateFixture.files
+      .map(f => spark.read.option("header", "true").csv(s"${args(0)}/$f"))
+    Seq(
+      "23-1" -> Kpi.config23_1(binds, cum, mem),
+      "23-2" -> Kpi.config23_2(binds),
+      "24-1" -> Kpi.config24_1(binds, cum, mem),
+      "24-2" -> Kpi.config24_2(fpMonth, binds),
+      "25-1" -> Kpi.config25_1(fpBranch, branchBinds),
+      "25-2" -> Kpi.config25_2(fpBranch, branchBinds))
+      .foreach { case (k, df) => FanOut.write(df, Kpi.S, args(1), k, bom = true) }
+    spark.stop()
   }
 }

@@ -243,10 +243,11 @@ class FanOutSpec extends SparkSpec {
     val bad = Seq(("s1", "s1"), ("s9", "s1")).toDF(S, "_dir_key")
     assert(VerifyOps.contentViolations(bad, S).count() == 1)
 
+    // one grouped count over all datasets: d2 holds no s1 row, so no count
     val presence = VerifyOps.presence(
-      Seq("d1" -> Seq("s1", "s2").toDF(S), "d2" -> Seq("s2").toDF(S)),
-      S, "s1").orderBy("dataset").collect()
-    assert(presence(0).getBoolean(2) && !presence(1).getBoolean(2))
+      Seq(("d1", "s1"), ("d1", " s1 "), ("d1", "s2"), ("d2", "s2")).toDF("ds", S),
+      S, "s1", col("ds")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(presence == Map("d1" -> 2L))
   }
 
   test("VerifyOps.violationSamples: at most k per file, ranked, counted") {

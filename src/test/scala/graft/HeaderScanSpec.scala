@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.cli.Args
+import graft.etl.VerifyOps
 import graft.sources.HeaderScan
 
 /** Byte-offset header-scan ingestion: dataStart accuracy under BOM and
@@ -270,5 +272,55 @@ class HeaderScanSpec extends SparkSpec {
     val got = df.select("store", "v").orderBy("store").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(got == Seq(("x1", "1"), ("x2", "2")))
+  }
+
+  /** `body` as file `name` in a fresh dir, scanned with its line 0 as the
+    * header (the CLI's aggregate and presence read).
+    */
+  private def lineZero(name: String, body: String): (String, Seq[HeaderScan.HeaderInfo]) = {
+    val f = tmpDir("line0").resolve(name)
+    Files.write(f, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (f.toString, HeaderScan.scanFiles(spark, Seq(f.toString), "store", maxScanLines = 1))
+  }
+
+  test("line-0 read ≡ spark.read.csv: BOM, quoted comma, empty cells, ragged rows, padded header") {
+    Seq(
+      "bom.csv" -> "\uFEFFstore,v\ns1,1\ns2,2\n",
+      "comma.csv" -> "store,v\ns1,\"1,234\"\ns2,\"5\"\n",
+      "empty.csv" -> "store,a,b,c\ns1,,2,\n,,,\ns2,1,,\n",
+      "ragged.csv" -> "store,a,b\ns1\ns2,1\ns3,1,2,3,4\n",
+      "padded.csv" -> " store , v \n s1 , 1 \ns2,2\n").foreach { case (name, body) =>
+      val (f, infos) = lineZero(name, body)
+      assert(infos.length == 1, name)
+      val ours = HeaderScan.readFiles(spark, infos).drop("_path")
+      val ref = spark.read.option("header", "true").csv(f)
+      assert(ours.columns.toSeq == ref.columns.map(_.trim).toSeq, name)
+      assert(ours.collect().toSeq == ref.collect().toSeq, name)
+    }
+  }
+
+  test("a doubled quote in a quoted cell reads as pandas reads it") {
+    // spark.read.csv (escape '\\') read it as `"q ""x""`; Python's csv
+    // dialect, as pandas, undoubles the quote
+    val (_, infos) = lineZero("quote.csv", "store,v\ns1,\"q \"\"x\"\"\"\n")
+    assert(HeaderScan.readFiles(spark, infos).select("v").head().getString(0) == "q \"x\"")
+  }
+
+  test("a line 0 without the key column is not a header, even with the key below it") {
+    val (_, infos) = lineZero("meta.csv", "report,2025\nstore,v\ns1,1\n")
+    assert(infos.isEmpty)
+  }
+
+  test("a blank line adds no row to the CLI's aggregate or presence input") {
+    // a dotted header name too: the blank-row drop must not parse names
+    val body = "store,a.b\ns1,1\n\ns2,2\n\n s1 ,3\n"
+    val (f, _) = lineZero("blank.csv", body)
+    val ref = spark.read.option("header", "true").csv(f)
+    val Seq(agg) = Args.readHeaded(spark, Seq(f), "store")
+    assert(agg.columns.toSeq == Seq("store", "a.b"))
+    assert(agg.collect().toSeq == ref.collect().toSeq && agg.count() == 3)
+    val counts = VerifyOps.presence(HeaderScan.readFiles(spark, Args.scanHeaded(spark, Seq(f), "store")),
+      "store", "s1", col("_path")).collect().map(_.getLong(1)).toSeq
+    assert(counts == Seq(ref.filter(trim(col("store")) === "s1").count()) && counts == Seq(2L))
   }
 }

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the session policy, the storage root and the CSV dialect
-  * single: no source file under src/main/scala may build a session
-  * outside [[GraftSession]], read the JVM temp dir outside [[WorkDir]],
-  * or parse or render CSV cells outside `FanOut`.
+/** Keeps the session policy, the storage root, the CSV dialect and the
+  * CSV reader single: no source file under src/main/scala may build a
+  * session outside [[GraftSession]], read the JVM temp dir outside
+  * [[WorkDir]], parse or render CSV cells outside `FanOut`, or read CSV
+  * other than through `HeaderScan`.
   */
 class SourceSeamsSpec extends AnyFunSuite {
 
@@ -37,5 +38,9 @@ class SourceSeamsSpec extends AnyFunSuite {
     Seq("hadoopRDD(", "from_csv(", "to_csv(").foreach(n => assert(filesContaining(n).isEmpty, n))
     assert(filesContaining("UnivocityParser") == Set("FanOut.scala"))
     assert(filesContaining("UnivocityGenerator") == Set("FanOut.scala"))
+  }
+
+  test("CSV is read only through HeaderScan: no spark.read.csv") {
+    assert(filesContaining(".csv(").isEmpty)
   }
 }
