@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one session policy: every main (Bench, Verify, Explain,
   * ExplainFinal, StreamBench, StreamResume), the CLI programs and the
   * test suite build their session here, so the plans a test, an audit
-  * or an oracle check sees are the plans the bench runs.
+  * or an oracle check sees are the plans the bench runs. The CLI
+  * programs add [[interpreted]]: the same plans, evaluated without
+  * generated code.
   */
 object GraftSession {
 
@@ -62,7 +64,8 @@ object GraftSession {
       // skipped by DynamicJoinSelection, as intended. Static
       // preferSortMergeJoin stays TRUE: flipping it plans SHJ from size
       // estimates. AQE, whole-stage codegen and partition coalescing
-      // stay at Spark's defaults; SPARK_GRAFT_EXTRA_CONF reaches them.
+      // stay at Spark's defaults, except that the CLI programs turn
+      // codegen off ([[interpreted]]); SPARK_GRAFT_EXTRA_CONF reaches them.
       "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> shj.toString,
       // COUPLING: Spark only applies the rewrite when the advisory
       // partition size <= the threshold. The Spark-default advisory is
@@ -75,9 +78,33 @@ object GraftSession {
     ) ++ env.get("SPARK_GRAFT_JARS").map("spark.jars" -> _)
   }
 
+  /** The CLI programs' caller addition: evaluate every plan interpreted.
+    * Spark caches generated classes per (class loader, code), and each
+    * SparkContext's executor has its own class loader, so a short CLI
+    * session compiles every stage's code twice (driver and executor) and
+    * the next session starts from an empty cache; the compiled code then
+    * runs over a few thousand rows. Both keys are needed: with whole-stage
+    * codegen off alone, every operator compiles its own projections and
+    * predicates instead. `spark.sql.codegen.factoryMode` is an internal
+    * Spark conf, not meant for end users; `NO_CODEGEN` makes Spark's
+    * projection and predicate factories take their interpreted path,
+    * which GraftSessionSpec pins, so a Spark upgrade that ignores the key
+    * fails a test. The plans do not change. Long sessions (Bench, Verify,
+    * StreamBench, the tests) keep codegen: their cache hits.
+    * SPARK_GRAFT_EXTRA_CONF, applied after it, restores codegen for an A/B.
+    */
+  def interpreted(b: SparkSession.Builder): Unit =
+    interpretedConf.foreach { case (k, v) => b.config(k, v) }
+
+  /** The pairs [[interpreted]] sets. */
+  private[graft] val interpretedConf: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   /** Build (or join) the session: policy, then the caller's additions
-    * (`extra`, e.g. [[ExtraConf.stateStore]]), then SPARK_GRAFT_EXTRA_CONF
-    * last, so the generic seam can still override anything.
+    * (`extra`, e.g. [[ExtraConf.stateStore]] or [[interpreted]]), then
+    * SPARK_GRAFT_EXTRA_CONF last, so the generic seam can still override
+    * anything.
     */
   def apply(app: String,
             extra: SparkSession.Builder => Any = _ => ()): SparkSession = {

@@ -76,7 +76,7 @@ object FanOutMain {
     val enc = a.getOrElse("encoding", "UTF-8")
     val outEnc = a.getOrElse("output-encoding", "UTF-8")
     val key = a.getOrElse("key", HeaderScan.defaultKeyCol)
-    val spark = GraftSession("graft-fanout")
+    val spark = GraftSession("graft-fanout", GraftSession.interpreted)
     val infos = HeaderScan.scanDir(spark, in, key, enc)
     infos.foreach(i => println(s"[info] processing: ${i.path}"))
     FanOut.writeFiles(spark, infos, key, out, encoding = outEnc)
@@ -111,7 +111,7 @@ object VerifyFanoutMain {
       case Some(v) => throw new IllegalArgumentException(
         s"--strict expects true or false, got '$v'")
     }
-    val spark = GraftSession("graft-verify-fanout")
+    val spark = GraftSession("graft-verify-fanout", GraftSession.interpreted)
     import spark.implicits._
 
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -138,21 +138,22 @@ object VerifyFanoutMain {
     // --strict: the reference verifier's expectation — every store dir
     // that exists must hold every input file (verify_fanout.py
     // check_file_sets: missing = input_files - store_files per dir)
-    val setProblems = (
-      if (strict)
-        VerifyOps.fileSetCheck(present, key, srcNames)
-      else VerifyOps.fileSetCheckPairs(present, expected, key)).cache()
-    val nMissing = setProblems.filter(col("kind") === "missing").count()
-    val nExtra = setProblems.filter(col("kind") === "extra").count()
-    println(s"[sets] input files=${inputs.length} missing=$nMissing extra=$nExtra")
+    val setProblems =
+      if (strict) VerifyOps.fileSetCheck(present, key, srcNames)
+      else VerifyOps.fileSetCheckPairs(present, expected, key)
     // first 10 stores PER set problem (verify_fanout.py truncation) — a
-    // flood of one kind must not hide the other
-    val wKind = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("kind")).orderBy(col(key), col("src"))
-    setProblems.withColumn("_r", row_number().over(wKind))
+    // flood of one kind must not hide the other — each row carrying its
+    // kind's total: one bounded collect
+    val byKind = org.apache.spark.sql.expressions.Window.partitionBy(col("kind"))
+    val shown = setProblems
+      .withColumn("_n", count(lit(1)).over(byKind))
+      .withColumn("_r", row_number().over(byKind.orderBy(col(key), col("src"))))
       .filter(col("_r") <= 10)
       .orderBy(col("kind"), col(key), col("src")).collect()
-      .foreach(r => println(s"  ${r.getString(1)}: store=${r.getString(0)} file=${r.getString(2)}.csv"))
+    val nOf = shown.map(r => r.getString(1) -> r.getLong(3)).toMap
+    val (nMissing, nExtra) = (nOf.getOrElse("missing", 0L), nOf.getOrElse("extra", 0L))
+    println(s"[sets] input files=${inputs.length} missing=$nMissing extra=$nExtra")
+    shown.foreach(r => println(s"  ${r.getString(1)}: store=${r.getString(0)} file=${r.getString(2)}.csv"))
 
     // pass 2 — content invariant over every listed output file, strays
     // included (verify_fanout.py's check_store_no_values), in ONE read:
@@ -218,7 +219,7 @@ object AggregateMain {
       "input-file", "store-col", "month-col", "target-col", "months"))
     val inDir = a.getOrElse("input-dir", "./input")
     val outDir = a.getOrElse("output-dir", "./output")
-    val spark = GraftSession("graft-aggregate")
+    val spark = GraftSession("graft-aggregate", GraftSession.interpreted)
     // the six dedicated configs read from {input-dir}/aggregate; the
     // generic path reads its --input-file relative to {input-dir} root
     // unless the config says otherwise (aggregate_by_store.py:733)
@@ -268,7 +269,7 @@ object PresenceMain {
     val a = Args.parse(args, Set("store", "input-dir"))
     val store = Args.required(a, "store")
     val aggDir = new Path(s"${a.getOrElse("input-dir", "./input")}/aggregate")
-    val spark = GraftSession("graft-presence")
+    val spark = GraftSession("graft-presence", GraftSession.interpreted)
     val fs = aggDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     files.foreach { case (_, f) => FanOut.requireLocalName(fs, f) } // else every name reads as missing
     val listed = if (fs.exists(aggDir)) fs.listStatus(aggDir).map(_.getPath.getName).toSet

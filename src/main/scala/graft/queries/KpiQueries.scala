@@ -48,7 +48,7 @@ object KpiQueries {
       .otherwise(y.cast("string"))
 
   /** A2 區間綁定推薦人人數 from orders. */
-  private def fabBinds(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabBinds(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderdate"))
       .withColumn("_mv", pmod(col("o_orderkey"), lit(5000)))
@@ -59,7 +59,7 @@ object KpiQueries {
         messyNum(col("_mv"), col("o_orderkey")).as("總綁定"))
 
   /** A3 累計至今綁定推薦人人數 from customer (with null tokens). */
-  private def fabCumulative(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabCumulative(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.customer(s, d).select("c_custkey"))
       .withColumn("_mv", pmod(col("c_custkey"), lit(997)))
       .select(
@@ -68,7 +68,7 @@ object KpiQueries {
           .otherwise(messyNum(col("_mv"), col("c_custkey"))).as("累計至今推薦人綁定人數"))
 
   /** A4 member totals from customer. */
-  private def fabMembers(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabMembers(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.customer(s, d).select("c_custkey"))
       .withColumn("_mv", pmod(col("c_custkey"), lit(89)) + 10)
       .select(
@@ -78,7 +78,7 @@ object KpiQueries {
   /** A5 first purchases per month from orders — month under the
     * "Established At Month" alias header (exercises ensureMonthCol).
     */
-  private def fabFirstByMonth(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabFirstByMonth(s: SparkSession, d: String): DataFrame =
     // year filter BELOW the spread: it prunes at the scan (PushedFilters)
     // and the checkpoint holds 1/7th of the rows
     Tables.spread(Tables.orders(s, d)
@@ -93,7 +93,7 @@ object KpiQueries {
   /** A6 first purchases per branch from lineitem — name under the 門市
     * alias, with injected null tokens.
     */
-  private def fabFirstByBranch(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabFirstByBranch(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber"))
       .withColumn("_mv", col("l_linenumber").cast("long"))
@@ -104,7 +104,7 @@ object KpiQueries {
         messyNum(col("_mv"), col("l_orderkey")).as("門市首購人數"))
 
   /** A7 cumulative binds per branch from lineitem — "Store Name" alias. */
-  private def fabBranchBinds(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabBranchBinds(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_partkey", "l_quantity"))
       .withColumn("_mv", col("l_quantity").cast("long"))
@@ -311,7 +311,7 @@ object KpiQueries {
     * strings (the generic path matches them by string equality, no
     * parsing), padded and null-token values for the bare coercion.
     */
-  private def fabVisits(s: SparkSession, d: String): DataFrame =
+  private[graft] def fabVisits(s: SparkSession, d: String): DataFrame =
     Tables.spread(Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderdate"))
       .select(

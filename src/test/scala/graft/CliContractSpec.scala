@@ -260,6 +260,34 @@ class CliContractSpec extends AnyFunSuite {
     assert(differ.isEmpty, differ.map(f => s"$f:\n${text(got, f)}\nwant ${text(want, f)}"))
   }
 
+  test("aggregate: every config and the generic path write the registry's KPI rows on its fab inputs") {
+    // the registry (q18–q22, q30, q32) runs with codegen in its own JVM;
+    // AggregateMain runs interpreted. Rows compare order-blind per file,
+    // as the oracle compares: the two plans read different sources
+    val utf8 = Map("LC_ALL" -> "C.UTF-8")
+    val in = Files.createTempDirectory("cli_kpi_in")
+    val (ref, out) = (Files.createTempDirectory("cli_kpi_ref"), Files.createTempDirectory("cli_kpi_out"))
+    val (refCode, refLog) = runMain("graft.KpiRegistryReference",
+      Seq(SparkSpec.sf0001, in.toString, ref.toString), utf8)
+    assert(refCode == 0, refLog)
+    val generic = Seq("--input-file", "visits.csv", "--store-col", "store_id", "--month-col", "yyyymm",
+      "--target-col", "visit_count", "--months", (1 to 12).map(m => f"1996$m%02d").mkString(","))
+    (AggregateFixture.configs.map(k => Seq("--config", k)) :+ generic).foreach { cfg =>
+      val (code, log) = runMain("graft.cli.AggregateMain",
+        cfg ++ Seq("--input-dir", in.toString, "--output-dir", out.toString), utf8)
+      assert(code == 0, log)
+    }
+    def tree(d: Path): Map[String, (String, Seq[String])] = outputFiles(d).map { p =>
+      val lines = Files.readAllLines(p).asScala.toSeq
+      d.relativize(p).toString -> (lines.head, lines.tail.sorted)
+    }.toMap
+    val (want, got) = (tree(ref), tree(out))
+    assert((AggregateFixture.configs :+ "visits").forall(k =>
+      want.count(_._1.endsWith(s"/$k.csv")) > 1), want.keys)
+    val differ = (want.keySet ++ got.keySet).toSeq.sorted.filter(f => want.get(f) != got.get(f))
+    assert(differ.isEmpty, differ.map(f => s"$f:\n${got.get(f)}\nwant ${want.get(f)}"))
+  }
+
   test("presence: a header-only dataset is NONE with rows=0") {
     val (code, log) = runMain("graft.cli.PresenceMain",
       Seq("--store", "s9", "--input-dir", aggregateInput("headerOnly").toString),
@@ -360,6 +388,46 @@ object AggregateReference {
       "25-1" -> Kpi.config25_1(fpBranch, branchBinds),
       "25-2" -> Kpi.config25_2(fpBranch, branchBinds))
       .foreach { case (k, df) => FanOut.write(df, Kpi.S, args(1), k, bom = true) }
+    spark.stop()
+  }
+}
+
+/** The registry's KPI entries and their inputs: `args` are the testdata
+  * dir, an input dir and an output dir. Writes the `KpiQueries` `fab*`
+  * frames as the six aggregate datasets (`{in}/aggregate`, years 2000 and
+  * 1999 relabelled 2025 and 2024, AggregateMain's fixed years) and as
+  * `{in}/visits.csv`, and q18–q22, q30 and q32 as AggregateMain writes its
+  * configs. Runs in a child JVM under a UTF-8 locale.
+  */
+object KpiRegistryReference {
+  def main(args: Array[String]): Unit = {
+    import graft.queries.{KpiQueries => K, Registry}
+    val Array(sf, in, out) = args
+    val spark = GraftSession("kpi-registry-reference")
+    val years = Map("2000" -> "2025", "1999" -> "2024")
+    def cell(c: String) =
+      if (c.exists(",\"\r\n".contains(_))) "\"" + c.replace("\"", "\"\"") + "\"" else c
+    def writeCsv(df: org.apache.spark.sql.DataFrame, path: Path): Unit = {
+      val rows = df.collect().map(r => df.columns.map { c =>
+        val v = r.getAs[String](c)
+        if (c == "年度") years.foldLeft(v) { case (s, (a, b)) => s.replace(a, b) } else v
+      })
+      Files.createDirectories(path.getParent)
+      Files.write(path, (df.columns +: rows).map(_.map(cell).mkString(",")).toSeq.asJava)
+    }
+    AggregateFixture.files.zip(Seq(K.fabBinds _, K.fabCumulative _, K.fabMembers _,
+      K.fabFirstByMonth _, K.fabFirstByBranch _, K.fabBranchBinds _)).foreach { case (f, fab) =>
+      writeCsv(fab(spark, sf), Paths.get(in, "aggregate", f))
+    }
+    writeCsv(K.fabVisits(spark, sf), Paths.get(in, "visits.csv"))
+    Seq(
+      "q18_kpi_23_1" -> "23-1", "q19_kpi_23_2" -> "23-2", "q30_kpi_24_1" -> "24-1",
+      "q20_kpi_24_2" -> "24-2", "q21_kpi_25_1" -> "25-1", "q22_kpi_25_2" -> "25-2",
+      "q32_generic_config" -> "visits").foreach { case (q, k) =>
+      val df = years.foldLeft(Registry.queries(q)(spark, sf)) { case (d, (a, b)) =>
+        d.withColumnRenamed(s"${a}年", s"${b}年") }
+      FanOut.write(df, if (k == "visits") "store_id" else Kpi.S, out, k, bom = true)
+    }
     spark.stop()
   }
 }

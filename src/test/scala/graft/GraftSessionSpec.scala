@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+
 /** The one session policy ([[GraftSession]]): the shared test session is
   * built by it, and its settings are a pure function of (env, props).
   */
@@ -43,5 +48,34 @@ class GraftSessionSpec extends SparkSpec {
     val lowered = settings(env = Map("SPARK_GRAFT_AQE_SHJ_THRESHOLD" -> "16m"))
     assert(lowered(shj) == (16L << 20).toString)
     assert(lowered(advisory).toLong <= lowered(shj).toLong)
+  }
+
+  test("GraftSession.interpreted: no whole-stage codegen, no compiled projection or predicate") {
+    val compiles = () => CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // a literal no earlier query used: its code is not in the codegen cache
+    def projectFilter(): Unit = {
+      val salt = System.nanoTime()
+      spark.range(0, 100).select((col("id") * salt).as("x"))
+        .filter(col("x") % 7 === 0).queryExecution.toRdd.count()
+    }
+    // control: at the session's defaults the same shape compiles
+    val before = compiles()
+    projectFilter()
+    assert(compiles() > before)
+    withConf(GraftSession.interpretedConf: _*) {
+      // CLI-shaped: trimmed string keys, a grouped sum joined back, sorted
+      val rows = spark.range(0, 200).select(
+        concat(lit(" s"), (col("id") % 5).cast("string")).as("k"), col("id").as("v"))
+      val sums = rows.groupBy(trim(col("k")).as("k")).agg(sum(col("v")).as("total"))
+      val joined = rows.select(trim(col("k")).as("k"), col("v")).join(sums, "k").orderBy("k", "v")
+      assert(joined.collect().length == 200)
+      val stages = new AdaptiveSparkPlanHelper {}.collect(joined.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w
+      }
+      assert(stages.isEmpty, joined.queryExecution.executedPlan)
+      val at = compiles()
+      projectFilter()
+      assert(compiles() == at)
+    }
   }
 }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * CSV reader single: no source file under src/main/scala may build a
   * session outside [[GraftSession]], read the JVM temp dir outside
   * [[WorkDir]], parse or render CSV cells outside `FanOut`, or read CSV
-  * other than through `HeaderScan`.
+  * other than through `HeaderScan`; and every CLI program's session is
+  * [[GraftSession.interpreted]].
   */
 class SourceSeamsSpec extends AnyFunSuite {
 
@@ -42,5 +43,12 @@ class SourceSeamsSpec extends AnyFunSuite {
 
   test("CSV is read only through HeaderScan: no spark.read.csv") {
     assert(filesContaining(".csv(").isEmpty)
+  }
+
+  test("every CLI session is built interpreted") {
+    val cli = Files.readString(root.resolve("graft/cli/Cli.scala"))
+    val calls = "GraftSession\\(([^)]*)\\)".r.findAllMatchIn(cli).map(_.group(1)).toSeq
+    assert(calls.nonEmpty)
+    assert(calls.forall(_.endsWith(", GraftSession.interpreted")), calls)
   }
 }

@@ -9,13 +9,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlc = spark.sqlContext
 
-  /** Smallest driver-generated fixture dir; overridable via env/prop so
-    * the suite isn't pinned to this machine's layout.
-    */
-  protected lazy val sf0001: String =
-    sys.env.get("SPARK_GRAFT_TESTDATA")
-      .orElse(sys.props.get("graft.testdata"))
-      .getOrElse("/root/testdata") + "/sf0.001"
+  protected lazy val sf0001: String = SparkSpec.sf0001
 
   /** Run `body` under session confs `pairs`, then restore each key's
     * previous value — never `unset`, which would drop a policy value
@@ -32,6 +26,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Smallest driver-generated fixture dir; overridable via env/prop so
+    * the suite isn't pinned to this machine's layout.
+    */
+  lazy val sf0001: String =
+    sys.env.get("SPARK_GRAFT_TESTDATA")
+      .orElse(sys.props.get("graft.testdata"))
+      .getOrElse("/root/testdata") + "/sf0.001"
+
   // One session for the whole forked test JVM — Spark startup is ~5s.
   // Built by the production policy, so the suite runs the extensions
   // and join settings the mains run.
