@@ -207,12 +207,13 @@ object VerifyFanoutMain {
   */
 object AggregateMain {
 
-  private val binds = "區間綁定推薦人人數.csv"
-  private val cum = "累計至今綁定推薦人人數.csv"
-  private val mem = "14-1.會員成長趨勢_新增註冊會員數卡片.csv"
-  private val fpMonth = "門市首購人數_月份.csv"
-  private val fpBranch = "門市首購人數_門市.csv"
-  private val branchBinds = "各門市累計綁定人數.csv"
+  private val Seq(binds, cum, mem, fpMonth, fpBranch, branchBinds) = PresenceMain.files.map(_._2)
+
+  /** The configs that list each store's rows by month, ascending
+    * (aggregate_by_store.py:311, 504). The 25-x rows leave their rank
+    * window in rank order, which the write keeps.
+    */
+  private[graft] val byMonth = Set("23-2", "24-2")
 
   def main(args: Array[String]): Unit = {
     val a = Args.parse(args, Set("config", "input-dir", "output-dir",
@@ -244,8 +245,9 @@ object AggregateMain {
       }
     }
     val result = kpi(Args.readHeaded(spark, files, keyCol))
+    val order = if (a.contains("input-file") || !byMonth(cfgKey)) lit(0) else col("月份")
     // stores = files written (the reference counts stores written too)
-    val stores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
+    val stores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true, order = order)
     println(s"[OK] config=$cfgKey, stores=${stores.length}")
     spark.stop()
   }
@@ -256,8 +258,10 @@ object AggregateMain {
   */
 object PresenceMain {
 
-  /** The six-dataset registry (verify_store_presence.py:7–32). */
-  private val files = Seq(
+  /** The six datasets of `{input-dir}/aggregate`, description → file
+    * name (verify_store_presence.py:7–32); AggregateMain reads them too.
+    */
+  private[cli] val files = Seq(
     "23-1 / 23-2 / 24-1 / 24-2（區間推薦人綁定）" -> "區間綁定推薦人人數.csv",
     "23-1 / 24-1（累計推薦人綁定）" -> "累計至今綁定推薦人人數.csv",
     "23-1 / 24-1（會員總數）" -> "14-1.會員成長趨勢_新增註冊會員數卡片.csv",

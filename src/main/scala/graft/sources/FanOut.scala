@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -44,16 +45,29 @@ object FanOut {
 
   private def strings(n: Int) = StructType((0 until n).map(i => StructField(s"c$i", StringType)))
 
+  /** The dialect's read options; a line is parsed whole. */
+  private def readOptions = new CSVOptions(Map("lineSep" -> "\uFFFF") ++ csvDialect, true, "UTC")
+
   /** One line → `n` string cells, parsed as `from_csv` parses (PERMISSIVE:
     * a short row's missing cells and empty cells are null, a long row is
     * cut to `n`). The result row is reused by the next call.
     */
   private[sources] def csvParser(n: Int): String => InternalRow = {
-    val options = new CSVOptions(Map("lineSep" -> "\uFFFF") ++ csvDialect, true, "UTC")
+    val options = readOptions
     val univocity = new UnivocityParser(strings(n), strings(n), options)
     val parser = new FailureSafeParser[String](univocity.parse(_), PermissiveMode, strings(n),
       options.columnNameOfCorruptRecord)
     line => parser.parse(line).next()
+  }
+
+  /** A header line → its cells, tokenized as `spark.read.csv` tokenizes
+    * a header (the dialect's Univocity parser, so a header splits as its
+    * data lines do), trimmed, a missing cell "". One per task: the parser
+    * is reused by the next call.
+    */
+  private[sources] def headerCells(): String => Seq[String] = {
+    val parser = new CsvParser(readOptions.asParserSettings)
+    line => Option(parser.parseLine(line)).toSeq.flatten.map(c => Option(c).getOrElse("").trim)
   }
 
   /** `n` string cells → one line without terminator, as `to_csv` renders. */
@@ -110,6 +124,9 @@ object FanOut {
     * (fan_out_by_storeid.py:14/:42) and CRLF: pass `encoding = "big5",
     * lineSep = "\r\n"` for byte-identical output (FanOutSpec pins it).
     * `bom` is the utf-8-sig marker and therefore requires UTF-8 output.
+    *
+    * Each file lists its rows by `order` (a non-null integral column of
+    * `df`), then in input order.
     */
   def write(
       df: DataFrame,
@@ -119,7 +136,8 @@ object FanOut {
       prefixRows: Seq[String] = Nil,
       bom: Boolean = false,
       encoding: String = "UTF-8",
-      lineSep: String = "\n"): Seq[String] = {
+      lineSep: String = "\n",
+      order: Column = lit(0)): Seq[String] = {
     require(!bom || java.nio.charset.Charset.forName(encoding) ==
       java.nio.charset.StandardCharsets.UTF_8,
       s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
@@ -128,11 +146,11 @@ object FanOut {
     val names = df.columns.toSeq
     val cells = names.map(c => if (c == keyCol) key else quoted(c).cast(StringType))
     import df.sparkSession.implicits._
-    // seq is taken before the shuffle: (src, seq) is the input order
-    val rows = df.select(key, monotonically_increasing_id(), array(cells: _*))
-      .as[(String, Long, Seq[String])].mapPartitions { it =>
+    // seq is (order, input position), the position taken before the shuffle
+    val rows = df.select(key, order.cast("long"), monotonically_increasing_id(), array(cells: _*))
+      .as[(String, Long, Long, Seq[String])].mapPartitions { it =>
         val line = csvLine(names.length)
-        it.map { case (k, seq, c) => (k, srcName, seq, line(cellsRow(c))) }
+        it.map { case (k, o, pos, c) => (k, srcName, (o, pos), line(cellsRow(c))) }
       }.toDF("k", "src", "seq", "line")
     writeRows(rows, Map(srcName -> head(if (bom) "\uFEFF" else "", prefixRows, names, lineSep)),
       outDir, encoding, lineSep)

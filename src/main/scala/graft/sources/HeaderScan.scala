@@ -29,7 +29,9 @@ import org.apache.spark.util.SerializableConfiguration
   * read of ≤ maxScanLines lines per file, in executors — [[scanFiles]];
   * the same role as schema inference) and records the BYTE OFFSET where
   * data starts; the *data read* ([[scan]]) is ONE line source for all
-  * files whatever their headers, with tasks that follow bytes. Fan-out
+  * files whatever their headers, with tasks that follow bytes. Both read
+  * lines with Hadoop's `LineRecordReader` and cells with the dialect's
+  * parser ([[FanOut]]), so a header splits as its data does. Fan-out
   * inputs ([[FanOut.writeFiles]]) and outputs ([[FanOut.read]], the
   * verifier), and the aggregate and presence inputs of `graft.cli`, are
   * read this way, file names taken literally.
@@ -40,98 +42,57 @@ object HeaderScan {
 
   /** Result of scanning one file's head.
     *
-    * @param dataStart byte offset of the first data line (prefix + header
-    *                  bytes, including BOM and CR/LF — measured raw, so
-    *                  the offset matches `LineRecordReader`'s line keys)
-    * @param encoding  the first charset that decodes the head strictly
-    *                  and finds the key column; the lines decode with it
+    * @param prefixRows the lines above the header, verbatim
+    * @param columns    the header's cells ([[FanOut.headerCells]])
+    * @param dataStart  byte offset of the line after the header: the
+    *                   position of [[scan]]'s `LineRecordReader` past the
+    *                   header line, BOM and terminators included
+    * @param encoding   the first charset that decodes the head strictly
+    *                   and finds the key column; the lines decode with it
     */
   final case class HeaderInfo(
       path: String,
-      prefixRows: Seq[String], // verbatim meta lines above the header
-      columns: Seq[String], // trimmed header cells
-      skipLines: Int, // prefix + header line count
+      prefixRows: Seq[String],
+      columns: Seq[String],
       dataStart: Long,
       encoding: String)
 
-  /** Minimal CSV line splitter for the header scan (quoted cells with
-    * embedded commas supported); data lines go through the dialect's
-    * real parser ([[FanOut.csvParser]]).
-    */
-  private[sources] def splitCsvLine(line: String): Seq[String] = {
-    val out = ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb += '"'; i += 1 }
-          else inQ = false
-        } else sb += c
-      } else c match {
-        case '"' => inQ = true
-        case ',' => out += sb.result(); sb.clear()
-        case _ => sb += c
-      }
-      i += 1
-    }
-    out += sb.result()
-    out.toSeq
-  }
-
-  /** The head-scan core of [[scanFiles]], run in executors. Each line is
-    * decoded strictly: a head holding a byte sequence malformed in
-    * `encoding` is not read in it (None), so the caller moves on to its
-    * next charset instead of matching on replacement characters.
+  /** The head-scan core of [[scanFiles]], run in executors: `file`'s lines
+    * as [[scan]] reads them (Hadoop's `LineRecordReader` from offset 0:
+    * lines end at \n, \r\n or \r, a UTF-8 BOM is skipped), each decoded
+    * strictly in `encoding`, up to the first of `maxScanLines` whose cells
+    * hold `keyCol`. None when there is no such line or a line does not
+    * decode, so the caller moves on to its next charset instead of
+    * matching on replacement characters; with `toEof`, every line after
+    * the header must decode too.
     */
   private def scanHead(
       fs: org.apache.hadoop.fs.FileSystem,
       file: String,
       keyCol: String,
       maxScanLines: Int,
-      encoding: String): Option[HeaderInfo] = {
-    val in = new java.io.BufferedInputStream(fs.open(new Path(file)))
+      encoding: String,
+      cellsOf: String => Seq[String],
+      toEof: Boolean): Option[HeaderInfo] = {
+    val lines = new LineRecordReader(fs.open(new Path(file)), 0, Long.MaxValue, Int.MaxValue)
+    val (offset, text) = (lines.createKey(), lines.createValue())
+    val decoder = java.nio.charset.Charset.forName(encoding).newDecoder() // REPORTs
+    def decoded() = decoder.decode(java.nio.ByteBuffer.wrap(text.getBytes, 0, text.getLength))
     try {
-      val decoder = java.nio.charset.Charset.forName(encoding).newDecoder() // REPORTs
       val prefix = ArrayBuffer.empty[String]
-      var found: Option[HeaderInfo] = None
-      var pos = 0L // bytes consumed so far (incl. BOM + line terminators)
-      var n = 0
-      var firstLine = true
-      var eof = false
-      while (!eof && found.isEmpty && n < maxScanLines) {
-        val buf = new java.io.ByteArrayOutputStream()
-        var b = in.read()
-        var consumed = 0L
-        // line terminators exactly as Hadoop's LineRecordReader (and the
-        // old BufferedReader.readLine) see them: \n, \r\n, or lone \r
-        while (b != -1 && b != '\n' && b != '\r') { buf.write(b); consumed += 1; b = in.read() }
-        if (b == '\r') {
-          consumed += 1
-          in.mark(1)
-          if (in.read() == '\n') consumed += 1 else in.reset()
-        } else if (b == '\n') consumed += 1
-        if (b == -1 && buf.size() == 0) eof = true
-        else {
-          var line =
-            try decoder.decode(java.nio.ByteBuffer.wrap(buf.toByteArray)).toString
-            catch { case _: java.nio.charset.CharacterCodingException => return None }
-          // strip a UTF-8 BOM if present (utf-8-sig exports); its bytes
-          // stay in `consumed`, keeping dataStart aligned with the file
-          if (firstLine && line.nonEmpty && line.charAt(0) == '﻿')
-            line = line.substring(1)
-          firstLine = false
-          pos += consumed
-          val cells = splitCsvLine(line).map(_.trim)
-          if (cells.contains(keyCol))
-            found = Some(HeaderInfo(file, prefix.toSeq, cells, prefix.length + 1, pos, encoding))
-          else { prefix += line; n += 1 }
-        }
+      var header: Option[Seq[String]] = None
+      while (header.isEmpty && prefix.length < maxScanLines && lines.next(offset, text)) {
+        val line = decoded().toString
+        val cells = cellsOf(line)
+        if (cells.contains(keyCol)) header = Some(cells) else prefix += line
       }
-      found
-    } finally in.close()
+      header.map { columns =>
+        val info = HeaderInfo(file, prefix.toSeq, columns, lines.getPos, encoding)
+        if (toEof) while (lines.next(offset, text)) decoded()
+        info
+      }
+    } catch { case _: java.nio.charset.CharacterCodingException => None }
+    finally lines.close()
   }
 
   /** Every data line of `infos`' files from ONE line source, as
@@ -350,27 +311,14 @@ object HeaderScan {
     (direct ++ walked).distinct.sorted
   }
 
-  /** Does all of `file` decode strictly in `encoding`? */
-  private def decodesStrictly(
-      fs: org.apache.hadoop.fs.FileSystem,
-      file: String,
-      encoding: String): Boolean = {
-    val in = new java.io.InputStreamReader(fs.open(new Path(file)),
-      java.nio.charset.Charset.forName(encoding).newDecoder()) // REPORTs
-    val buf = new Array[Char](1 << 16)
-    try { while (in.read(buf) != -1) {}; true }
-    catch { case _: java.nio.charset.CharacterCodingException => false }
-    finally in.close()
-  }
-
   /** Executor-side head-scan of `files`, sorted by path: each task runs
-    * the shared [[scanHead]] on its files and returns file-count-sized
+    * [[scanHead]] on its files and returns file-count-sized
     * metadata, safe to collect (the listing itself was already
     * driver-memory-sized). The charsets of `encodings` are tried in
     * order; the first that decodes the head strictly and finds the key
     * column in it is kept in `HeaderInfo.encoding`, a charset before the
-    * last only if the whole file decodes strictly in it too (an ASCII
-    * head passes in UTF-8 whatever its data's charset). Files where none
+    * last only if the rest of the file's lines decode strictly in it too
+    * (an ASCII head passes in UTF-8 whatever its data's charset). Files where none
     * does are warned (in that executor's stderr) and skipped.
     * `maxScanLines = 1` takes line 0 as the header, as `pd.read_csv` does.
     *
@@ -392,13 +340,11 @@ object HeaderScan {
       math.min(files.length, spark.sparkContext.defaultParallelism))
     val infos = spark.sparkContext.parallelize(files, nPart)
       .mapPartitions { it =>
-        val conf = bconf.value.value
+        val (conf, cellsOf) = (bconf.value.value, FanOut.headerCells())
         it.flatMap { f =>
           val fs = new Path(f).getFileSystem(conf)
-          val found = encodings.iterator.flatMap { enc =>
-            scanHead(fs, f, keyCol, maxScanLines, enc)
-              .filter(_ => enc == encodings.last || decodesStrictly(fs, f, enc))
-          }.nextOption()
+          val found = encodings.iterator.flatMap(enc => scanHead(fs, f, keyCol, maxScanLines,
+            enc, cellsOf, toEof = enc != encodings.last)).nextOption()
           if (found.isEmpty) System.err.println(s"[headerscan] WARN: key column " +
             s"'$keyCol' not found in $f (read as ${encodings.mkString(", ")}) — skipping")
           found

@@ -7,6 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.functions.{col, lit}
+
+import graft.cli.AggregateMain
 import graft.etl.Kpi
 import graft.sources.{CsvGen, FanOut, HeaderScan}
 
@@ -286,6 +289,28 @@ class CliContractSpec extends AnyFunSuite {
       want.count(_._1.endsWith(s"/$k.csv")) > 1), want.keys)
     val differ = (want.keySet ++ got.keySet).toSeq.sorted.filter(f => want.get(f) != got.get(f))
     assert(differ.isEmpty, differ.map(f => s"$f:\n${got.get(f)}\nwant ${want.get(f)}"))
+    // and in the reference's order (SURVEY.md §2.5 O1): 23-2 and 24-2 by
+    // month, 25-1 and 25-2 by 佔比 rank, a blank 佔比 last
+    def column(f: String, c: String): Seq[String] = {
+      val cells = (l: String) => l.split(",(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)", -1).toSeq
+      val lines = Files.readAllLines(out.resolve(f)).asScala.toSeq
+      val i = cells(lines.head.stripPrefix("\uFEFF")).indexOf(c)
+      lines.tail.map(cells(_)(i))
+    }
+    def pct(blank: Double)(p: String) = if (p.isEmpty) blank else p.stripSuffix("%").toDouble
+    val ordered = got.keys.toSeq.sorted.map(f => f -> (f.split('/').last match {
+      case "23-2.csv" | "24-2.csv" =>
+        val months = column(f, "月份").map(_.toInt)
+        months == months.sorted
+      case "25-1.csv" =>
+        val ratios = column(f, "佔比").map(pct(Double.NegativeInfinity))
+        ratios == ratios.sorted.reverse
+      case "25-2.csv" =>
+        val ratios = column(f, "佔比").map(pct(Double.PositiveInfinity))
+        ratios == ratios.sorted
+      case _ => true
+    }))
+    assert(ordered.forall(_._2), ordered.filterNot(_._2).map(_._1))
   }
 
   test("presence: a header-only dataset is NONE with rows=0") {
@@ -387,7 +412,8 @@ object AggregateReference {
       "24-2" -> Kpi.config24_2(fpMonth, binds),
       "25-1" -> Kpi.config25_1(fpBranch, branchBinds),
       "25-2" -> Kpi.config25_2(fpBranch, branchBinds))
-      .foreach { case (k, df) => FanOut.write(df, Kpi.S, args(1), k, bom = true) }
+      .foreach { case (k, df) => FanOut.write(df, Kpi.S, args(1), k, bom = true,
+        order = if (AggregateMain.byMonth(k)) col("月份") else lit(0)) }
     spark.stop()
   }
 }

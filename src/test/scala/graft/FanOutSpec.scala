@@ -298,7 +298,7 @@ class FanOutSpec extends SparkSpec {
     val scanned = HeaderScan.scanFiles(spark, Seq(dir.resolve("good.csv").toString)).headOption
     assert(scanned.isDefined)
     val info = scanned.get
-    assert(info.prefixRows.length == 2 && info.skipLines == 3)
+    assert(info.prefixRows == Seq("Report Title,, ", "Established At Year,2025,2024"))
     assert(info.columns == Seq(S, "name, quoted", "金額"))
     assert(HeaderScan.scanFiles(spark, Seq(dir.resolve("nokey.csv").toString)).isEmpty)
 
@@ -346,6 +346,19 @@ class FanOutSpec extends SparkSpec {
     val got = Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
       .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
     assert(got == want)
+  }
+
+  test("writeFiles: a header with a quote inside a cell keeps all its columns") {
+    // Python's csv, pandas and spark.read.csv read `name"x` as one cell
+    val dir = tmpDir("wf_quote")
+    val out = tmpDir("wf_quote_out").toString
+    Files.writeString(dir.resolve("q.csv"), s"$S,name\"x,v\ns1,a,b\n")
+    val infos = HeaderScan.scanDir(spark, dir.toString)
+    assert(infos.map(_.columns) == Seq(Seq(S, "name\"x", "v")))
+    assert(FanOut.writeFiles(spark, infos, S, out) == Seq("s1"))
+    val back = FanOut.read(spark, out, "q", S)
+    assert(back.columns.toSeq == Seq(S, "name\"x", "v", "_dir_key"))
+    assert(back.collect().map(_.toSeq).toSeq == Seq(Seq("s1", "a", "b", "s1")))
   }
 
   /** Jobs `body` runs, counted by a SparkListener. The listener bus is

@@ -11,8 +11,8 @@ import graft.sources.HeaderScan
   * (\n, \r\n, lone \r), the scanned `dataStart` must equal the
   * independently computed byte length of the prefix+header region, the
   * offset-filtered distributed read must recover exactly the data rows,
-  * and the executor-side directory scan must agree with the driver-side
-  * per-file scan field-for-field.
+  * and the directory scan must agree field-for-field with a scan of each
+  * file alone.
   */
 class HeaderScanPropertySpec extends SparkSpec {
 
@@ -82,8 +82,8 @@ class HeaderScanPropertySpec extends SparkSpec {
       assert(info.dataStart == dataStart, s"$name: dataStart")
       assert(info.columns == header, s"$name: header")
       assert(info.prefixRows.length == metas.length, s"$name: prefix count")
-      assert(info.skipLines == metas.length + 1, s"$name: skipLines")
-      // driver-side scan agrees field-for-field (shared scanHead body)
+      assert(info.prefixRows == metas, s"$name: prefix rows")
+      // a scan of the file alone agrees field-for-field
       val drv = HeaderScan.scanFiles(spark,
         Seq(dir.resolve(name).toString), keyCol = "store").head
       assert(drv.dataStart == info.dataStart &&

@@ -76,8 +76,8 @@ class HeaderScanSpec extends SparkSpec {
       .flatMap(f => HeaderScan.scanFiles(spark, Seq(dir.resolve(f).toString),
         keyCol = "store").headOption)
     // same files found (keyless skipped), same offsets, same headers —
-    // the executor path and the driver path run the SAME scanHead,
-    // and this pins that they cannot drift
+    // one scan over the listed directory and one scan per file read each
+    // file alike, whatever else shares its task
     assert(dist.map(_.path.stripPrefix("file:")).sorted ==
       driver.map(_.path).sorted)
     val byName = dist.map(i => new java.io.File(i.path).getName -> i).toMap
@@ -85,8 +85,8 @@ class HeaderScanSpec extends SparkSpec {
       val e = byName(new java.io.File(d.path).getName)
       assert(e.dataStart == d.dataStart, s"${d.path}: offset drift")
       assert(e.columns == d.columns && e.prefixRows == d.prefixRows)
-      assert(e.skipLines == d.skipLines)
     }
+    assert(dist.map(_.prefixRows.length) == Seq(1, 1, 0, 2))
     assert(dist.size == 4) // nokey.csv skipped in the executors too
   }
 
@@ -132,15 +132,16 @@ class HeaderScanSpec extends SparkSpec {
       .map(_.split('/').last)
     assert(j == Seq("j1.csv")) // j2.CSV not matched by lowercase glob
 
-    // distributed ≡ driver pin extended over the nested tree
+    // the directory scan ≡ per-file scans, over the nested tree
     val dist = HeaderScan.scanDir(spark, dir.toString, keyCol = "store")
     val driver = all.flatMap(rel => HeaderScan.scanFiles(
       spark, Seq(dir.resolve(rel).toString), keyCol = "store").headOption)
     assert(dist.size == driver.size && dist.size == 5)
     dist.sortBy(_.path).zip(driver.sortBy(_.path)).foreach { case (e, d) =>
       assert(e.dataStart == d.dataStart && e.columns == d.columns &&
-        e.prefixRows == d.prefixRows && e.skipLines == d.skipLines)
+        e.prefixRows == d.prefixRows)
     }
+    assert(dist.map(_.prefixRows.length) == Seq(1, 0, 0, 0, 0)) // j1.csv's meta line
 
     // readDir over the tree: every non-hidden row, none from hidden dirs
     val rows = HeaderScan.readDir(spark, dir.toString, keyCol = "store")
@@ -285,6 +286,7 @@ class HeaderScanSpec extends SparkSpec {
 
   test("line-0 read ≡ spark.read.csv: BOM, quoted comma, empty cells, ragged rows, padded header") {
     Seq(
+      "midquote.csv" -> "store,name\"x,v\ns1,a,b\n",
       "bom.csv" -> "\uFEFFstore,v\ns1,1\ns2,2\n",
       "comma.csv" -> "store,v\ns1,\"1,234\"\ns2,\"5\"\n",
       "empty.csv" -> "store,a,b,c\ns1,,2,\n,,,\ns2,1,,\n",

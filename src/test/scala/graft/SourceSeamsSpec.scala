@@ -9,17 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the session policy, the storage root, the CSV dialect and the
   * CSV reader single: no source file under src/main/scala may build a
   * session outside [[GraftSession]], read the JVM temp dir outside
-  * [[WorkDir]], parse or render CSV cells outside `FanOut`, or read CSV
-  * other than through `HeaderScan`; and every CLI program's session is
+  * [[WorkDir]], parse or render CSV cells outside `FanOut`, split CSV
+  * lines outside `HeaderScan`, or read CSV other than through
+  * `HeaderScan`; and every CLI program's session is
   * [[GraftSession.interpreted]].
   */
 class SourceSeamsSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  private def filesContaining(needle: String): Set[String] = {
-    assert(Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
+  private def filesContaining(needle: String, under: Path = root): Set[String] = {
+    assert(Files.isDirectory(under), s"no sources at ${under.toAbsolutePath}")
+    val walk = Files.walk(under)
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .filter(p => Files.readString(p).contains(needle))
@@ -39,6 +40,14 @@ class SourceSeamsSpec extends AnyFunSuite {
     Seq("hadoopRDD(", "from_csv(", "to_csv(").foreach(n => assert(filesContaining(n).isEmpty, n))
     assert(filesContaining("UnivocityParser") == Set("FanOut.scala"))
     assert(filesContaining("UnivocityGenerator") == Set("FanOut.scala"))
+  }
+
+  test("one line reader and one cell parser: LineRecordReader only in HeaderScan, Univocity only in FanOut") {
+    assert(filesContaining("LineRecordReader") == Set("HeaderScan.scala"))
+    Seq("InputStreamReader", "BufferedInputStream").foreach(n =>
+      assert(filesContaining(n, root.resolve("graft/sources")).isEmpty, n))
+    assert(filesContaining("univocity") == Set("FanOut.scala"))
+    assert(filesContaining("Univocity") == Set("FanOut.scala"))
   }
 
   test("CSV is read only through HeaderScan: no spark.read.csv") {
