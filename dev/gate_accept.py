@@ -26,9 +26,27 @@ Modes:
                                          VERDICT #4): all four of
                                          st <= 165 (bare-probe band,
                                          fresh-JVM bias) and mt <= 270.
-Exit 0 = ACCEPT, 1 = REJECT. Prints one verdict line either way.
+                                         With pre = post it is the
+                                         pre-flight idle band.
+  gate_accept.py commit <round-dir> <dest>
+                                         the commit gate of a bench
+                                         sitting (dev/bench_protocol.sh):
+                                         the median of the three warm
+                                         runs bench_run2..4, all
+                                         ACCEPTED by the artifact rule
+                                         (a missing slot is not), over
+                                         the median of the non-rejected
+                                         duckdb_run*.json legs (at least
+                                         three) must be < 2.0; then the
+                                         median run is copied to <dest>.
+Exit 0 = ACCEPT, 1 = REJECT. artifact and pair print one verdict line
+either way; commit prints one line per leg, then its verdict.
 """
+import glob
 import json
+import os
+import re
+import shutil
 import statistics
 import sys
 
@@ -38,8 +56,8 @@ MT_MAX = 270.0
 PROBE_ST_MAX = 165.0  # bare-JVM probe band (fresh-JVM st bias)
 
 
-def artifact(path: str) -> int:
-    d = json.load(open(path))
+def judge(d: dict) -> tuple:
+    """(accepted, verdict line) of one Bench artifact under the v2 rule."""
     # VALIDITY pre-check (r18): a run with failed entries is not a
     # usable total no matter how clean its window — its wall is missing
     # the failed entries' time. This is NOT part of the frozen v2
@@ -50,9 +68,8 @@ def artifact(path: str) -> int:
     # warm run like it through.
     failed = d.get("failed", [])
     if failed:
-        print(f"REJECT incomplete run: {len(failed)} failed entries "
-              f"{failed}")
-        return 1
+        return False, (f"REJECT incomplete run: {len(failed)} failed "
+                       f"entries {failed}")
     s = d.get("host_sentinel", {})
     sm = d.get("sentinel_samples", [])
     sts = [s.get("pre_st_ms", 1e9)] + [x["st_ms"] for x in sm] + \
@@ -61,9 +78,15 @@ def artifact(path: str) -> int:
         [s.get("post_mt_ms", 1e9)]
     ok = (statistics.median(sts) <= ST_MED_MAX and max(mts) <= MT_MAX
           and max(sts) <= ST_ABS_MAX)
-    print("ACCEPT" if ok else "REJECT",
-          f"median_st={statistics.median(sts):.1f} max_st={max(sts):.1f} "
-          f"max_mt={max(mts):.1f} legs={len(sts)}")
+    return ok, (("ACCEPT " if ok else "REJECT ") +
+                f"median_st={statistics.median(sts):.1f} "
+                f"max_st={max(sts):.1f} max_mt={max(mts):.1f} "
+                f"legs={len(sts)}")
+
+
+def artifact(path: str) -> int:
+    ok, line = judge(json.load(open(path)))
+    print(line)
     return 0 if ok else 1
 
 
@@ -77,10 +100,58 @@ def pair(vals) -> int:
     return 0 if ok else 1
 
 
+WARM_SLOTS = ("bench_run2", "bench_run3", "bench_run4")
+MAX_RATIO = 2.0
+
+
+def commit(round_dir: str, dest: str) -> int:
+    warm = []
+    for n in WARM_SLOTS:
+        path = os.path.join(round_dir, n + ".json")
+        if not os.path.exists(path):
+            print(f"{n}: missing")
+            continue
+        d = json.load(open(path))
+        ok, line = judge(d)
+        print(f"{n}: {d['value']:.1f}s {line}")
+        if ok:
+            warm.append((d["value"], n))
+    ducks = []
+    for f in sorted(glob.glob(os.path.join(round_dir, "duckdb_run*.json"))):
+        if re.search(r"_rej\d+\.json$", f):
+            continue
+        d = json.load(open(f))
+        ducks.append(d["value"])
+        print(f"{f}: {d['value']:.1f}s probes pre={d.get('probe_pre')} "
+              f"post={d.get('probe_post')}")
+    if len(warm) < len(WARM_SLOTS):
+        print(f"GATE FAIL: only {len(warm)} accepted warm runs (need "
+              f"{len(WARM_SLOTS)}) — re-run rejected slots")
+        return 1
+    if len(ducks) < 3:
+        print(f"GATE FAIL: only {len(ducks)} accepted duckdb legs (need 3)")
+        return 1
+    dmed = statistics.median(ducks)
+    warm.sort()
+    med_val, med_name = warm[len(warm) // 2]
+    ratio = med_val / dmed
+    print(f"median accepted warm = {med_val:.1f}s ({med_name}); duckdb "
+          f"median = {dmed:.1f}s; ratio = {ratio:.3f}x")
+    if ratio >= MAX_RATIO:
+        print(f"GATE FAIL: ratio >= {MAX_RATIO} — do not commit this "
+              f"sitting's bench.json")
+        return 1
+    shutil.copyfile(os.path.join(round_dir, med_name + ".json"), dest)
+    print(f"ACCEPTED: {med_name} -> {dest} (ratio {ratio:.3f}x < {MAX_RATIO})")
+    return 0
+
+
 if __name__ == "__main__":
     if len(sys.argv) >= 3 and sys.argv[1] == "artifact":
         sys.exit(artifact(sys.argv[2]))
     if len(sys.argv) == 6 and sys.argv[1] == "pair":
         sys.exit(pair(sys.argv[2:6]))
+    if len(sys.argv) == 4 and sys.argv[1] == "commit":
+        sys.exit(commit(sys.argv[2], sys.argv[3]))
     print(__doc__)
     sys.exit(2)

@@ -7,11 +7,11 @@
 # r16 (3 shuffles -> 1 window collapse), so its k=0.51 was an r15-code
 # fit.
 #
-# Gate (v2 — same rule as dev/bench_r17/protocol.sh, see its README
-# for the amendment data): pre-flight bare-JVM SentinelProbe must read
-# st <= 165 AND mt <= 270 before launch; the leg is accepted iff over
-# ALL its sentinel legs (pre + per-entry samples + post):
-#   median(st) <= 140 AND max(mt) <= 270 AND max(st) <= 185.
+# Gate (v2, the one rule in dev/gate_accept.py; dev/bench_r17/README.md
+# has the amendment data): a pre-flight bare-JVM SentinelProbe must sit
+# in the probe band (`gate_accept.py pair`) before launch; the leg is
+# accepted iff `gate_accept.py artifact` accepts ALL its sentinel legs
+# (pre + per-entry samples + post) and it has no failed entries.
 # SPARK_GRAFT_SENTINEL_EVERY=1 samples a sentinel BETWEEN the three
 # entries (outside every timed wall), so a storm arriving mid-leg is
 # attributed to the entry that absorbed it — the r16 stretch ask (#7)
@@ -24,7 +24,7 @@ cd "$(dirname "$0")/../.."
 TAG="$1"; DIR="$2"
 QUERIES="t67_bpe_train t46_cc_star_contraction t52_ppjoin_exact"
 OUT="dev/scale_experiment_r17/spark_grow3_${TAG}.json"
-ST_MED_MAX=140; ST_ABS_MAX=185; MT_MAX=270; PREFLIGHT_ST_MAX=165; MAX_ATTEMPTS=4
+MAX_ATTEMPTS=4
 if [[ -s "$OUT" ]]; then echo "== $OUT exists, skipping"; exit 0; fi
 JAR=$(ls target/scala-2.13/tingdataetlspark_*.jar | head -1)
 
@@ -35,28 +35,12 @@ probe() {
 wait_idle() {
   for i in $(seq 1 60); do
     read -r st mt <<< "$(probe)"
-    if python3 -c "exit(0 if float('$st')<=$PREFLIGHT_ST_MAX and float('$mt')<=$MT_MAX else 1)"; then
+    if python3 dev/gate_accept.py pair "$st" "$mt" "$st" "$mt" > /dev/null; then
       echo "   [gate] idle: st=${st}ms mt=${mt}ms"; return 0; fi
     echo "   [gate] hostile (st=${st} mt=${mt}), waiting 30s ($i/60)"; sleep 30
   done
   echo "   [gate] WARNING: never idled — proceeding labeled"
 }
-accepted() {
-  python3 - "$1" <<EOF
-import json, statistics, sys
-d = json.load(open(sys.argv[1]))
-s = d.get("host_sentinel", {})
-sm = d.get("sentinel_samples", [])
-sts = [s.get("pre_st_ms", 1e9)] + [x["st_ms"] for x in sm] + [s.get("post_st_ms", 1e9)]
-mts = [s.get("pre_mt_ms", 1e9)] + [x["mt_ms"] for x in sm] + [s.get("post_mt_ms", 1e9)]
-ok = (statistics.median(sts) <= $ST_MED_MAX and max(mts) <= $MT_MAX
-      and max(sts) <= $ST_ABS_MAX)
-print(("ACCEPT" if ok else "REJECT"),
-      f"median_st={statistics.median(sts):.1f} max_st={max(sts):.1f} max_mt={max(mts):.1f}")
-sys.exit(0 if ok else 1)
-EOF
-}
-
 for att in $(seq 1 $MAX_ATTEMPTS); do
   wait_idle
   echo "== spark grow3 $TAG attempt $att ($DIR, $(date +%H:%M:%S))"
@@ -66,7 +50,7 @@ for att in $(seq 1 $MAX_ATTEMPTS); do
       --driver-memory "${GROW3_MEM:-48g}" \
       --conf spark.ui.enabled=false \
       "$JAR" $QUERIES 2>&1 | grep -E '^\[bench\]|"metric"' | tail -6
-  if accepted "$OUT"; then echo "== wrote $OUT (accepted)"; exit 0; fi
+  if python3 dev/gate_accept.py artifact "$OUT"; then echo "== wrote $OUT (accepted)"; exit 0; fi
   # next FREE reject index, not $att: a relaunch restarts attempt
   # numbering and must never clobber a prior set's labeled rejects
   i=1; while [[ -e "dev/scale_experiment_r17/spark_grow3_${TAG}_rej${i}.json" ]]; do i=$((i+1)); done

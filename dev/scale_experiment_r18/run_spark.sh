@@ -28,7 +28,7 @@ cd "$(dirname "$0")/../.."
 TAG="$1"; DIR="$2"; shift 2
 QUERIES="${*:-t41_graph_pagerank t71_pagerank_dangling t09_neardup_resolve e06_kmeans_fixpoint}"
 OUT="dev/scale_experiment_r18/spark_${PREFIX:-grow4}_${TAG}.json"
-PREFLIGHT_ST_MAX=165; PREFLIGHT_MT_MAX=270; MAX_ATTEMPTS=4
+MAX_ATTEMPTS=4
 IO_SLICE_BYTES=$((200*1024*1024))
 if [[ -s "$OUT" ]]; then echo "== $OUT exists, skipping"; exit 0; fi
 JAR=$(ls target/scala-2.13/tingdataetlspark_*.jar | head -1)
@@ -40,7 +40,7 @@ probe() {
 wait_idle() {
   for i in $(seq 1 60); do
     read -r st mt <<< "$(probe)"
-    if python3 -c "exit(0 if float('$st')<=$PREFLIGHT_ST_MAX and float('$mt')<=$PREFLIGHT_MT_MAX else 1)"; then
+    if python3 dev/gate_accept.py pair "$st" "$mt" "$st" "$mt" > /dev/null; then
       echo "   [gate] idle: st=${st}ms mt=${mt}ms"; return 0; fi
     echo "   [gate] hostile (st=${st} mt=${mt}), waiting 30s ($i/60)"; sleep 30
   done

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.SeqMap
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}.
   *
@@ -59,7 +61,8 @@ object Bench {
     // headline is not inflated; ~0.4 s/sample ≈ 3 s of extra wall on a
     // full 205-entry run at the default stride.
     val sentinelEvery = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_EVERY", "25").toInt
-    val sentinelSamples = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sentinelSamples =
+      scala.collection.mutable.ArrayBuffer.empty[(Int, String, HostSentinel.Legs)]
     val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
       val t0 = System.nanoTime()
       val ok =
@@ -88,52 +91,19 @@ object Bench {
       if (sentinelEvery > 0 && (qi + 1) % sentinelEvery == 0 &&
           qi + 1 < selected.size) {
         val s = HostSentinel.measure(cpus)
-        sentinelSamples += f"""{"after_idx":${qi + 1},"after":"$name",""" +
-          f""""st_ms":${s.stMs}%.1f,"mt_ms":${s.mtMs}%.1f}"""
+        sentinelSamples += ((qi + 1, name, s))
         System.err.println(f"[bench] host_sentinel @${qi + 1} ($name): " +
           f"st=${s.stMs}%.1fms mt=${s.mtMs}%.1fms")
       }
       (name, dt, ok, graft.etl.IterStats.drain())
     }
-    // a crashed query must NOT deflate "total" into a phantom speedup:
-    // only successes are timed; failures are listed explicitly
-    val good = results.collect { case (k, v, true, _) => k -> v }
-    val failed = results.collect { case (k, _, false, _) => s"\"" + k + "\"" }
-    val qs = good.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = good.map(_._2).sum
-    // Build-cost split: one-time shared-artifact builds run inside their
-    // first consumer's timed window, so `value` (the budget number)
-    // INCLUDES them; `build_sec`/`builds` break that one-time cost out so
-    // the steady-state per-query cost is readable from the artifact.
-    // Two accounting notes: builds whose first consumer is the UNTIMED
-    // warmup (the flagship's split_* tables) appear here but in no
-    // query's wall, so build_sec can exceed a small subset-run's total;
-    // nested builds (an artifact built inside another's build body)
-    // count only their own time (Artifacts.buildStack).
-    val builds = graft.etl.Artifacts.buildSeconds
-    val buildTotal = builds.values.sum
-    val buildsJson = builds.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // per-query fixpoint iteration counts (only entries that recorded
-    // any): {"query":{"tag":rounds,...},...}
-    val itersJson = results
-      .collect { case (k, _, _, it) if it.nonEmpty =>
-        s"\"" + k + "\":" + it.toSeq.sortBy(_._1)
-          .map { case (t, n) => s"\"" + t + "\":" + n }
-          .mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
     // host-noise sentinel, leg 2: after the last query — drift DURING
     // the run is visible from the pair
     val sen1 = HostSentinel.measure(cpus)
     System.err.println(
       f"[bench] host_sentinel post: st=${sen1.stMs}%.1fms mt=${sen1.mtMs}%.1fms")
-    val sentinelJson = HostSentinel.json(sen0, sen1, cpus)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""build_sec":$buildTotal,"builds":$buildsJson,"iters":$itersJson,""" +
-      s""""host_sentinel":$sentinelJson,""" +
-      s""""sentinel_samples":${sentinelSamples.mkString("[", ",", "]")},""" +
-      s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+    val json = artifact(results, graft.etl.Artifacts.buildSeconds,
+      sen0, sen1, cpus, sentinelSamples.toSeq, sfDir)
     println(json)
     // Also persist the JSON to a file: the stdout line sits at the end of a
     // long sbt log and a fixed-size log tail can clip it (a ~97-query line
@@ -165,5 +135,48 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     spark.stop()
+  }
+
+  /** The artifact line, from each entry's (name, seconds, succeeded,
+    * fixpoint rounds), the one-time artifact builds, the sentinel pair
+    * bracketing the run and the samples taken between entries.
+    */
+  def artifact(
+      results: Seq[(String, Double, Boolean, Map[String, Long])],
+      builds: Map[String, Double],
+      pre: HostSentinel.Legs, post: HostSentinel.Legs, threads: Int,
+      samples: Seq[(Int, String, HostSentinel.Legs)],
+      sfDir: String): String = {
+    // a crashed query must NOT deflate "total" into a phantom speedup:
+    // only successes are timed; failures are listed explicitly
+    val good = results.collect { case (k, v, true, _) => k -> v }
+    // Build-cost split: one-time shared-artifact builds run inside their
+    // first consumer's timed window, so `value` (the budget number)
+    // INCLUDES them; `build_sec`/`builds` break that one-time cost out so
+    // the steady-state per-query cost is readable from the artifact.
+    // Two accounting notes: builds whose first consumer is the UNTIMED
+    // warmup (the flagship's split_* tables) appear here but in no
+    // query's wall, so build_sec can exceed a small subset-run's total;
+    // nested builds (an artifact built inside another's build body)
+    // count only their own time (Artifacts.buildStack).
+    def sorted[V](m: Map[String, V]) = SeqMap.from(m.toSeq.sortBy(_._1))
+    Json(SeqMap(
+      "metric" -> "total",
+      "value" -> good.map(_._2).sum,
+      "unit" -> "sec",
+      "queries" -> SeqMap.from(good),
+      "build_sec" -> builds.values.sum,
+      "builds" -> sorted(builds),
+      // per-query fixpoint iteration counts (only entries that recorded
+      // any): {"query":{"tag":rounds,...},...}
+      "iters" -> SeqMap.from(results.collect {
+        case (k, _, _, it) if it.nonEmpty => k -> sorted(it)
+      }),
+      "host_sentinel" -> HostSentinel.fields(pre, post, threads),
+      "sentinel_samples" -> samples.map { case (i, name, s) =>
+        SeqMap("after_idx" -> i, "after" -> name) ++ HostSentinel.leg(s)
+      },
+      "failed" -> results.collect { case (k, _, false, _) => k },
+      "sf" -> sfDir))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.SeqMap
+
 /** Host-noise sentinel shared by the timed mains (Bench, StreamBench):
   * a FIXED pure-CPU microbenchmark (splitmix64 spin — no allocation,
   * no I/O, deterministic checksum) timed single-threaded and at full
@@ -57,9 +59,16 @@ object HostSentinel {
   }
 
   /** The artifact field: a pre/post pair bracketing a measured window. */
-  def json(pre: Legs, post: Legs, threads: Int): String =
-    f"""{"iters_per_thread":$itersPerThread,"threads":$threads,""" +
-      f""""pre_st_ms":${pre.stMs}%.1f,"pre_mt_ms":${pre.mtMs}%.1f,""" +
-      f""""post_st_ms":${post.stMs}%.1f,"post_mt_ms":${post.mtMs}%.1f,""" +
-      f""""checksum":${pre.check}}"""
+  def fields(pre: Legs, post: Legs, threads: Int): SeqMap[String, Any] = SeqMap(
+    "iters_per_thread" -> itersPerThread, "threads" -> threads,
+    "pre_st_ms" -> ms(pre.stMs), "pre_mt_ms" -> ms(pre.mtMs),
+    "post_st_ms" -> ms(post.stMs), "post_mt_ms" -> ms(post.mtMs),
+    "checksum" -> pre.check)
+
+  /** One leg's two readings, as a sample or a probe line carries them. */
+  def leg(s: Legs): SeqMap[String, Any] =
+    SeqMap("st_ms" -> ms(s.stMs), "mt_ms" -> ms(s.mtMs))
+
+  /** Every artifact carries a leg's milliseconds to 0.1 ms. */
+  private def ms(x: Double): Double = Json.rounded(x, 1)
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.SeqMap
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -132,18 +134,18 @@ object StreamBench {
       // bench checkpoints are throwaway — reclaim the temp dir
       WorkDir.delete(ckpt)
       val rows = allProbes.length
-      val bj = times.result().map(t => f"$t%.3f").mkString("[", ",", "]")
-      println(f"""{"variant":"$name","state_store":"$stateStore",""" +
-        f""""rows":$rows,"batches":${batches.length},""" +
-        f""""total_sec":$total%.2f,"rows_per_sec":${rows / total}%.1f,""" +
-        f""""batch_sec":$bj,"state_rows_max":$stateMax,""" +
-        f""""state_mem_mb":${stateMemMax / 1e6}%.1f,""" +
-        s""""state_custom_max":${customMax.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"\"" + k + "\":" + v }
-          .mkString("{", ",", "}")},""" +
-        f""""watermark_lag_sec":$wmLagSec%.1f,""" +
-        s""""host_sentinel":${HostSentinel.json(sen0, sen1, cpus)},""" +
-        f""""sf":"$sfDir"}""")
+      println(Json(SeqMap(
+        "variant" -> name, "state_store" -> stateStore,
+        "rows" -> rows, "batches" -> batches.length,
+        "total_sec" -> Json.rounded(total, 2),
+        "rows_per_sec" -> Json.rounded(rows / total, 1),
+        "batch_sec" -> times.result().map(Json.rounded(_, 3)),
+        "state_rows_max" -> stateMax,
+        "state_mem_mb" -> Json.rounded(stateMemMax / 1e6, 1),
+        "state_custom_max" -> SeqMap.from(customMax.toSeq.sortBy(_._1)),
+        "watermark_lag_sec" -> Json.rounded(wmLagSec, 1),
+        "host_sentinel" -> HostSentinel.fields(sen0, sen1, cpus),
+        "sf" -> sfDir)))
     }
 
     // variant selection (default: both, the r14–r16 protocol):

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.SeqMap
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -29,26 +32,11 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       (name, ok)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json(SparkEntry.oracleSql))
     // Durable run summary (file, not just stderr): which dumps succeeded.
     // A driver that only tails the log can read this instead.
-    val summary = outcomes.map { case (n, ok) => s"${q(n)}: $ok" }
-      .mkString("{\"dumped\": {", ",", "}}")
-    Files.writeString(Paths.get(s"$outDir/verify.json"), summary + "\n")
+    Files.writeString(Paths.get(s"$outDir/verify.json"),
+      Json(Map("dumped" -> SeqMap.from(outcomes))) + "\n")
     spark.stop()
   }
 }

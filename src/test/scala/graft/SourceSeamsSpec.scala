@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session outside [[GraftSession]], read the JVM temp dir outside
   * [[WorkDir]], parse or render CSV cells outside `FanOut`, split CSV
   * lines outside `HeaderScan`, or read CSV other than through
-  * `HeaderScan`; and every CLI program's session is
-  * [[GraftSession.interpreted]].
+  * `HeaderScan`, or write JSON outside [[Json]]; and every CLI program's
+  * session is [[GraftSession.interpreted]].
   */
 class SourceSeamsSpec extends AnyFunSuite {
 
@@ -48,6 +48,11 @@ class SourceSeamsSpec extends AnyFunSuite {
       assert(filesContaining(n, root.resolve("graft/sources")).isEmpty, n))
     assert(filesContaining("univocity") == Set("FanOut.scala"))
     assert(filesContaining("Univocity") == Set("FanOut.scala"))
+  }
+
+  test("one JSON writer: ObjectMapper only in Json, no JSON built from string fragments") {
+    assert(filesContaining("ObjectMapper") == Set("Json.scala"))
+    Seq("\"\\\"\" +", "f\"\"\"{\"", "s\"\"\"{\"").foreach(n => assert(filesContaining(n).isEmpty, n))
   }
 
   test("CSV is read only through HeaderScan: no spark.read.csv") {
