@@ -245,9 +245,14 @@ object AggregateMain {
       }
     }
     val result = kpi(Args.readHeaded(spark, files, keyCol))
-    val order = if (a.contains("input-file") || !byMonth(cfgKey)) lit(0) else col("月份")
     // stores = files written (the reference counts stores written too)
-    val stores = FanOut.write(result, keyCol, outDir, cfgKey, bom = true, order = order)
+    val stores = if (a.contains("input-file")) FanOut.write(result, keyCol, outDir, cfgKey, bom = true)
+      else {
+        // the configs' stores are trimmed, and their last aggregate is
+        // partitioned by store: the keyed write reuses it
+        val order = if (byMonth(cfgKey)) col("月份") else lit(0)
+        FanOut.writeKeyed(result, keyCol, outDir, cfgKey, bom = true, order = order)
+      }
     println(s"[OK] config=$cfgKey, stores=${stores.length}")
     spark.stop()
   }

@@ -23,9 +23,14 @@ import graft.etl.{Normalize => N}
   * denominators yield null rendered "" by the pct formatter (:168–170,
   * 204–206, 209–215). Years compare as strings (:137–145).
   *
-  * Scale: each config is filter → hash-agg → broadcast-sized left joins →
-  * window top-k; no driver-side loops (the reference's per-store Python
-  * loops become partitioned writes / windows).
+  * Scale: each config is filter → ONE hash-aggregation over the union of
+  * its inputs (each input fills its own measure slots; no per-input
+  * aggregates joined back) → window top-k for 25-x; no driver-side loops
+  * (the reference's per-store Python loops become partitioned writes /
+  * windows). The result stays hash-partitioned by store, which
+  * [[graft.sources.FanOut.writeKeyed]] reuses: one shuffle per config for
+  * 23-1, 23-2 and 24-1, two for 24-2 and 25-x (aggregate by (store,
+  * month or branch), then by store).
   */
 object Kpi {
 
@@ -33,6 +38,17 @@ object Kpi {
 
   private def store(df: DataFrame): DataFrame =
     df.withColumn(S, trim(col(S)))
+
+  /** A numeric cell: cleaned, parsed, a missing value 0. */
+  private def measure(c: String): Column = N.zeroFill(N.toNumber(col(c)))
+
+  /** A double null: the measure slot a union branch does not fill. */
+  private val none = lit(null).cast("double")
+
+  /** Drop the side rows without a store: in a left join from the main
+    * input they matched no row, so they add to no store's sums.
+    */
+  private def keyed(df: DataFrame): DataFrame = df.filter(col(S).isNotNull)
 
   /** A2 normalization: trimmed store, parsed month 1..12, numeric bind.
     * The year column stays RAW — the reference never strips it in any
@@ -45,7 +61,7 @@ object Kpi {
     store(Normalize.trimHeaders(binds))
       .withColumn("月份", N.parseMonth(col("月份")))
       .filter(col("月份").isNotNull)
-      .withColumn("總綁定", N.zeroFill(N.toNumber(col("總綁定"))))
+      .withColumn("總綁定", measure("總綁定"))
 
   /** A2 normalization for config 24-1 (aggregate_by_store.py:342–346):
     * like [[normBinds]] but WITHOUT the month parse/filter — 24-1 sums
@@ -54,15 +70,15 @@ object Kpi {
     */
   def normBindsNoMonth(binds: DataFrame): DataFrame =
     store(Normalize.trimHeaders(binds))
-      .withColumn("總綁定", N.zeroFill(N.toNumber(col("總綁定"))))
+      .withColumn("總綁定", measure("總綁定"))
 
-  /** Shared 23-1 / 24-1 body.
-    *
-    * The cur/prev year sums are ONE conditional aggregation over a single
-    * normalized scan (not two filtered scans + a self-join): a store "has
-    * current-year data" ⟺ its conditional cur-sum is non-null, because
-    * zeroFill makes every surviving row's measure non-null. Halves the
-    * fact-side work and drops a shuffle+join from the plan.
+  /** Shared 23-1 / 24-1 body: ONE `groupBy(S)` over the union of the
+    * three inputs, each filling its own measure slots
+    * (`cur`, `prev` | `cum` | `mem`), instead of three aggregates and two
+    * left joins. A store "has current-year data" ⟺ its cur-sum is
+    * non-null, because zeroFill makes every bind row's measure non-null;
+    * cumulative and member rows add nulls there, so a store they alone
+    * name is dropped, as the left join from the year sums dropped it.
     */
   private def config23Core(
       binds: DataFrame,
@@ -73,26 +89,24 @@ object Kpi {
       parseMonths: Boolean,
       order24_1: Boolean): DataFrame = {
     val nb = if (parseMonths) normBinds(binds) else normBindsNoMonth(binds)
-    val yearSums = nb
+    val rows = nb
+      .select(col(S),
+        when(col("年度") === curYear, col("總綁定")),
+        when(col("年度") === prevYear, col("總綁定")), none, none)
+      .union(keyed(store(Normalize.trimHeaders(cumulative)))
+        .select(col(S), none, none, measure("累計至今推薦人綁定人數"), none))
+      .union(keyed(store(Normalize.trimHeaders(members)))
+        .select(col(S), none, none, none, measure("總會員數")))
+      .toDF(S, "cur", "prev", "cum", "mem")
+    val sums = rows
       .groupBy(col(S))
-      .agg(
-        sum(when(col("年度") === curYear, col("總綁定"))).as("cur"),
-        sum(when(col("年度") === prevYear, col("總綁定"))).as("prev"))
+      .agg(sum("cur").as("cur"), sum("prev").as("prev"), sum("cum").as("cum"), sum("mem").as("mem"))
       .filter(col("cur").isNotNull) // = stores with cur-year rows
-    val cum = store(Normalize.trimHeaders(cumulative))
-      .withColumn("c", N.zeroFill(N.toNumber(col("累計至今推薦人綁定人數"))))
-      .groupBy(col(S)).agg(sum(col("c")).as("cum"))
-    val mem = store(Normalize.trimHeaders(members))
-      .withColumn("m", N.zeroFill(N.toNumber(col("總會員數"))))
-      .groupBy(col(S)).agg(sum(col("m")).as("mem"))
-    val joined = yearSums
-      .join(cum, Seq(S), "left")
-      .join(mem, Seq(S), "left")
       .select(col(S), col("cur"),
         N.zeroFill(col("prev")).as("prev"),
         N.zeroFill(col("cum")).as("cum"),
         N.zeroFill(col("mem")).as("mem"))
-    val out = joined.select(
+    val out = sums.select(
       col(S),
       col("cur").as("區間推薦人綁定人數"),
       N.fmtPct(N.yoy(col("cur"), col("prev"))).as("區間推薦人綁定人數 YoY"),
@@ -150,27 +164,37 @@ object Kpi {
 
   /** Config 23-2 (aggregate_by_store.py:239–317): per-month pivot of two
     * years, months densified 1..12 per store, per-month YoY.
+    *
+    * ONE `groupBy(S)` of 24 conditional sums (month × year), exploded into
+    * the store's 12 month rows: no spine, pivot or join. A null store
+    * gets its 12 rows with zeros, as its spine rows found no pivot row in
+    * a join on the store.
     */
   def config23_2(
       binds: DataFrame,
       curYear: String = "2025",
       prevYear: String = "2024"): DataFrame = {
-    val spark = binds.sparkSession
     val f = normBinds(binds).filter(col("年度").isin(prevYear, curYear))
-    val pv = f.groupBy(col(S), col("月份"))
-      .pivot("年度", Seq(prevYear, curYear)).sum("總綁定")
-    val spine = f.select(col(S)).distinct()
-      .crossJoin(broadcast(spark.range(1, 13).select(col("id").cast("int").as("月份"))))
-    spine.join(pv, Seq(S, "月份"), "left")
-      .select(col(S), col("月份"),
-        N.zeroFill(col(prevYear)).as(s"${prevYear}年"),
-        N.zeroFill(col(curYear)).as(s"${curYear}年"),
-        N.fmtPct(N.yoy(N.zeroFill(col(curYear)), N.zeroFill(col(prevYear))))
-          .as("推薦人新綁定數 YoY"))
+    val months = 1 to 12
+    val years = Seq(prevYear -> "prev", curYear -> "cur")
+    val slots = for ((y, t) <- years; m <- months)
+      yield sum(when(col("年度") === y && col("月份") === m, col("總綁定"))).as(s"$t$m")
+    def filled(t: String, m: Int) = N.zeroFill(when(col(S).isNotNull, col(s"$t$m")))
+    f.groupBy(col(S)).agg(slots.head, slots.tail: _*)
+      .select(col(S), explode(array(months.map(m => struct(lit(m).as("月份"),
+        filled("prev", m).as("prev"), filled("cur", m).as("cur"))): _*)).as("m"))
+      .select(col(S), col("m.月份").as("月份"),
+        col("m.prev").as(s"${prevYear}年"),
+        col("m.cur").as(s"${curYear}年"),
+        N.fmtPct(N.yoy(col("m.cur"), col("m.prev"))).as("推薦人新綁定數 YoY"))
   }
 
   /** Config 24-2 (aggregate_by_store.py:422–510): first purchases vs
     * referral binds per (store, month) with monthly binding rate.
+    *
+    * ONE `groupBy(S, 月份)` over the union of both inputs; a group is
+    * kept iff it has first-purchase rows (their zero-filled sum is
+    * non-null), as the left join from the first-purchase sums kept it.
     */
   def config24_2(
       firstByMonth: DataFrame,
@@ -179,11 +203,12 @@ object Kpi {
     val fp = store(SchemaResolver.ensureMonthCol(Normalize.trimHeaders(firstByMonth)))
       .withColumn("月份", N.parseMonth(col("月份")))
       .filter(col("月份").isNotNull)
-      .withColumn("fp", N.zeroFill(N.toNumber(col("門市首購人數"))))
-      .groupBy(col(S), col("月份")).agg(sum(col("fp")).as("門市首購人數"))
-    val b = normBinds(binds).filter(col("年度") === curYear)
-      .groupBy(col(S), col("月份")).agg(sum(col("總綁定")).as("binds"))
-    fp.join(b, Seq(S, "月份"), "left")
+      .select(col(S), col("月份"), measure("門市首購人數"), none)
+    val b = keyed(normBinds(binds).filter(col("年度") === curYear))
+      .select(col(S), col("月份"), none, col("總綁定"))
+    fp.union(b).toDF(S, "月份", "fp", "b")
+      .groupBy(col(S), col("月份")).agg(sum("fp").as("門市首購人數"), sum("b").as("binds"))
+      .filter(col("門市首購人數").isNotNull)
       .select(col(S), col("月份"), col("門市首購人數"),
         N.zeroFill(col("binds")).as("推薦人綁定數"),
         N.fmtPct(N.safeDiv(N.zeroFill(col("binds")), col("門市首購人數")))
@@ -192,6 +217,8 @@ object Kpi {
 
   /** Shared 25-x body (aggregate_by_store.py:513–611, 614–723): per-branch
     * first purchases vs cumulative binds, ratio, per-store top/bottom-5.
+    * ONE `groupBy(S, 門市名稱)` over the union of both inputs, kept iff
+    * the branch has first-purchase rows (as in [[config24_2]]).
     */
   private def config25(
       firstByBranch: DataFrame,
@@ -199,18 +226,18 @@ object Kpi {
       year: String,
       bottom: Boolean): DataFrame = {
     val B = "門市名稱"
-    val fp = store(SchemaResolver.ensureStoreNameCol(Normalize.trimHeaders(firstByBranch)))
-      .withColumn(B, N.nullifyTokens(col(B)))
-      .filter(col(B).isNotNull)
-      .withColumn("fp", N.zeroFill(N.toNumber(col("門市首購人數"))))
-      .groupBy(col(S), col(B)).agg(sum(col("fp")).as("門市首購人數"))
-    val bb = store(SchemaResolver.ensureStoreNameCol(Normalize.trimHeaders(branchBinds)))
-      .withColumn(B, N.nullifyTokens(col(B)))
-      .filter(col(B).isNotNull)
+    def branches(df: DataFrame) =
+      store(SchemaResolver.ensureStoreNameCol(Normalize.trimHeaders(df)))
+        .withColumn(B, N.nullifyTokens(col(B)))
+        .filter(col(B).isNotNull)
+    val fp = branches(firstByBranch)
+      .select(col(S), col(B), measure("門市首購人數"), none)
+    val bb = keyed(branches(branchBinds))
       .filter(col("年度") === year) // raw compare (aggregate_by_store.py:568,680)
-      .withColumn("b", N.zeroFill(N.toNumber(col("總綁定數"))))
-      .groupBy(col(S), col(B)).agg(sum(col("b")).as("binds"))
-    val ratio = fp.join(bb, Seq(S, B), "left")
+      .select(col(S), col(B), none, measure("總綁定數"))
+    val ratio = fp.union(bb).toDF(S, B, "fp", "b")
+      .groupBy(col(S), col(B)).agg(sum("fp").as("門市首購人數"), sum("b").as("binds"))
+      .filter(col("門市首購人數").isNotNull)
       .select(col(S), col(B), col("門市首購人數"),
         N.zeroFill(col("binds")).as("推薦人綁定人數"),
         N.safeDiv(N.zeroFill(col("binds")), col("門市首購人數")).as("_ratio"))

@@ -1,7 +1,8 @@
 package graft.sources
 
 import com.univocity.parsers.csv.CsvParser
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator, UnivocityParser}
@@ -19,14 +20,15 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The reference loops over input files, `csv.reader` feeding one
   * `csv.writer` per output file. Here every row of every source becomes
-  * `(key, src, seq, line)` in ONE job, `line` rendered by [[csvLine]]
-  * before the shuffle, hash-partitioned by key (a key never spans two
-  * tasks) and sorted by (key, src, seq), and each task streams ONE open
-  * file at a time: the source's prefix + header, then its rows in input
-  * order. The writer holds one row (the sort spills), so memory stays
-  * bounded like the reference's (SURVEY.md §4); no output byte goes
-  * through the driver, whose only filesystem work is the orphan-temp
-  * sweep over the key directories written.
+  * `(key, src, seq, line)` in ONE job, `line` rendered by [[csvLine]],
+  * hash-partitioned so a file never spans two tasks (by (key, src) for
+  * [[writeFiles]]; by the key column for [[writeKeyed]], whose input may
+  * already be so partitioned) and sorted by (key, src, seq), and each
+  * task streams ONE open file at a time: the source's prefix + header,
+  * then its rows in input order. The writer holds one row (the sort
+  * spills), so memory stays bounded like the reference's (SURVEY.md §4);
+  * no output byte goes through the driver, whose only filesystem work is
+  * the orphan-temp sweep over the key directories written.
   */
 object FanOut {
 
@@ -137,17 +139,40 @@ object FanOut {
       bom: Boolean = false,
       encoding: String = "UTF-8",
       lineSep: String = "\n",
+      order: Column = lit(0)): Seq[String] =
+    writeKeyed(df.withColumn(keyCol, trim(quoted(keyCol))), keyCol, outDir, srcName,
+      prefixRows, bom, encoding, lineSep, order)
+
+  /** [[write]] without the trim: keys are written as given (a non-string
+    * key as its string cast), and null and blank keys are dropped.
+    * The rows are hash-partitioned by the key column itself, so a `df`
+    * already partitioned by it (an aggregate by that key, as [[graft.etl.Kpi]]'s
+    * configs end) is written by the tasks that computed it, with no
+    * second exchange.
+    */
+  def writeKeyed(
+      df: DataFrame,
+      keyCol: String,
+      outDir: String,
+      srcName: String,
+      prefixRows: Seq[String] = Nil,
+      bom: Boolean = false,
+      encoding: String = "UTF-8",
+      lineSep: String = "\n",
       order: Column = lit(0)): Seq[String] = {
     require(!bom || java.nio.charset.Charset.forName(encoding) ==
       java.nio.charset.StandardCharsets.UTF_8,
       s"bom (utf-8-sig) requires UTF-8 output, got $encoding")
-    def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
-    val key = trim(quoted(keyCol))
     val names = df.columns.toSeq
-    val cells = names.map(c => if (c == keyCol) key else quoted(c).cast(StringType))
     import df.sparkSession.implicits._
     // seq is (order, input position), the position taken before the shuffle
-    val rows = df.select(key, order.cast("long"), monotonically_increasing_id(), array(cells: _*))
+    val rows = df
+      .select(quoted(keyCol).cast(StringType).as("k"), order.cast("long").as("o"),
+        monotonically_increasing_id().as("pos"), array(names.map(quoted(_).cast(StringType)): _*).as("c"))
+      .filter(hasKey)
+      // repartition, not rebalance: AQE may split a rebalance partition,
+      // and a key must stay in one task to get one file
+      .repartition(col("k"))
       .as[(String, Long, Long, Seq[String])].mapPartitions { it =>
         val line = csvLine(names.length)
         it.map { case (k, o, pos, c) => (k, srcName, (o, pos), line(cellsRow(c))) }
@@ -155,6 +180,11 @@ object FanOut {
     writeRows(rows, Map(srcName -> head(if (bom) "\uFEFF" else "", prefixRows, names, lineSep)),
       outDir, encoding, lineSep)
   }
+
+  private def quoted(c: String): Column = col("`" + c.replace("`", "``") + "`")
+
+  /** `k` is neither null nor blank. */
+  private def hasKey: Column = col("k").isNotNull && trim(col("k")) =!= ""
 
   /** Fan out header-scanned files ([[HeaderScan.scanFiles]]) into
     * `outDir/{key}/{src}.csv`, `src` being [[srcOf]] the file name, in ONE
@@ -188,15 +218,19 @@ object FanOut {
         InternalRow(k, src(i), offset, UTF8String.fromString(line(new GenericInternalRow(cells))))
       }
     }
-    writeRows(rows, srcs.zip(infos).map { case (s, i) =>
+    // one (key, src) file per task, so a hot key's sources spread over
+    // tasks; repartition, not rebalance, which AQE may split
+    val files = rows.filter(hasKey).repartition(col("k"), col("src"))
+    writeRows(files, srcs.zip(infos).map { case (s, i) =>
       s -> head("", i.prefixRows, i.columns, lineSep)
     }.toMap, outDir, encoding, lineSep)
   }
 
-  /** Write the `line`s of `rows` (`k`, `src`, `seq`, `line`) under
-    * `outDir/{k}/{src}.csv`, in (`src`, `seq`) order; blank keys are
-    * dropped. `heads` maps each source to its BOM + prefix + header
-    * (shipped to the tasks once). Returns the keys written, sorted.
+  /** Write the `line`s of `rows` (`k`, `src`, `seq`, `line`; each
+    * (`k`, `src`) within one partition) under `outDir/{k}/{src}.csv`, in
+    * (`src`, `seq`) order. `heads` maps each source to its BOM + prefix +
+    * header; it and the Hadoop configuration reach each executor once, in
+    * one broadcast. Returns the keys written, sorted.
     */
   private def writeRows(
       rows: DataFrame,
@@ -205,21 +239,19 @@ object FanOut {
       encoding: String,
       lineSep: String): Seq[String] = {
     val sorted = rows
-      .filter(col("k").isNotNull && col("k") =!= "")
-      // repartition, not rebalance: AQE may split a rebalance partition,
-      // and a key must stay in one task to get one file per source
-      .repartition(col("k"))
       .sortWithinPartitions("k", "src", "seq")
       .select("k", "src", "line")
       .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING))
     val spark = rows.sparkSession
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val bheads = spark.sparkContext.broadcast(heads)
+    val shared = spark.sparkContext.broadcast(
+      (heads, new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     val written = sorted
-      .mapPartitions(it => writeSorted(conf.value, outDir, bheads.value, encoding, lineSep, it))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .mapPartitions { it =>
+        val (hs, conf) = shared.value
+        writeSorted(conf.value, outDir, hs, encoding, lineSep, it)
+      }(Encoders.tuple(Encoders.STRING, Encoders.STRING))
       .collect().toSeq
-    bheads.destroy()
+    shared.destroy()
     // Sweep the temps of crashed or speculation-killed attempts HERE,
     // after the job, when every (key, src) holds a committed dest: a
     // task-side sweep could delete a live twin's tmp mid-write. One
@@ -300,7 +332,7 @@ object FanOut {
           requireLocalName(fs, name)
           dest = new Path(s"$outDir/$name")
           tmp = new Path(dest.getParent, s".$s.csv.$attempt.tmp")
-          out = fs.create(tmp, true) // creates the key directory
+          out = create(fs, tmp) // creates the key directory
           out.write(encodeStrict(k, heads(s)))
         }
         out.write(encodeStrict(k, line + lineSep))
@@ -312,6 +344,30 @@ object FanOut {
       throw e
     }
     written.result().iterator
+  }
+
+  /** `fs.create(p, true)`. On the raw local filesystem, which forks a
+    * `chmod` for every file and every new directory when libhadoop is
+    * absent, the same umask-applied modes are set in-process.
+    */
+  private def create(fs: FileSystem, p: Path): java.io.OutputStream = fs match {
+    case local: RawLocalFileSystem =>
+      val umask = FsPermission.getUMask(local.getConf)
+      def chmod(f: java.io.File, mode: FsPermission): Unit =
+        java.nio.file.Files.setPosixFilePermissions(f.toPath,
+          java.nio.file.attribute.PosixFilePermissions.fromString(mode.applyUMask(umask).toString))
+      def mkdirs(d: java.io.File): Unit = if (!d.isDirectory) {
+        Option(d.getParentFile).foreach(mkdirs)
+        if (d.mkdir()) chmod(d, FsPermission.getDirDefault)
+        else if (!d.isDirectory) throw new java.io.IOException(s"Mkdirs failed to create $d")
+      }
+      val file = local.pathToFile(p)
+      mkdirs(file.getParentFile)
+      val out = new java.io.FileOutputStream(file)
+      try chmod(file, FsPermission.getFileDefault)
+      catch { case e: Throwable => out.close(); throw e }
+      new java.io.BufferedOutputStream(out, local.getConf.getInt("io.file.buffer.size", 4096))
+    case _ => fs.create(p, true)
   }
 
   /** Commit one attempt's `tmp` as `dest` by rename FIRST; only delete a

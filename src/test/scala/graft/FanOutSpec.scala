@@ -361,31 +361,8 @@ class FanOutSpec extends SparkSpec {
     assert(back.collect().map(_.toSeq).toSeq == Seq(Seq("s1", "a", "b", "s1")))
   }
 
-  /** Jobs `body` runs, counted by a SparkListener. The listener bus is
-    * asynchronous but ordered, so a marker job before and one after
-    * `body` bound its jobs once the second marker has arrived.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def marker(id: String): Unit = {
-      sc.setJobGroup(id, id)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobs-begin")
-      body
-      marker("jobs-end")
-      while (groups.take() != "jobs-begin") {}
-      Iterator.continually(groups.take()).takeWhile(_ != "jobs-end").length
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Int =
+    eventsOf { case _: org.apache.spark.scheduler.SparkListenerJobStart => () }(body).length
 
   test("writeFiles: the job count does not grow with the number of files") {
     def fanOut(nFiles: Int): Int = {
@@ -412,5 +389,66 @@ class FanOutSpec extends SparkSpec {
     FanOut.write(Seq(("s1", "1")).toDF(S, "v"), S, out.toString, "a")
     assert(Files.list(key).iterator().asScala.map(_.getFileName.toString).toSet ==
       Set("a.csv", other))
+  }
+
+  test("writeKeyed: keys as given, null and blank keys dropped, a partitioned input not re-shuffled") {
+    val out = tmpDir("fanout_keyed").toString
+    val df = Seq((" a", "1"), ("b", "2"), ("", "3"), ("  ", "4"), (null, "5"), (" a", "6"))
+      .toDF(S, "v")
+    assert(FanOut.writeKeyed(df, S, out, "src") == Seq(" a", "b"))
+    assert(Files.readString(java.nio.file.Paths.get(out, " a", "src.csv")) == s"$S,v\n a,1\n a,6\n")
+    assert(Files.readString(java.nio.file.Paths.get(out, "b", "src.csv")) == s"$S,v\nb,2\n")
+    assertOnlyLayout(out)
+    // an aggregate by the key is written by the tasks that computed it;
+    // the trimming write re-partitions by the trimmed key
+    val sums = df.filter(col(S).isNotNull).groupBy(S).agg(count(lit(1)).as("n"))
+    assert(shufflesOf(FanOut.writeKeyed(sums, S, tmpDir("fanout_keyed1").toString, "n")) == 1)
+    assert(shufflesOf(FanOut.write(sums, S, tmpDir("fanout_keyed2").toString, "n")) == 2)
+  }
+
+  test("writeFiles: with more shuffle partitions than keys, more write tasks than keys") {
+    val dir = tmpDir("wf_spread")
+    (0 until 4).foreach(f => Files.writeString(dir.resolve(s"f$f.csv"),
+      s"$S,v\n" + (0 until 40).map(i => s"k${i % 2},$f-$i\n").mkString))
+    val infos = HeaderScan.scanDir(spark, dir.toString)
+    withConf("spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val out = tmpDir("wf_spread_out").toString
+      val writing = eventsOf { case t: org.apache.spark.scheduler.SparkListenerTaskEnd
+        if t.taskMetrics != null && t.taskMetrics.shuffleReadMetrics.recordsRead > 0 => t.taskInfo.taskId
+      }(assert(FanOut.writeFiles(spark, infos, S, out) == Seq("k0", "k1")))
+      assert(writing.length > 2, s"${writing.length} write tasks with rows for 2 keys")
+      assertOnlyLayout(out)
+      assert(Files.list(java.nio.file.Paths.get(out, "k1")).count() == 4)
+    }
+  }
+
+  test("local output modes are Hadoop's defaults under its configured umask") {
+    import org.apache.hadoop.fs.permission.FsPermission
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.permissions.umask-mode", "fs.file.impl.disable.cache")
+    val old = keys.map(k => k -> Option(hconf.get(k)))
+    // a umask unlike the process's, on a filesystem instance built with it
+    hconf.set("fs.permissions.umask-mode", "027")
+    hconf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val out = tmpDir("fanout_modes").resolve("nested/out")
+      FanOut.write(Seq(("s1", "1")).toDF(S, "v"), S, out.toString, "a")
+      val umask = FsPermission.getUMask(hconf)
+      def mode(p: java.nio.file.Path) =
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      assert(mode(out.resolve("s1/a.csv")) == FsPermission.getFileDefault.applyUMask(umask).toString)
+      Seq(out.getParent, out, out.resolve("s1")).foreach(d =>
+        assert(mode(d) == FsPermission.getDirDefault.applyUMask(umask).toString, d))
+      assert(mode(out.resolve("s1/a.csv")) == "rw-r-----")
+      // and Hadoop's own create gives the same modes
+      val raw = org.apache.hadoop.fs.FileSystem.getLocal(hconf).getRawFileSystem
+      raw.create(new org.apache.hadoop.fs.Path(out.resolve("h/a.csv").toUri), true).close()
+      assert(mode(out.resolve("h/a.csv")) == mode(out.resolve("s1/a.csv")))
+      assert(mode(out.resolve("h")) == mode(out.resolve("s1")))
+    } finally old.foreach {
+      case (k, Some(v)) => hconf.set(k, v)
+      case (k, None) => hconf.unset(k)
+    }
   }
 }
