@@ -12,7 +12,8 @@
 #                  bench_r<N-1>code_samewindow, so the control column
 #                  isolates exactly this round's diff
 # Needs the assembled jar (target/scala-2.13/tingdataetlspark_*.jar) for
-# the bare-JVM probes.
+# the bare-JVM probes, and a host with at least 32 CPUs (exit 2 otherwise:
+# the sentinel band is calibrated for 32).
 #
 #   * SPARK LEGS: each run waits for the pre-flight idle band (a bare-JVM
 #     SentinelProbe inside the probe band), runs, and is accepted iff
@@ -38,6 +39,17 @@
 set -uo pipefail
 if [[ $# -ne 2 ]]; then
   echo "usage: SPARK_GRAFT_SF_DIR=<sf0.1 dir> $0 <round-dir> <control-dir>" >&2; exit 2
+fi
+# The sentinel band (median st <= 140 ms, mt <= 270 ms) was calibrated
+# with `SentinelProbe 32` on a 32-CPU host. On fewer CPUs the 32-thread
+# probe reads out of band however idle the host is: every leg would wait
+# 30 min, run labeled, and be rejected. Refuse before the first leg.
+NPROC="$(env -u OMP_NUM_THREADS nproc)"
+if (( NPROC < 32 )); then
+  echo "this host has $NPROC CPUs (nproc); the sentinel band (median st <= 140 ms," \
+    "mt <= 270 ms) was calibrated with 'SentinelProbe 32' on a 32-CPU host and" \
+    "rejects every run on fewer: run the sitting on a host with >= 32 CPUs" >&2
+  exit 2
 fi
 SF_DIR="${SPARK_GRAFT_SF_DIR:?set SPARK_GRAFT_SF_DIR to the sf0.1 testdata directory}"
 ROUND="$(basename "$1")"; ROUND="${ROUND#bench_r}"

@@ -91,11 +91,10 @@ object FanOutMain {
   * (verify_fanout.py:187–188). Report truncation mirrors the reference:
   * first 10 stores per set problem, ≤5 sample rows per violating file.
   *
-  * Default file-set expectation is content-derived (store, src) pairs —
-  * see [[VerifyOps.fileSetCheckPairs]] for why the reference verifier's
-  * cross-product over-expects. `--strict true` restores the reference's
-  * expectation (every present store dir × every input file) for
-  * byte-for-byte verifier parity.
+  * The expected files are content-derived (store, src) pairs;
+  * [[VerifyOps.verify]] says why the reference verifier's cross product
+  * over-expects. `--strict true` restores it (every present store dir ×
+  * every input file) for byte-for-byte verifier parity.
   */
 object VerifyFanoutMain {
   def main(args: Array[String]): Unit = {
@@ -112,87 +111,34 @@ object VerifyFanoutMain {
         s"--strict expects true or false, got '$v'")
     }
     val spark = GraftSession("graft-verify-fanout", GraftSession.interpreted)
-    import spark.implicits._
-
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // expected (store, src) pairs come from the INPUT CONTENT: a store
-    // absent from a source has no output for it, and key-less inputs are
-    // warn-skipped by the fan-out itself (fan_out_by_storeid.py:28–30),
-    // so both sides use the same HeaderScan read (same --encoding)
-    val srcOf = (p: Path) => FanOut.srcOf(p.getName)
+    // key-less inputs are warn-skipped by the fan-out itself
+    // (fan_out_by_storeid.py:28–30), so both sides use the same HeaderScan
+    // read (same --encoding). Without inputs both expectations are empty,
+    // and the strict one needs no read
     val inputs = HeaderScan.scanDir(spark, in, key, enc)
-    val srcNames = inputs.map(i => srcOf(new Path(i.path)))
-    val expected =
-      if (inputs.isEmpty) Seq.empty[(String, String)].toDF(key, "src")
-      else HeaderScan.readFiles(spark, inputs)
-        .select(trim(col(key)).as(key), FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("src"))
-        .filter(col(key) =!= "")
+    val expected = Option.when(!strict && inputs.nonEmpty)(HeaderScan.readFiles(spark, inputs)
+      .select(trim(col(key)).as(key), FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("src"))
+      .filter(col(key) =!= ""))
+    // output heads are scanned in UTF-8 (FanOutMain's default), then --encoding
+    val r = VerifyOps.verify(spark, out, key, inputs.map(i => FanOut.srcOf(new Path(i.path).getName)),
+      expected, Seq("UTF-8", enc).distinct)
 
-    // pass 1 — file sets (driver metadata listing → anti-join check)
-    val listed = fs.listStatus(new Path(out)).filter(_.isDirectory)
-      .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile).map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(".csv")).toSeq
-    val present = listed.map(p => (p.getParent.getName, srcOf(p))).toDF(key, "src")
-    val presentSrcs = listed.map(srcOf).toSet
-    // --strict: the reference verifier's expectation — every store dir
-    // that exists must hold every input file (verify_fanout.py
-    // check_file_sets: missing = input_files - store_files per dir)
-    val setProblems =
-      if (strict) VerifyOps.fileSetCheck(present, key, srcNames)
-      else VerifyOps.fileSetCheckPairs(present, expected, key)
-    // first 10 stores PER set problem (verify_fanout.py truncation) — a
-    // flood of one kind must not hide the other — each row carrying its
-    // kind's total: one bounded collect
-    val byKind = org.apache.spark.sql.expressions.Window.partitionBy(col("kind"))
-    val shown = setProblems
-      .withColumn("_n", count(lit(1)).over(byKind))
-      .withColumn("_r", row_number().over(byKind.orderBy(col(key), col("src"))))
-      .filter(col("_r") <= 10)
-      .orderBy(col("kind"), col(key), col("src")).collect()
-    val nOf = shown.map(r => r.getString(1) -> r.getLong(3)).toMap
-    val (nMissing, nExtra) = (nOf.getOrElse("missing", 0L), nOf.getOrElse("extra", 0L))
-    println(s"[sets] input files=${inputs.length} missing=$nMissing extra=$nExtra")
-    shown.foreach(r => println(s"  ${r.getString(1)}: store=${r.getString(0)} file=${r.getString(2)}.csv"))
-
-    // pass 2 — content invariant over every listed output file, strays
-    // included (verify_fanout.py's check_store_no_values), in ONE read:
-    // heads scanned in UTF-8 (FanOutMain's default), then --encoding. A
-    // hidden ('.'/'_') name, which no fan-out writes, or a file without
-    // the key column cannot satisfy it (the reference's df[key] would
-    // throw): one violation each
-    val infos = HeaderScan.scanFiles(spark,
-      listed.filterNot(p => HeaderScan.isHidden(p.getName)).map(_.toString),
-      key, Seq("UTF-8", enc).distinct)
-    val keyed = infos.map(_.path).toSet
-    val unreadable = listed.filterNot(p => keyed(p.toString))
-    // ≤5 samples per output file, each carrying its file's violation count
-    val samples =
-      if (infos.isEmpty) Seq.empty
-      else VerifyOps.violationSamples(HeaderScan.readFiles(spark, infos).select(col(key),
-          HeaderScan.parentName(col("_path")).as("_dir_key"),
-          FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("_src")), key, 5)
-        .select(col("_src"), col("_dir_key"), col("_rnk"), col(key), col("_n_file_violations"))
-        .as[(String, String, Int, String, Long)].collect().toSeq
-    val (samplesOf, unreadableOf) = (samples.groupBy(_._1), unreadable.groupBy(srcOf))
-    val strays = (presentSrcs -- srcNames.toSet).toSeq.sorted
-    (srcNames.filter(presentSrcs) ++ strays).foreach { srcName =>
-      val rows = samplesOf.getOrElse(srcName, Nil).sortBy(r => (r._2, r._3))
-      val n = rows.filter(_._3 == 1).map(_._5).sum
-      if (n > 0) {
-        println(s"[content] $srcName.csv: $n violating rows")
-        rows.foreach(r => println(s"  dir=${r._2} key_cell='${r._4}'"))
-      }
-      unreadableOf.getOrElse(srcName, Nil).foreach(p =>
-        println(s"[content] $p: unreadable under key '$key' — counted as violation"))
+    println(s"[sets] input files=${inputs.length} missing=${r.missing.total} extra=${r.extra.total}")
+    Seq("extra" -> r.extra, "missing" -> r.missing).foreach { case (kind, p) =>
+      p.first.foreach { case (store, src) => println(s"  $kind: store=$store file=$src.csv") }
     }
-    val totalViolations = samples.filter(_._3 == 1).map(_._5).sum + unreadable.length
-    println(s"[content] total violations=$totalViolations")
-
-    val failed = nMissing + nExtra + totalViolations > 0
-    println(if (failed) "[FAIL] discrepancies found" else "[OK] fan-out verified")
+    r.content.foreach { c =>
+      val n = c.files.map(_.n).sum
+      if (n > 0) {
+        println(s"[content] ${c.src}.csv: $n violating rows")
+        c.files.foreach(f => f.keyCells.foreach(k => println(s"  dir=${f.dir} key_cell='$k'")))
+      }
+      c.unreadable.foreach(p => println(s"[content] $p: unreadable under key '$key' — counted as violation"))
+    }
+    println(s"[content] total violations=${r.violations}")
+    println(if (r.failed) "[FAIL] discrepancies found" else "[OK] fan-out verified")
     spark.stop()
-    if (failed) sys.exit(1)
+    if (r.failed) sys.exit(1)
   }
 }
 

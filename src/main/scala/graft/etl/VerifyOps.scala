@@ -1,68 +1,105 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Post-hoc fan-out verification as DataFrame ops (reference
-  * verify_fanout.py; SURVEY.md §2.6 V1–V3): the reference's main
-  * correctness idea, kept as a product feature.
+import graft.sources.{FanOut, HeaderScan}
+
+/** Post-hoc fan-out verification (reference verify_fanout.py; SURVEY.md
+  * §2.6 V1–V3): the reference's main correctness idea, kept as a product
+  * feature. [[verify]] is the one verifier: `graft.cli.VerifyFanoutMain`
+  * prints its [[Report]], and the registry's q17 checks it against DuckDB.
   *
   *   - file-set check: per key, `missing = expected − present` and
-  *     `extra = present − expected` (verify_fanout.py:32–48) — anti-joins,
-  *     not driver-side set math;
+  *     `extra = present − expected` (verify_fanout.py:32–48), as set math
+  *     on the driver: the listing is driver-sized already, and there are
+  *     no more expected (key, src) pairs than files a fan-out writes;
   *   - content invariant: every data row's key equals its directory's key
-  *     (verify_fanout.py:52–102) — a filter + count with bounded samples;
+  *     (verify_fanout.py:52–102), the one distributed pass: a filter and a
+  *     per-file window with bounded samples;
   *   - exit contract: any discrepancy ⇒ non-zero (verify_fanout.py:187–188),
-  *     here a summary row the caller can assert on.
-  *
-  * All checks are single-shuffle aggregations; at 100 TB they scale as a
-  * scan + hash agg (the reference re-reads every output file serially).
+  *     here [[Report.failed]].
   */
 object VerifyOps {
 
-  /** Per-key missing/extra source files. `present` must have columns
-    * (key, src); `expectedSrcs` is the full source-file list (small →
-    * broadcast cross join).
-    *
-    * The key universe comes from `present` — the reference's semantics
-    * (verify_fanout.py iterates EXISTING output store dirs, so a store
-    * whose output vanished entirely is equally invisible to it; its
-    * `verify_store_presence` covers that from the source side).
-    */
-  def fileSetCheck(present: DataFrame, keyCol: String, expectedSrcs: Seq[String]): DataFrame = {
-    val spark = present.sparkSession
-    import spark.implicits._
-    fileSetCheckPairs(present, present.select(col(keyCol)).distinct()
-      .crossJoin(broadcast(expectedSrcs.toDF("src"))), keyCol)
+  /** A kind of file-set problem: its (store, src) count, and the first 10
+    * by (store, src) in UTF-8 byte order, Spark's string order. */
+  final case class SetProblems(total: Int, first: Seq[(String, String)])
+  /** An output file's violating rows: how many, and the first 5 key cells. */
+  final case class FileViolations(dir: String, n: Long, keyCells: Seq[String])
+  /** A source's violating files by directory; its hidden and keyless ones by path. */
+  final case class SrcContent(src: String, files: Seq[FileViolations], unreadable: Seq[String])
+
+  /** `content` holds the sources with a problem, `srcs`' first in their
+    * order, then the others by name; `nKeys` counts the store directories. */
+  final case class Report(missing: SetProblems, extra: SetProblems, content: Seq[SrcContent], nKeys: Int) {
+    def violations: Long = content.map(c => c.files.map(_.n).sum + c.unreadable.length).sum
+    def failed: Boolean = missing.total + extra.total + violations > 0
   }
 
-  /** [[fileSetCheck]] against an explicit expected (key, src) pair set —
-    * the per-file membership computed from the INPUT data. This is a
-    * DELIBERATE fix of the reference verifier's false failures:
-    * verify_fanout.py's check_file_sets expects every store dir to hold
-    * every input file (the cross-product), but that is
-    * fan_out_by_storeid.py's WRITE-side layout only when every store
-    * appears in every source — a store absent from a source file
-    * legitimately has no output for it, and the reference verifier
-    * wrongly exits 1 on that layout. Content-derived pairs expect
-    * exactly what the fan-out can produce (FanOutPropertySpec pins the
-    * per-file invariant); `VerifyFanoutMain --strict true` restores the
-    * reference verifier's cross-product expectation byte-for-byte.
+  /** Verify the fan-out layout of `outDir` ([[FanOut.listLayout]]) made
+    * from the sources `srcs`. The expected (store, src) files are
+    * `expected`'s distinct (keyCol, src) rows, or with None every listed
+    * store directory × `srcs`, the reference verifier's expectation
+    * (verify_fanout.py check_file_sets). That cross product over-expects:
+    * a store absent from a source legitimately has no output for it, and
+    * the reference fails such a layout; pairs from the input content
+    * expect exactly what the fan-out writes (FanOutPropertySpec). As in
+    * the reference, a store whose output vanished entirely is invisible
+    * here; verify_store_presence covers it from the source side.
+    *
+    * Each listed file not hidden is head-scanned in `encodings`, in order,
+    * and all are read in one scan. A hidden name, which no fan-out writes,
+    * and a file without the key column are one violation each.
     */
-  def fileSetCheckPairs(present: DataFrame, expected: DataFrame,
-                        keyCol: String): DataFrame = {
-    val exp = expected.select(col(keyCol), col("src")).distinct()
-    val have = present.select(col(keyCol), col("src")).distinct()
-    val missing = exp.join(have, Seq(keyCol, "src"), "left_anti")
-      .select(col(keyCol), lit("missing").as("kind"), col("src"))
-    val extra = have.join(exp, Seq(keyCol, "src"), "left_anti")
-      .select(col(keyCol), lit("extra").as("kind"), col("src"))
-    missing.unionAll(extra)
+  def verify(
+      spark: SparkSession,
+      outDir: String,
+      keyCol: String,
+      srcs: Seq[String],
+      expected: Option[DataFrame],
+      encodings: Seq[String]): Report = {
+    val listed = FanOut.listLayout(spark, outDir)
+    val srcOf = (p: Path) => FanOut.srcOf(p.getName)
+    val present = listed.map(p => (p.getParent.getName, srcOf(p))).toSet
+    val keys = present.map(_._1)
+    val want = expected match {
+      case Some(df) => df.select(col(keyCol), col("src")).distinct().collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      case None => for (k <- keys; s <- srcs) yield (k, s)
+    }
+    def problems(pairs: Set[(String, String)]) = SetProblems(pairs.size, pairs.toSeq
+      .sortBy { case (k, s) => (UTF8String.fromString(k), UTF8String.fromString(s)) }.take(10))
+
+    val infos = HeaderScan.scanFiles(spark,
+      listed.filterNot(p => HeaderScan.isHidden(p.getName)).map(_.toString), keyCol, encodings)
+    val keyed = infos.map(_.path).toSet
+    val unreadableOf = listed.filterNot(p => keyed(p.toString)).groupBy(srcOf)
+    val samples =
+      if (infos.isEmpty) Nil
+      else violationSamples(HeaderScan.readFiles(spark, infos).select(col(keyCol),
+          HeaderScan.parentName(col("_path")).as("_dir_key"),
+          FanOut.srcOf(HeaderScan.fileName(col("_path"))).as("_src")), keyCol, 5)
+        .collect().toSeq
+    val filesOf = samples.groupBy(_.getAs[String]("_src")).map { case (src, rows) =>
+      src -> rows.groupBy(_.getAs[String]("_dir_key")).toSeq.sortBy(_._1).map { case (dir, fs) =>
+        FileViolations(dir, fs.head.getAs[Long]("_n_file_violations"),
+          fs.sortBy(_.getAs[Int]("_rnk")).map(_.getAs[String](keyCol)))
+      }
+    }
+    val listedSrcs = present.map(_._2)
+    val content = (srcs.distinct.filter(listedSrcs) ++ (listedSrcs -- srcs).toSeq.sorted).flatMap { s =>
+      val (fs, un) = (filesOf.getOrElse(s, Nil), unreadableOf.getOrElse(s, Nil).map(_.toString))
+      Option.when(fs.nonEmpty || un.nonEmpty)(SrcContent(s, fs, un))
+    }
+    Report(problems(want -- present), problems(present -- want), content, keys.size)
   }
 
   /** Content-invariant violations: rows whose key cell ≠ directory key.
     * Input needs (keyCol, _dir_key), as [[graft.sources.FanOut.read]] and
-    * `VerifyFanoutMain` produce them: every data row, the prefix dropped
+    * [[verify]] produce them: every data row, the prefix dropped
     * by byte offset. A missing (null) key cell — e.g. a ragged row
     * null-filled by the CSV parser — counts as "" and thus AS a violation
     * (verify_fanout.py:90–93), not a silently dropped row.
@@ -93,24 +130,6 @@ object VerifyOps {
       .withColumn("_rnk", row_number().over(byFile.orderBy(trim(col(keyCol)))).cast("int"))
       .withColumn("_n_file_violations", count(lit(1)).over(byFile))
       .filter(col("_rnk") <= k)
-  }
-
-  /** One-row verification summary (the exit-code contract, as data):
-    * (n_missing, n_extra, n_violations, n_keys).
-    */
-  def summary(
-      present: DataFrame,
-      readBack: DataFrame,
-      keyCol: String,
-      expectedSrcs: Seq[String]): DataFrame = {
-    val sets = fileSetCheck(present, keyCol, expectedSrcs)
-      .groupBy().pivot("kind", Seq("missing", "extra")).count()
-      .select(coalesce(col("missing"), lit(0L)).as("n_missing"),
-        coalesce(col("extra"), lit(0L)).as("n_extra"))
-    val content = contentViolations(readBack, keyCol)
-      .agg(count(lit(1)).as("n_violations"))
-    val keys = readBack.agg(countDistinct(col("_dir_key")).as("n_keys"))
-    sets.crossJoin(content).crossJoin(keys)
   }
 
   /** Presence precheck (verify_store_presence.py:35–63; SURVEY.md §2.6 V4) as ONE grouped

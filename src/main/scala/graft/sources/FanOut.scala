@@ -391,24 +391,33 @@ object FanOut {
     }
   }
 
+  /** Every `outDir/{dir}/{name}` whose name ends in `.csv` in any case,
+    * hidden ones included, in listing order: one driver listing, which
+    * [[read]] and `VerifyOps.verify` share. */
+  def listLayout(spark: SparkSession, outDir: String): Seq[Path] = {
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(outDir)).filter(_.isDirectory)
+      .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile).map(_.getPath)
+      .filter(_.getName.toLowerCase.endsWith(".csv")).toSeq
+  }
+
   /** Read a fan-out layout back: `outDir/{key}/{srcName}.csv` for every
-    * key directory, all-string, with the directory name (the key
-    * verify_fanout.py checks against) in `_dir_key`. Like the reference
-    * verifier (verify_fanout.py:69–79), each file's own prefix and header
-    * are scanned ([[HeaderScan.scanFiles]]) and its data read from the
-    * offset found ([[HeaderScan.readFiles]]), so a data row equal to a
-    * meta line stays a data row. A listed file without the key column
+    * key directory ([[listLayout]]), all-string, with the directory name
+    * (the key verify_fanout.py checks against) in `_dir_key`. Like the
+    * reference verifier (verify_fanout.py:69–79), each file's own prefix
+    * and header are scanned ([[HeaderScan.scanFiles]]) and its data read
+    * from the offset found ([[HeaderScan.readFiles]]), so a data row equal
+    * to a meta line stays a data row. A listed file without the key column
     * fails the read.
     *
-    * Limitation (of any line-oriented CSV read): a quoted cell's embedded
-    * newline is not reassembled; the reference's BI exports hold none.
+    * A quoted cell holding a line break, one cell to Python's `csv`
+    * module, fails the read, naming the file and the line's byte offset
+    * ([[HeaderScan.scan]]); such lines are not joined. [[write]] quotes
+    * such a cell as `csv` does; [[writeFiles]]' own input read fails first.
     */
   def read(spark: SparkSession, outDir: String, srcName: String, keyCol: String): DataFrame = {
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val name = s"$srcName.csv"
-    val files = fs.listStatus(new Path(outDir)).filter(_.isDirectory)
-      .flatMap(d => fs.listStatus(d.getPath).filter(f => f.isFile && f.getPath.getName == name))
-      .map(_.getPath.toString).toSeq
+    val files = listLayout(spark, outDir).filter(_.getName == name).map(_.toString)
     require(files.nonEmpty, s"no $name under $outDir/*/")
     val infos = HeaderScan.scanFiles(spark, files, keyCol)
     val keyless = files.diff(infos.map(_.path))

@@ -64,7 +64,7 @@ object HeaderScan {
     * hold `keyCol`. None when there is no such line or a line does not
     * decode, so the caller moves on to its next charset instead of
     * matching on replacement characters; with `toEof`, every line after
-    * the header must decode too.
+    * the header must decode too. Scanned lines pass [[closedQuotes]].
     */
   private def scanHead(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -82,7 +82,7 @@ object HeaderScan {
       val prefix = ArrayBuffer.empty[String]
       var header: Option[Seq[String]] = None
       while (header.isEmpty && prefix.length < maxScanLines && lines.next(offset, text)) {
-        val line = decoded().toString
+        val line = closedQuotes(decoded().toString, file, offset.get)
         val cells = cellsOf(line)
         if (cells.contains(keyCol)) header = Some(cells) else prefix += line
       }
@@ -95,6 +95,25 @@ object HeaderScan {
     finally lines.close()
   }
 
+  /** `line`, unless it ends inside a quoted cell: then fail, naming `file`
+    * and the line's byte `offset`. Lines are records here, so a quoted
+    * line break (one cell to Python's `csv` module and pandas) would be
+    * cut in two. A quote opens a quoted cell only at a cell's start, and
+    * `""` inside it is a literal quote: `store,name"x,v` is three cells.
+    */
+  private def closedQuotes(line: String, file: String, offset: Long): String = {
+    var state = 0 // at a cell's start, unquoted, quoted, quoted after a quote
+    line.foreach { c =>
+      state = if (state == 2) (if (c == '"') 3 else 2)
+        else if (c == ',') 0
+        else if (c == '"' && state != 1) 2
+        else 1
+    }
+    if (state == 2) throw new java.io.IOException(s"$file: a quoted cell is still open at the " +
+      s"end of the line at byte offset $offset; quoted line breaks are not supported")
+    line
+  }
+
   /** Every data line of `infos`' files from ONE line source, as
     * `row(i, path)(offset, cells)`: `row(i, path)` once per piece of file
     * `i` (its qualified path), then per line its byte offset and its
@@ -103,9 +122,10 @@ object HeaderScan {
     * packed as `spark.read` packs them (`maxPartitionBytes`,
     * `openCostInBytes`). Hadoop's `LineRecordReader` reads each piece
     * (lines end at \n, \r\n or \r); lines before `dataStart` are dropped,
-    * and each file decodes in its own `encoding`. One plan leaf for any
-    * number of headers, sized by its files' bytes as `spark.read` sizes
-    * its scans; hidden names are skipped by [[listCsvFiles]] only.
+    * each file decodes in its own `encoding`, and lines pass
+    * [[closedQuotes]]. One plan leaf for any number of headers, sized by
+    * its files' bytes as `spark.read` sizes its scans; hidden names are
+    * skipped by [[listCsvFiles]] only.
     */
   private[sources] def scan(spark: SparkSession, infos: Seq[HeaderInfo], schema: StructType)(
       row: (Int, UTF8String) => (Long, InternalRow) => InternalRow): DataFrame = {
@@ -133,7 +153,8 @@ object HeaderScan {
       val (offset, text) = (lines.createKey(), lines.createValue())
       Iterator.continually(lines.next(offset, text)).takeWhile(identity)
         .filter(_ => offset.get >= info.dataStart)
-        .map(_ => emit(offset.get, parse(new String(text.getBytes, 0, text.getLength, cs))))
+        .map(_ => emit(offset.get, parse(closedQuotes(new String(text.getBytes, 0, text.getLength, cs),
+          info.path, offset.get))))
     }
     val parts = FilePartition.getFilePartitions(spark, pieces, size)
     PlanBridge.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema,

@@ -181,6 +181,63 @@ class CliContractSpec extends AnyFunSuite {
     assert(log.contains("total violations=1") && log.contains("[FAIL]"), log)
   }
 
+  test("verify lists the first stores of a kind in UTF-8 byte order, as Spark orders strings") {
+    // U+20000 sorts before U+FF21 in UTF-16 code units, after it in bytes
+    val utf8 = Map("LC_ALL" -> "C.UTF-8")
+    val in = Files.createTempDirectory("cli_ord_in")
+    Files.writeString(in.resolve("a.csv"), s"$S,v\n\uD840\uDC00,1\n\uFF21,2\n")
+    Files.writeString(in.resolve("b.csv"), s"$S,v\nz,3\n")
+    val out = Files.createTempDirectory("cli_ord_out").resolve("out")
+    val (fanCode, fanLog) = runMain("graft.cli.FanOutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString), utf8)
+    assert(fanCode == 0, fanLog)
+    val (code, log) = runMain("graft.cli.VerifyFanoutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString, "--strict", "true"), utf8)
+    assert(code == 1, log)
+    val shown = log.linesIterator.filter(_.startsWith("  missing: ")).toSeq
+    assert(shown == Seq("z" -> "a", "\uFF21" -> "b", "\uD840\uDC00" -> "b")
+      .map { case (k, src) => s"  missing: store=$k file=$src.csv" }, log)
+  }
+
+  test("a quoted line break fails fan-out and verify, naming the file and the line's offset") {
+    // Python's csv module reads 3 rows here, the first note holding a
+    // line break; a line reader cut it into `1,a,line one` and a stray
+    // `line two"` store, which then verified clean
+    val in = Files.createTempDirectory("cli_qb_in")
+    Files.writeString(in.resolve("src.csv"),
+      s"$S,name,note\n1,a,\"line one\nline two\"\n2,b,plain\n1,c,\"x\"\n")
+    val offset = s"$S,name,note\n".getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    val out = Files.createTempDirectory("cli_qb_out").resolve("out")
+    val (code, log) = runMain("graft.cli.FanOutMain",
+      Seq("--input-dir", in.toString, "--output-dir", out.toString))
+    assert(code != 0 && log.contains("src.csv") && log.contains(s"byte offset $offset"), log)
+    assert(!Files.exists(out.resolve("line two\"")), log)
+    // the tree that line-cut fan-out wrote: its outputs agree with their
+    // directories, so only the input read can catch it
+    Seq("1" -> "1,a,line one\n1,c,x\n", "2" -> "2,b,plain\n", "line two\"" -> "\"line two\"\"\"\",,\n")
+      .foreach { case (k, rows) =>
+        Files.createDirectories(out.resolve(k))
+        Files.writeString(out.resolve(s"$k/src.csv"), s"$S,name,note\n$rows")
+      }
+    val (vCode, vLog) = verify(in, out)
+    assert(vCode != 0 && !vLog.contains("[OK]"), vLog)
+    assert(vLog.contains("src.csv") && vLog.contains(s"byte offset $offset"), vLog)
+  }
+
+  test("usage errors exit non-zero, naming the flag, before any session starts") {
+    val unknown = Seq("FanOutMain", "VerifyFanoutMain", "AggregateMain", "PresenceMain", "CsvGenMain")
+      .map(m => (m, Seq("--bogus", "x"), "--bogus"))
+    val io = Seq("--input-dir", "in", "--output-dir", "out")
+    (unknown ++ Seq(
+      ("VerifyFanoutMain", io ++ Seq("--strict", "maybe"), "--strict"),
+      ("FanOutMain", Seq("--output-dir", "out"), "--input-dir"))).foreach { case (m, args, flag) =>
+      val (code, log) = runMain(s"graft.cli.$m", args)
+      val what = s"$m ${args.mkString(" ")}: $log"
+      assert(code != 0 && log.contains(flag), what)
+      assert(!log.contains("Running Spark version"), what)
+    }
+  }
+
   test("non-ASCII keys under a non-UTF-8 file-name charset fail the fan-out") {
     // under LC_ALL=C the JVM names files in ASCII: both stores would map
     // to one '??' directory, one file overwriting the other

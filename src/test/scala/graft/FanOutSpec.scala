@@ -22,6 +22,22 @@ class FanOutSpec extends SparkSpec {
   }
 
   private val S = "商店序號"
+  private val utf8 = Seq("UTF-8")
+
+  /** Add `{store}/{src}.csv` under `out` for each pair, each file one
+    * clean row; returns `out`. */
+  private def layout(out: Path, pairs: (String, String)*): String = {
+    pairs.foreach { case (k, src) =>
+      Files.createDirectories(out.resolve(k))
+      Files.writeString(out.resolve(s"$k/$src.csv"), s"$S,v\n$k,1\n")
+    }
+    out.toString
+  }
+
+  /** A verify report's file-set problems as (store, kind, src), sorted. */
+  private def setProblems(r: VerifyOps.Report): Seq[(String, String, String)] =
+    (r.missing.first.map { case (k, src) => (k, "missing", src) } ++
+      r.extra.first.map { case (k, src) => (k, "extra", src) }).sorted
 
   /** The output tree holds only `{key}/{src}.csv` files: no checksum
     * sidecars, no attempt temps, no staging directories.
@@ -70,11 +86,9 @@ class FanOutSpec extends SparkSpec {
     // the prefix is skipped by position, so the meta-equal row is kept
     assert(back.filter(col(S) === "Established At Year").count() == 1)
     assert(VerifyOps.contentViolations(back, S).count() == 0)
-    val sum = VerifyOps.summary(
-      back.select(col(S), lit("srcA").as("src")), back, S, Seq("srcA"))
-      .collect()(0)
-    assert(sum.getLong(0) == 0 && sum.getLong(1) == 0 &&
-      sum.getLong(2) == 0 && sum.getLong(3) == 3)
+    val sum = VerifyOps.verify(spark, out, S, Seq("srcA"), None, utf8)
+    assert(sum.missing.total == 0 && sum.extra.total == 0 &&
+      sum.violations == 0 && sum.nKeys == 3)
   }
 
   test("output-encoding big5 + CRLF: byte-identical to the reference's contract") {
@@ -214,31 +228,70 @@ class FanOutSpec extends SparkSpec {
     assert(VerifyOps.contentViolations(back, S).count() == 0)
   }
 
-  test("fileSetCheckPairs: a store absent from a source is not 'missing'") {
-    val present = Seq(("s1", "a"), ("s2", "a"), ("s1", "b"))
-      .toDF(S, "src")
+  test("verify: a store absent from a source is not 'missing'") {
+    val dir = tmpDir("verify_pairs")
+    val out = layout(dir, ("s1", "a"), ("s2", "a"), ("s1", "b"))
     // expected mirrors the INPUT content: s2 never appeared in source b
     val expected = Seq(("s1", "a"), ("s2", "a"), ("s1", "b"))
       .toDF(S, "src")
-    assert(VerifyOps.fileSetCheckPairs(present, expected, S).count() == 0)
+    assert(setProblems(VerifyOps.verify(spark, out, S, Seq("a", "b"), Some(expected), utf8)).isEmpty)
     // an input pair with no output file IS missing; an output file with
     // no input pair IS extra
     val expected2 = expected.unionAll(Seq(("s2", "b")).toDF(S, "src"))
-    val present2 = present.unionAll(Seq(("s3", "a")).toDF(S, "src"))
-    val problems = VerifyOps.fileSetCheckPairs(present2, expected2, S)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted
-    assert(problems.toSeq == Seq(("s2", "missing", "b"), ("s3", "extra", "a")))
+    layout(dir, ("s3", "a"))
+    val problems = setProblems(VerifyOps.verify(spark, out, S, Seq("a", "b"), Some(expected2), utf8))
+    assert(problems == Seq(("s2", "missing", "b"), ("s3", "extra", "a")))
+  }
+
+  test("verify --strict: a store absent from one source is clean by default, missing under strict") {
+    val out = layout(tmpDir("verify_strict"), ("s1", "a"), ("s2", "a"), ("s1", "b"))
+    val expected = Seq(("s1", "a"), ("s2", "a"), ("s1", "b")).toDF(S, "src")
+    val byContent = VerifyOps.verify(spark, out, S, Seq("a", "b"), Some(expected), utf8)
+    assert(!byContent.failed && setProblems(byContent).isEmpty)
+    val strict = VerifyOps.verify(spark, out, S, Seq("a", "b"), None, utf8)
+    assert(strict.failed && strict.missing.total == 1 && strict.extra.total == 0)
+    assert(setProblems(strict) == Seq(("s2", "missing", "b")))
+  }
+
+  test("verify: 12 missing stores show the first 10 and count 12") {
+    val stores = (1 to 12).map(i => f"s$i%02d")
+    val out = layout(tmpDir("verify_12"), stores.map(_ -> "a"): _*)
+    val r = VerifyOps.verify(spark, out, S, Seq("a", "b"), None, utf8)
+    assert(r.missing.total == 12 && r.extra.total == 0)
+    assert(r.missing.first == stores.take(10).map(_ -> "b"))
+    assert(r.nKeys == 12 && r.violations == 0)
+  }
+
+  test("verify: a file with 7 violating rows gives 5 samples and the count 7") {
+    val dir = tmpDir("verify_7")
+    val out = layout(dir, ("s1", "a"), ("s2", "a"))
+    Files.writeString(dir.resolve("s1/a.csv"),
+      (s"$S,v" +: "s1,0" +: (1 to 7).map(i => s"x$i,$i")).mkString("", "\n", "\n"))
+    val r = VerifyOps.verify(spark, out, S, Seq("a"), None, utf8)
+    assert(r.content == Seq(VerifyOps.SrcContent("a",
+      Seq(VerifyOps.FileViolations("s1", 7, (1 to 5).map(i => s"x$i"))), Nil)))
+    assert(r.violations == 7 && r.failed && setProblems(r).isEmpty)
+  }
+
+  test("verify: a hidden output file and a keyless output file are one violation each") {
+    val dir = tmpDir("verify_unreadable")
+    val out = layout(dir, ("s1", "a"), ("s2", "a"))
+    Files.copy(dir.resolve("s1/a.csv"), dir.resolve("s1/_a.csv"))
+    Files.writeString(dir.resolve("s2/k.csv"), "a,b\n1,2\n")
+    val r = VerifyOps.verify(spark, out, S, Seq("a"), None, utf8)
+    assert(r.violations == 2 && r.content.forall(_.files.isEmpty))
+    assert(r.content.map(c => c.src -> c.unreadable.map(p => p.substring(p.lastIndexOf('/') + 1))) ==
+      Seq("_a" -> Seq("_a.csv"), "k" -> Seq("k.csv")))
+    // each is an extra file too: no input has its source name
+    assert(setProblems(r) == Seq(("s1", "extra", "_a"), ("s2", "extra", "k")))
   }
 
   test("VerifyOps: missing/extra file sets and injected content violation") {
-    val present = Seq(("s1", "a.csv"), ("s1", "b.csv"), ("s2", "a.csv"))
-      .toDF(S, "src")
-    val sets = VerifyOps.fileSetCheck(present, S, Seq("a.csv", "b.csv"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(sets == Set(("s2", "missing", "b.csv")))
-    val extra = VerifyOps.fileSetCheck(present, S, Seq("a.csv"))
-      .collect().map(r => (r.getString(1), r.getString(2))).toSet
-    assert(extra == Set(("extra", "b.csv")))
+    val out = layout(tmpDir("verify_sets"), ("s1", "a"), ("s1", "b"), ("s2", "a"))
+    val sets = VerifyOps.verify(spark, out, S, Seq("a", "b"), None, utf8)
+    assert(setProblems(sets).toSet == Set(("s2", "missing", "b")))
+    val extra = VerifyOps.verify(spark, out, S, Seq("a"), None, utf8)
+    assert(setProblems(extra).map { case (_, kind, src) => (kind, src) }.toSet == Set(("extra", "b")))
 
     val bad = Seq(("s1", "s1"), ("s9", "s1")).toDF(S, "_dir_key")
     assert(VerifyOps.contentViolations(bad, S).count() == 1)

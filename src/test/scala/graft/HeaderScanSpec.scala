@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.cli.Args
 import graft.etl.VerifyOps
-import graft.sources.HeaderScan
+import graft.sources.{FanOut, HeaderScan}
 
 /** Byte-offset header-scan ingestion: dataStart accuracy under BOM and
   * CRLF line endings, and the one line source behind readFiles/readDir
   * (one plan leaf for any number of headers, tasks packed by bytes).
   */
 class HeaderScanSpec extends SparkSpec {
+  import spark.implicits._
 
   private def tmpDir(tag: String) = Files.createTempDirectory(s"hs_$tag")
 
@@ -306,6 +307,33 @@ class HeaderScanSpec extends SparkSpec {
     // dialect, as pandas, undoubles the quote
     val (_, infos) = lineZero("quote.csv", "store,v\ns1,\"q \"\"x\"\"\"\n")
     assert(HeaderScan.readFiles(spark, infos).select("v").head().getString(0) == "q \"x\"")
+  }
+
+  test("a line ending inside a quoted cell fails the data and head scans, naming the file and offset") {
+    // Python's csv module reads `"line one\nline two"` as one cell; a line
+    // reader would cut it into a short row and a stray one
+    val (_, infos) = lineZero("break.csv", "store,note\ns1,\"line one\nline two\"\ns2,plain\n")
+    val data = intercept[org.apache.spark.SparkException](HeaderScan.readFiles(spark, infos).collect())
+    assert(data.getMessage.contains("break.csv") && data.getMessage.contains("byte offset 11"), data.getMessage)
+    // in a prefix row, and in a header
+    Seq("prefix.csv" -> "report,2025\nnote,\"open\nclose\"\nstore,v\ns1,1\n" -> 12,
+      "header.csv" -> "store,\"v\nw\"\ns1,1\n" -> 0).foreach { case ((name, body), offset) =>
+      val f = tmpDir("qhead").resolve(name)
+      Files.writeString(f, body)
+      val head = intercept[org.apache.spark.SparkException](HeaderScan.scanFiles(spark, Seq(f.toString), "store"))
+      assert(head.getMessage.contains(name) && head.getMessage.contains(s"byte offset $offset"), head.getMessage)
+    }
+    // a quote opens a quoted cell only at a cell's start, and a doubled
+    // quote inside one is a literal: quotes are not counted for parity
+    val (_, closed) = lineZero("closed.csv", "store,a,b\ns1,x\"y,\"q \"\"z\"\"\"\n")
+    assert(HeaderScan.readFiles(spark, closed).select("a", "b").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("x\"y", "q \"z\"")))
+    // the writer quotes a cell holding a line break, so reading it back fails too
+    val out = tmpDir("qwrite").toString
+    FanOut.write(Seq(("s1", "a\nb")).toDF("store", "note"), "store", out, "w")
+    assert(Files.readString(java.nio.file.Paths.get(s"$out/s1/w.csv")) == "store,note\ns1,\"a\nb\"\n")
+    val back = intercept[org.apache.spark.SparkException](FanOut.read(spark, out, "w", "store").collect())
+    assert(back.getMessage.contains("w.csv") && back.getMessage.contains("byte offset 11"), back.getMessage)
   }
 
   test("a line 0 without the key column is not a header, even with the key below it") {
